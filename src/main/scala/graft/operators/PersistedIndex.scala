@@ -336,7 +336,7 @@ object PersistedIndex {
   }
 
   /** The APPEND-fold policy (the raw, tombstone-free lineage —
-    * compactBasePostingsIndex/compactBasePosIndex): fold when the
+    * IndexMaintenance.foldAppends/compactBasePosIndex): fold when the
     * in-flight delta strictly exceeds θ of the BASE. The denominators
     * differ on purpose: an expunge fold's benefit scales with the
     * change-set fraction of what it will SERVE ([[shouldCompact]]), while
@@ -385,7 +385,8 @@ object PersistedIndex {
     * create NEW homes), so the row can be reused for the process
     * lifetime — without it every probe paid 1–3 separate driver-side
     * Spark jobs just to learn its watermark/bucket modulus (ir11b read
-    * stats twice per call after r17's posDelta + readBuckets split). The
+    * stats twice per call: once for its append watermark, once for the
+    * bucket modulus). The
     * mtime guard covers spec fixtures that deleteTree + rebuild a home
     * at the same path. */
   private val statsCache =

@@ -359,9 +359,9 @@ object CurationQueries {
     val docsTok = t(s, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("tk"))
     val trainTok = docsTok.filter(col("doc_id") % 5 < 4)
-    // r22: session-shared — the per-call eager checkpoint re-tokenized the
-    // train split on every ta16 evaluation (PlanSplitR22: 0.49 s of the
-    // 1.0 s row was this construction-time job)
+    // session-shared: a per-call eager checkpoint would re-tokenize the
+    // train split on every ta16 evaluation (measured at sf0.1: 0.49 s of
+    // the 1.0 s row was that construction-time job)
     val big = graft.operators.SessionShare.materialized(s, dir, "kn_big")(
       pairs(trainTok).groupBy("w1", "w2").agg(count(lit(1)).as("bcnt")))
     val ctx = big.groupBy("w1").agg(sum("bcnt").as("cv"), count(lit(1)).as("n1fwd"))
@@ -515,10 +515,10 @@ object CurationQueries {
     val docsTok = t(s, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("tk"))
     val trainTok = docsTok.filter(col("doc_id") % 5 < 4)
-    // r22: session-shared — the per-call eager checkpoint re-derived the
-    // trigram count table on every ta19 evaluation (PlanSplitR22: 0.77 s
-    // of the 1.25 s row was this construction-time job, not planning —
-    // the "deep-plan constant" hypothesis VERDICT r21 #6 asked us to test)
+    // session-shared: a per-call eager checkpoint would re-derive the
+    // trigram count table on every ta19 evaluation (measured at sf0.1:
+    // 0.77 s of the 1.25 s row was that construction-time job, not
+    // planning)
     val tri = graft.operators.SessionShare.materialized(s, dir, "kn3_tri")(
       tris(trainTok).groupBy("u", "v", "w").agg(count(lit(1)).as("tcnt")))
     val ctx3 = tri.groupBy("u", "v").agg(sum("tcnt").as("cuv"), count(lit(1)).as("n1fwd3"))
@@ -1921,7 +1921,8 @@ object CurationQueries {
     * registered, oracle-checked face (VERDICT r16 #8): per family, the
     * pre-fold CDC census (e2e8's arithmetic), the compaction verdict
     * (e2e9's policy), then — ONLY where the policy fires — the actual
-    * fold (compactCdc* across the six families), and the post-fold store
+    * fold ([[graft.streaming.IndexMaintenance.compactCdc]] over the
+    * six-family registry), and the post-fold store
     * census read back from the PUBLISHED generation's artifacts. The
     * post columns are oracle-replayable because an expunge fold drains
     * the change set exactly — the published store holds n_serving rows,
@@ -1961,12 +1962,12 @@ object CurationQueries {
     // a sweep race between them.
     //
     // CROSS-ARM INDEPENDENCE REQUIREMENT (ADVICE r21): each concurrent arm
-    // may only touch its OWN staging parent — ivf → ivf_delta_index/,
-    // kg → kg_index/, lsh → lsh_index/, phash → phash_index/,
-    // postings → postings_index/, positions (+ positions_base, sequenced
-    // above) → positions_index/, postings_stream → stream_loop/ (its OWN
-    // root; its applyBatch/resolve never reads postings_index even though
-    // it folds the same family kind). Adding an arm that shares a parent
+    // may only touch its OWN staging parent — its family's `kind`
+    // (ivf_delta_index/, kg_delta_index/, lsh_index/, phash_index/,
+    // postings_base/, positions_index/ with positions_base sequenced
+    // above), and postings_stream → stream_loop/ (its OWN root; its
+    // applyBatch/resolve never reads postings_base even though it folds
+    // the same family kind). Adding an arm that shares a parent
     // with another MUST join that arm's future (the positions chain is
     // the template): publish/sweep race-safety inside one parent is
     // buildIfAbsent's contract, but answer-invariance of a mid-fold
@@ -1974,38 +1975,25 @@ object CurationQueries {
     // two concurrent arms resolve the same parent.
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    // GRAFT_E2E10_POOL is a MEASUREMENT knob (VERDICT r21 #8's serial-vs-
-    // parallel ladder A/B): 1 reproduces the r20 serial queue (arms run one
-    // at a time off a single-thread pool), default 8 is the operative
-    // shape. Answers are identical either way — rows are assembled from
-    // the completed futures in the same deterministic order.
-    val poolSize = sys.env.get("GRAFT_E2E10_POOL").map(_.toInt).getOrElse(8)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
+    import graft.streaming.IndexMaintenance
+    // one thread per submitted arm: the five non-positions families, the
+    // positions chain and the streaming loop
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      IndexMaintenance.Families.size + 1)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
-      def walkFamily(r: org.apache.spark.sql.Row) = {
-        val fam = r.getString(0)
+      val audit = pre.map(r => r.getString(0) -> r).toMap
+      def walkFamily(f: IndexMaintenance.Family) = {
+        val r = audit.getOrElse(f.name, sys.error(s"e2e10: ${f.name} audit row missing"))
         val (split, nb, nt, nf, ns) =
           (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))
         val fire = r.getBoolean(6)
+        // an expunge fold drains the change set: the published store
+        // holds the whole serving set, nothing in flight
         val (post, infl) =
           if (!fire) (nb, nt + nf)
-          else fam match {
-            case "ivf" =>
-              (storeCount(SimilarityQueries.compactCdcIvfIndex(s, dir), "cells"), 0L)
-            case "kg" =>
-              (graft.operators.PersistedIndex.statsRow(s,
-                MatchQueries.compactCdcKgIndex(s, dir)).getAs[Long]("nd"), 0L)
-            case "lsh" =>
-              (storeCount(DedupQueries.compactCdcLshIndex(s, dir), "sigs"), 0L)
-            case "phash" =>
-              (storeCount(MultimodalQueries.compactCdcPhashIndex(s, dir), "rows"), 0L)
-            case "positions" =>
-              (storeCount(TextQueries.compactCdcPosIndex(s, dir), "docs"), 0L)
-            case "postings" =>
-              (storeCount(TextQueries.compactCdcPostingsIndex(s, dir), "doclen"), 0L)
-          }
-        (fam, split, nb, nt, nf, ns, fire, post, infl)
+          else (f.baseCount(s, IndexMaintenance.compactCdc(s, dir, f)), 0L)
+        (f.name, split, nb, nt, nf, ns, fire, post, infl)
       }
       // the raw (append-only) lineage's own fold: the positional family's
       // in-flight append segment folds into a `_c` generation when the
@@ -2031,13 +2019,11 @@ object CurationQueries {
       // the live in-flight change split. Driver reads stay bounded: segment
       // stats rows plus op-filtered counts over change-set-sized feeds.
       def walkStream() = {
-        val im = graft.streaming.IndexMaintenance
+        val im = IndexMaintenance
         val sRoot = PersistedIndex.home("stream_loop", dir,
           PersistedIndex.tableFingerprint(dir, "documents") + "_postings")
         java.nio.file.Files.createDirectories(sRoot)
-        val sDocs = t(s, dir, "documents")
-        val sFeed = graft.streaming.EventStreams.cdcStream(sDocs,
-          graft.operators.CdcRules.feedSplit(sDocs, "doc_id"))
+        val sFeed = im.Postings.feed(s, dir, im.feedSplit(s, dir, im.Postings))
         im.applyBatch(s, dir, sRoot, sFeed.filter(col("doc_id") % 2 === 0L), 0L, im.Postings)
         im.applyBatch(s, dir, sRoot, sFeed.filter(col("doc_id") % 2 === 1L), 1L, im.Postings)
         val (sBase, sFloor, sSegs) = im.resolve(s, dir, sRoot, im.Postings)
@@ -2053,11 +2039,10 @@ object CurationQueries {
         ("postings_stream", sFloor, sStore, sNt, sNf, sStore - sNt + sNf,
           sFloor >= 0L, sStore, sNt + sNf)
       }
-      val posRow = pre.find(_.getString(0) == "positions")
-        .getOrElse(sys.error("e2e10: positions audit row missing"))
-      val famFutures = pre.toSeq.filterNot(_.getString(0) == "positions")
-        .map(r => Future(walkFamily(r)))
-      val posChain = Future { val fam = walkFamily(posRow); (fam, walkPosBase()) }
+      val positions = TextQueries.PositionsMaintenance
+      val famFutures = IndexMaintenance.Families.filterNot(_ == positions)
+        .map(f => Future(walkFamily(f)))
+      val posChain = Future { val fam = walkFamily(positions); (fam, walkPosBase()) }
       val streamF = Future(walkStream())
       val others = Await.result(Future.sequence(famFutures), Duration.Inf)
       val (posFam, posBaseRow) = Await.result(posChain, Duration.Inf)

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.{Dedup, SessionShare}
+import graft.streaming.IndexMaintenance
+import graft.streaming.IndexMaintenance.{Appends, Feed, SizedFeed, Tombstones}
 import Q._
 
 /** Deduplication suite — oracle-checked faces of the [[graft.operators.Dedup]]
@@ -1091,49 +1093,16 @@ object DedupQueries {
       .orderBy("doc_a", "doc_b")
   }
 
-  def dd20TombstoneNeardup(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val cdc = PersistedIndex.home("lsh_index", dir, lshFp(dir) + "_cdc" + wStar)
-    if (PersistedIndex.isBuilt(cdc))
-      return lshServe(s, cdc, CdcRules.emptyIds(s, "doc_id"),
-        CdcRules.emptyRows(s, "doc_id", "text", org.apache.spark.sql.types.StringType))
-    val home = ensureLshIndex(s, dir)
-    val snap = PersistedIndex.readSplit(s, home)
-    lshServe(s, home,
-      CdcRules.tombstoneIds(docs, "doc_id", wStar),
-      CdcRules.freshRows(docs, "doc_id", "text", wStar, snap, CdcRules.reversedTokens))
-  }
+  def dd20TombstoneNeardup(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, LshMaintenance, Tombstones)
 
-  /** EXPUNGE-DELETES COMPACTION for the LSH family (the postings recipe,
-    * [[graft.queries.TextQueries.compactCdcPostingsIndex]]): dead and
-    * updated-old signatures AND every persisted pair touching them
-    * physically leave, the re-shingled updates + appends enter with their
-    * probe pairs, published under `<fp>_cdc<feedSplit>` (invisible to
-    * currentHome — dd18's raw-corpus lineage keeps its base). */
-  private[queries] def compactCdcLshIndex(s: SparkSession, dir: String): java.nio.file.Path = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val target = PersistedIndex.home("lsh_index", dir, lshFp(dir) + "_cdc" + wStar)
-    if (PersistedIndex.isBuilt(target)) return target
-    val cur = ensureLshIndex(s, dir)
-    val snap = PersistedIndex.readSplit(s, cur)
-    val hi = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
-      val dead = CdcRules.tombstoneIds(docs, "doc_id", wStar)
-      val fresh = CdcRules.freshRows(docs, "doc_id", "text", wStar, snap,
-        CdcRules.reversedTokens)
-      foldLshArtifacts(s, tmp, cur, dead, fresh, math.max(snap, hi))
-    }
-    target
-  }
-
-  /** The LSH family's expunge-deletes artifact rewrite with the change
-    * set passed in — shared by [[compactCdcLshIndex]] (rule-derived
-    * frames) and the streaming maintenance loop's fold
-    * ([[graft.streaming.IndexMaintenance]]). */
+  /** The LSH family's artifact rewrite with the change set passed in:
+    * dead and updated-old signatures AND every persisted pair touching
+    * them physically leave, the re-shingled fresh rows enter with their
+    * probe pairs. Base signatures and pairs are copied from parquet —
+    * an append fold just moves the delta-touching pairs from the
+    * probe-time term into the persisted term, so serving is
+    * answer-invariant across it (dd18's union contract). */
   private[graft] def foldLshArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, dead: DataFrame, fresh: DataFrame, split: Long): Unit = {
     import graft.operators.PersistedIndex
@@ -1158,13 +1127,10 @@ object DedupQueries {
   /** The LSH family's hooks into the streaming maintenance loop: probe =
     * the dd22 feed face's candidate-pair query, fold =
     * [[foldLshArtifacts]]. */
-  private[graft] object LshMaintenance
-      extends graft.streaming.IndexMaintenance.Family {
+  private[graft] object LshMaintenance extends IndexMaintenance.DocFamily {
     val name = "lsh"
-    val idCol = "doc_id"
-    val payloadCol = "text"
-    val payloadType: org.apache.spark.sql.types.DataType =
-      org.apache.spark.sql.types.StringType
+    val kind = "lsh_index"
+    def fingerprint(dir: String): String = lshFp(dir)
     def ensureBase(s: SparkSession, dir: String): java.nio.file.Path =
       ensureLshIndex(s, dir)
     def baseCount(s: SparkSession, base: java.nio.file.Path): Long =
@@ -1182,7 +1148,7 @@ object DedupQueries {
     * (empty tombstone/fresh frames; shares dd20's oracle — the identity
     * IS the expunge contract). */
   def dd21ExpungedNeardup(s: SparkSession, dir: String): DataFrame = {
-    compactCdcLshIndex(s, dir)
+    IndexMaintenance.compactCdc(s, dir, LshMaintenance)
     dd20TombstoneNeardup(s, dir)
   }
 
@@ -1194,16 +1160,8 @@ object DedupQueries {
     * payload convention is reversedTokens, exactly dd20's update
     * transform, so the answer is bit-equal to dd20 and the oracle is
     * shared. */
-  def dd22FeedNeardup(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val home = ensureLshIndex(s, dir)
-    val (dead, fresh) = CdcRules.feedFrames(
-      graft.streaming.EventStreams.cdcStream(docs, wStar), "doc_id", "text",
-      PersistedIndex.readSplit(s, home))
-    lshServe(s, home, dead, fresh)
-  }
+  def dd22FeedNeardup(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, LshMaintenance, Feed)
 
   /** dd23_sized_neardup — dd22 at a CRAWL-SIZED batch (VERDICT r16 #2):
     * the feed generator takes the [[graft.operators.CdcRules.sizedFeed]]
@@ -1213,17 +1171,8 @@ object DedupQueries {
     * sf1→sf10 ladder where dd18's fixed-fraction delta reads
     * linear-in-corpus (4.52× on the r16 ladder). At the correctness SFs
     * the window covers the whole corpus and dd23 ≡ dd20/dd22. */
-  def dd23SizedNeardup(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val home = ensureLshIndex(s, dir)
-    val (dead, fresh) = CdcRules.feedFrames(
-      CdcRules.sizedFeed(
-        graft.streaming.EventStreams.cdcStream(docs, wStar), "doc_id", wStar),
-      "doc_id", "text", PersistedIndex.readSplit(s, home))
-    lshServe(s, home, dead, fresh)
-  }
+  def dd23SizedNeardup(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, LshMaintenance, SizedFeed)
 
   /** dd20's replay over the WINDOWED post-change corpus (cdcStream's 'u'
     * payload is reversedTokens, so the rule-windowed corpus CTE equals
@@ -1249,43 +1198,6 @@ object DedupQueries {
        |FROM band a JOIN band b ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
        |GROUP BY 1, 2 ORDER BY doc_a, doc_b""".stripMargin
 
-  /** Compaction for the LSH family — [[TextQueries.compactBasePostingsIndex]]'s
-    * recipe applied to dd18's artifacts: fold the delta's signatures into
-    * the persisted store and the delta-touching candidate pairs into the
-    * already-adjudicated pair set, publish as a new generation
-    * (`<fp>_c<watermark>`, atomic rename), sweep the superseded one. Only
-    * the delta is shingled/minhashed; base signatures and pairs are COPIED
-    * from parquet. Answer-invariant by dd18's own union contract —
-    * compaction just moves the delta-touching pairs from the probe-time
-    * term into the persisted term — so probe results are byte-identical
-    * while the per-crawl delta work drops to zero until new rows arrive. */
-  private[queries] def compactLshIndex(s: SparkSession, dir: String): java.nio.file.Path = {
-    import graft.operators.PersistedIndex
-    val cur = ensureLshIndex(s, dir)
-    val w0 = PersistedIndex.readSplit(s, cur)
-    val docs = t(s, dir, "documents")
-    val hi = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    if (hi <= w0) return cur // nothing in flight — compaction is a no-op
-    // the SHARED fingerprint helper, not a re-spelled literal (r21: the
-    // inline "v1_" copy silently diverged when the layout version bumped)
-    val target = PersistedIndex.home("lsh_index", dir, lshFp(dir) + "_c" + hi)
-    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
-      val baseSigs = s.read.parquet(cur.resolve("sigs").toString)
-      val deltaSigs = Dedup.minhashSignatures(
-        docs.filter(col("doc_id") > w0), "doc_id", "text")
-      baseSigs.unionByName(deltaSigs)
-        .write.mode("overwrite").parquet(tmp.resolve("sigs").toString)
-      s.read.parquet(cur.resolve("pairs").toString)
-        .unionByName(Dedup.incrementalCandidatePairs(baseSigs, deltaSigs, "doc_id"))
-        .write.mode("overwrite").parquet(tmp.resolve("pairs").toString)
-      writeLshBands(s, tmp)
-      PersistedIndex.splitStats(s, hi)
-        .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
-    }
-    PersistedIndex.sweepSuperseded(target, dir)
-    target
-  }
-
   /** dd18_delta_neardup — the ingest-time NEAR-DUP GATE served from the
     * persisted LSH index: base-base candidate pairs are read back from the
     * snapshot artifact (already adjudicated at the last crawl — never
@@ -1300,12 +1212,8 @@ object DedupQueries {
     * pairs between the two terms of the union, never change them). At
     * 100 TB the per-crawl cost is O(|delta|·collisions) + an artifact
     * read, vs dd3's O(|corpus|·collisions) re-pair. */
-  def dd18DeltaNeardup(s: SparkSession, dir: String): DataFrame = {
-    val home = ensureLshIndex(s, dir)
-    val split = graft.operators.PersistedIndex.readSplit(s, home)
-    lshServe(s, home, graft.operators.CdcRules.emptyIds(s, "doc_id"),
-      t(s, dir, "documents").filter(col("doc_id") > split).select("doc_id", "text"))
-  }
+  def dd18DeltaNeardup(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, LshMaintenance, Appends)
 
   // segmentation is invisible to the answer: dd18 ≡ dd3
   val dd18DeltaNeardupSql: String = dd3LshPairsSql

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.operators.FastMatch
+import graft.streaming.IndexMaintenance
+import graft.streaming.IndexMaintenance.{Appends, Feed, SizedFeed, Tombstones}
 import Q._
 
 /** FM1 — FastMatch queries (SURVEY §2.8): multi-pattern gazetteer matching
@@ -712,53 +714,6 @@ object MatchQueries {
     }
   }
 
-  /** Compaction for the KG family — fold the delta's sufficient statistics
-    * (per-pair co-doc counts, per-entity doc counts, document census) into
-    * the persisted base by the same exact Long sums kg6's probe merges
-    * with, publish as a new generation, sweep the superseded one. Only
-    * the delta is entity-matched; the base statistics are copied from
-    * parquet. Answer-invariant by kg6's own additive-counts contract. */
-  private[queries] def compactKgDeltaIndex(s: SparkSession, dir: String): java.nio.file.Path = {
-    import graft.operators.PersistedIndex
-    val cur = ensureKgDeltaIndex(s, dir)
-    val st0 = graft.operators.PersistedIndex.statsRow(s, cur)
-    val (ndB, w0) = (st0.getAs[Long]("nd"), st0.getAs[Long]("split_id"))
-    val docs = t(s, dir, "documents")
-    val hi = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    if (hi <= w0) return cur // nothing in flight — compaction is a no-op
-    val target = PersistedIndex.home("kg_delta_index", dir, kgFp(dir) + "_c" + hi)
-    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
-      val fm = FastMatch.matcher(gazetteer)
-      val edD = docs.filter(col("doc_id") > w0)
-        .select(col("doc_id"), explode(fm(col("text"))).as("m"))
-        .select(col("doc_id"), col("m.matched").as("entity")).distinct()
-        .localCheckpoint(true)
-      s.read.parquet(cur.resolve("ed").toString).unionByName(edD)
-        .write.mode("overwrite").parquet(tmp.resolve("ed").toString)
-      val coD = edD.as("a").join(edD.as("b"), Seq("doc_id"))
-        .filter(col("a.entity") < col("b.entity"))
-        .groupBy(col("a.entity").as("e1"), col("b.entity").as("e2"))
-        .agg(count(lit(1)).as("n_co_d"))
-      s.read.parquet(cur.resolve("co").toString)
-        .join(coD, Seq("e1", "e2"), "full_outer")
-        .select(col("e1"), col("e2"),
-          (coalesce(col("n_co"), lit(0L)) + coalesce(col("n_co_d"), lit(0L))).as("n_co"))
-        .write.mode("overwrite").parquet(tmp.resolve("co").toString)
-      val entD = edD.groupBy("entity").agg(count(lit(1)).as("n_docs_d"))
-      s.read.parquet(cur.resolve("ent").toString)
-        .join(entD, Seq("entity"), "full_outer")
-        .select(col("entity"),
-          (coalesce(col("n_docs"), lit(0L)) + coalesce(col("n_docs_d"), lit(0L))).as("n_docs"))
-        .write.mode("overwrite").parquet(tmp.resolve("ent").toString)
-      docs.filter(col("doc_id") > w0)
-        .agg((count(lit(1)) + lit(ndB)).as("nd"))
-        .withColumn("split_id", lit(hi))
-        .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
-    }
-    PersistedIndex.sweepSuperseded(target, dir)
-    target
-  }
-
   /** kg6_delta_graph — INCREMENTAL graph maintenance: kg1 computed from the
     * persisted base sufficient statistics plus a delta-only match scan.
     * The probe never re-matches the base corpus — the only documents access
@@ -770,12 +725,8 @@ object MatchQueries {
     * background compaction (folding the delta's counts into the next
     * snapshot) can never change results. This closes the incremental face
     * for the third persisted family: postings (ir10), LSH (dd18), KG here. */
-  def kg6DeltaGraph(s: SparkSession, dir: String): DataFrame = {
-    val home = ensureKgDeltaIndex(s, dir)
-    val split = graft.operators.PersistedIndex.readSplit(s, home)
-    kgServe(s, home, graft.operators.CdcRules.emptyIds(s, "doc_id"),
-      t(s, dir, "documents").filter(col("doc_id") > split).select("doc_id", "text"))
-  }
+  def kg6DeltaGraph(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, KgMaintenance, Appends)
 
   /** The shared KG SERVING KERNEL over the persisted sufficient-statistic
     * snapshot: the `dead` id frame subtracts its entity contributions via
@@ -848,51 +799,17 @@ object MatchQueries {
     * answer is bit-equal to kg1 over the post-change corpus (the oracle);
     * pairs whose merged count reaches 0 drop out exactly as kg1 never
     * would have emitted them. */
-  def kg7TombstoneGraph(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val cdc = PersistedIndex.home("kg_delta_index", dir, kgFp(dir) + "_cdc" + wStar)
-    if (PersistedIndex.isBuilt(cdc))
-      return kgServe(s, cdc, CdcRules.emptyIds(s, "doc_id"),
-        CdcRules.emptyRows(s, "doc_id", "text", org.apache.spark.sql.types.StringType))
-    val home = ensureKgDeltaIndex(s, dir)
-    val snap = PersistedIndex.readSplit(s, home)
-    kgServe(s, home,
-      CdcRules.tombstoneIds(docs, "doc_id", wStar),
-      CdcRules.freshRows(docs, "doc_id", "text", wStar, snap, CdcRules.reversedTokens))
-  }
+  def kg7TombstoneGraph(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, KgMaintenance, Tombstones)
 
-  /** EXPUNGE-DELETES COMPACTION for the KG family: dead and updated-old
-    * docs' rows physically leave the per-doc `ed` artifact and their
-    * count contributions are subtracted out of `co`/`ent`/`nd` by the
-    * same exact Long sums the serve uses (pairs/entities whose merged
-    * count reaches 0 drop out of the artifacts entirely); re-matched
-    * updates + appends fold in. Published under `<fp>_cdc<feedSplit>`,
-    * invisible to currentHome — kg6's raw-corpus lineage keeps its base. */
-  private[queries] def compactCdcKgIndex(s: SparkSession, dir: String): java.nio.file.Path = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val target = PersistedIndex.home("kg_delta_index", dir, kgFp(dir) + "_cdc" + wStar)
-    if (PersistedIndex.isBuilt(target)) return target
-    val cur = ensureKgDeltaIndex(s, dir)
-    val st = graft.operators.PersistedIndex.statsRow(s, cur)
-    val (ndB, snap) = (st.getAs[Long]("nd"), st.getAs[Long]("split_id"))
-    val hi = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
-      val dead = CdcRules.tombstoneIds(docs, "doc_id", wStar)
-      val fresh = CdcRules.freshRows(docs, "doc_id", "text", wStar, snap,
-        CdcRules.reversedTokens)
-      foldKgArtifacts(s, tmp, cur, dead, fresh, math.max(snap, hi))
-    }
-    target
-  }
-
-  /** The KG family's expunge-deletes artifact rewrite with the change set
-    * passed in — shared by [[compactCdcKgIndex]] (rule-derived frames)
-    * and the streaming maintenance loop's fold
-    * ([[graft.streaming.IndexMaintenance]]). Like [[kgServe]]'s census
+  /** The KG family's artifact rewrite with the change set passed in:
+    * dead docs' rows leave the per-doc `ed` artifact and their count
+    * contributions are subtracted out of `co`/`ent`/`nd` by the same
+    * exact Long sums the serve uses (pairs/entities whose merged count
+    * reaches 0 drop out entirely); re-matched fresh docs fold in. Only
+    * the fresh rows meet the matcher — base statistics are copied from
+    * parquet, so an append fold is answer-invariant by kg6's
+    * additive-counts contract. Like [[kgServe]]'s census
     * update, the `nd` subtraction assumes dead ids were in the served
     * corpus — the feed op contract ('a' = never-served doc) guarantees
     * it. */
@@ -939,13 +856,10 @@ object MatchQueries {
 
   /** The KG family's hooks into the streaming maintenance loop: probe =
     * the kg9 feed face's NPMI query, fold = [[foldKgArtifacts]]. */
-  private[graft] object KgMaintenance
-      extends graft.streaming.IndexMaintenance.Family {
+  private[graft] object KgMaintenance extends IndexMaintenance.DocFamily {
     val name = "kg"
-    val idCol = "doc_id"
-    val payloadCol = "text"
-    val payloadType: org.apache.spark.sql.types.DataType =
-      org.apache.spark.sql.types.StringType
+    val kind = "kg_delta_index"
+    def fingerprint(dir: String): String = kgFp(dir)
     def ensureBase(s: SparkSession, dir: String): java.nio.file.Path =
       ensureKgDeltaIndex(s, dir)
     def baseCount(s: SparkSession, base: java.nio.file.Path): Long =
@@ -962,7 +876,7 @@ object MatchQueries {
     * set, then serve NPMI straight from the expunged statistics (empty
     * tombstone/fresh frames; shares kg7's oracle). */
   def kg8ExpungedGraph(s: SparkSession, dir: String): DataFrame = {
-    compactCdcKgIndex(s, dir)
+    IndexMaintenance.compactCdc(s, dir, KgMaintenance)
     kg7TombstoneGraph(s, dir)
   }
 
@@ -972,16 +886,8 @@ object MatchQueries {
     * (doc_id, op, payload) table; the feed's reversedTokens 'u' payload
     * is exactly kg7's update transform, so kg9 ≡ kg7 and the oracle is
     * shared. */
-  def kg9FeedGraph(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val home = ensureKgDeltaIndex(s, dir)
-    val (dead, fresh) = CdcRules.feedFrames(
-      graft.streaming.EventStreams.cdcStream(docs, wStar), "doc_id", "text",
-      PersistedIndex.readSplit(s, home))
-    kgServe(s, home, dead, fresh)
-  }
+  def kg9FeedGraph(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, KgMaintenance, Feed)
 
   /** kg1's SQL replayed over a POST-CHANGE corpus CTE (the ir14/dd20
     * oracle convention) — shared by the kg7/kg8/kg9 family and the sized
@@ -1016,17 +922,8 @@ object MatchQueries {
     * Aho-Corasick re-match and the count subtraction/addition legs read
     * O(window) fresh rows no matter the corpus size. At the correctness
     * SFs the window covers the whole corpus and kg10 ≡ kg7/kg9. */
-  def kg10SizedGraph(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val home = ensureKgDeltaIndex(s, dir)
-    val (dead, fresh) = CdcRules.feedFrames(
-      CdcRules.sizedFeed(
-        graft.streaming.EventStreams.cdcStream(docs, wStar), "doc_id", wStar),
-      "doc_id", "text", PersistedIndex.readSplit(s, home))
-    kgServe(s, home, dead, fresh)
-  }
+  def kg10SizedGraph(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, KgMaintenance, SizedFeed)
 
   val kg10SizedGraphSql: String = kgGraphSqlOver(
     graft.operators.CdcRules.sqlSizedCorpusCtes("kg10corpus",

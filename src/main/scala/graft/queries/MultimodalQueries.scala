@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.Multimodal
+import graft.streaming.IndexMaintenance
+import graft.streaming.IndexMaintenance.{Appends, Feed, SizedFeed, Tombstones}
 import Q._
 
 /** Multimodal-column queries — binary payloads + typed metadata derived
@@ -771,52 +773,16 @@ object MultimodalQueries {
       .select("id_a", "id_b", "sa", "sb")
   }
 
-  def mm8TombstonePhash(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val cdc = PersistedIndex.home("phash_index", dir, phashFp(dir) + "_cdc" + wStar)
-    if (PersistedIndex.isBuilt(cdc))
-      return phashServe(s, cdc, CdcRules.emptyIds(s, "asset_id"),
-        CdcRules.emptyRows(s, "doc_id", "text", org.apache.spark.sql.types.StringType))
-    val home = ensurePhashIndex(s, dir)
-    val snap = PersistedIndex.readSplit(s, home)
-    phashServe(s, home,
-      CdcRules.tombstoneIds(docs, "doc_id", wStar)
-        .select(col("doc_id").cast(LongType).as("asset_id")),
-      CdcRules.freshRows(docs, "doc_id", "text", wStar, snap, CdcRules.reversedTokens))
-  }
+  def mm8TombstonePhash(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, PhashMaintenance, Tombstones)
 
-  /** EXPUNGE-DELETES COMPACTION for the pHash family: dead and
-    * updated-old signatures physically leave, their pair-contributions
-    * are subtracted out of the persisted counts (re-derived from
-    * persisted sigs — no payload re-hash), re-hashed updates + appends
-    * fold in with their pair classes. Published under
-    * `<fp>_cdc<feedSplit>`, invisible to currentHome — mm7's raw-corpus
-    * lineage keeps its base. */
-  private[queries] def compactCdcPhashIndex(s: SparkSession, dir: String): java.nio.file.Path = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val target = PersistedIndex.home("phash_index", dir, phashFp(dir) + "_cdc" + wStar)
-    if (PersistedIndex.isBuilt(target)) return target
-    val cur = ensurePhashIndex(s, dir)
-    val snap = PersistedIndex.readSplit(s, cur)
-    val hi = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
-      val deadIds = CdcRules.tombstoneIds(docs, "doc_id", wStar)
-        .select(col("doc_id").cast(LongType).as("asset_id"))
-      val fresh = CdcRules.freshRows(docs, "doc_id", "text", wStar, snap,
-        CdcRules.reversedTokens)
-      foldPhashArtifacts(s, tmp, cur, deadIds, fresh, math.max(snap, hi))
-    }
-    target
-  }
-
-  /** The pHash family's expunge-deletes artifact rewrite with the change
-    * set passed in (`deadIds` already as asset_id) — shared by
-    * [[compactCdcPhashIndex]] (rule-derived frames) and the streaming
-    * maintenance loop's fold ([[graft.streaming.IndexMaintenance]]). */
+  /** The pHash family's artifact rewrite with the change set passed in
+    * (`deadIds` already as asset_id): dead signatures leave, their
+    * pair-contributions are subtracted out of the persisted counts
+    * (re-derived from persisted sigs — no payload re-hash), fresh rows
+    * fold in with their pair classes. With no dead set the add classes
+    * are exactly mm7's three disjoint pair classes, so an append fold is
+    * answer-invariant. */
   private[graft] def foldPhashArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, deadIds: DataFrame, fresh: DataFrame, split: Long): Unit = {
     import graft.operators.PersistedIndex
@@ -830,13 +796,10 @@ object MultimodalQueries {
     * = the mm10 feed face's per-asset near-dup counts, fold =
     * [[foldPhashArtifacts]]. The feed id is doc_id; the index id is
     * asset_id (same value, the mm8 mapping). */
-  private[graft] object PhashMaintenance
-      extends graft.streaming.IndexMaintenance.Family {
+  private[graft] object PhashMaintenance extends IndexMaintenance.DocFamily {
     val name = "phash"
-    val idCol = "doc_id"
-    val payloadCol = "text"
-    val payloadType: org.apache.spark.sql.types.DataType =
-      org.apache.spark.sql.types.StringType
+    val kind = "phash_index"
+    def fingerprint(dir: String): String = phashFp(dir)
     private def asAsset(dead: DataFrame): DataFrame =
       dead.select(col("doc_id").cast(LongType).as("asset_id"))
     def ensureBase(s: SparkSession, dir: String): java.nio.file.Path =
@@ -855,7 +818,7 @@ object MultimodalQueries {
     * change set, then serve counts straight from the expunged artifacts
     * (empty tombstone/fresh frames; shares mm8's oracle). */
   def mm9ExpungedPhash(s: SparkSession, dir: String): DataFrame = {
-    compactCdcPhashIndex(s, dir)
+    IndexMaintenance.compactCdc(s, dir, PhashMaintenance)
     mm8TombstonePhash(s, dir)
   }
 
@@ -864,17 +827,8 @@ object MultimodalQueries {
     * [[graft.operators.CdcRules.feedFrames]] split of an explicit
     * (doc_id, op, payload) table; reversedTokens 'u' payloads are exactly
     * mm8's update transform, so mm10 ≡ mm8 and the oracle is shared. */
-  def mm10FeedPhash(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val home = ensurePhashIndex(s, dir)
-    val (dead, fresh) = CdcRules.feedFrames(
-      graft.streaming.EventStreams.cdcStream(docs, wStar), "doc_id", "text",
-      PersistedIndex.readSplit(s, home))
-    phashServe(s, home,
-      dead.select(col("doc_id").cast(LongType).as("asset_id")), fresh)
-  }
+  def mm10FeedPhash(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, PhashMaintenance, Feed)
 
   /** mm11_sized_phash — mm10 at a CRAWL-SIZED batch (VERDICT r16 #2): the
     * feed generator takes the [[graft.operators.CdcRules.sizedFeed]]
@@ -882,18 +836,8 @@ object MultimodalQueries {
     * for mm7's fixed-fraction delta at sf10 — runs over O(window) fresh
     * rows no matter the corpus size. At the correctness SFs the window
     * covers the whole corpus and mm11 ≡ mm8/mm10. */
-  def mm11SizedPhash(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val home = ensurePhashIndex(s, dir)
-    val (dead, fresh) = CdcRules.feedFrames(
-      CdcRules.sizedFeed(
-        graft.streaming.EventStreams.cdcStream(docs, wStar), "doc_id", wStar),
-      "doc_id", "text", PersistedIndex.readSplit(s, home))
-    phashServe(s, home,
-      dead.select(col("doc_id").cast(LongType).as("asset_id")), fresh)
-  }
+  def mm11SizedPhash(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, PhashMaintenance, SizedFeed)
 
   /** mm8's replay over the WINDOWED post-change corpus. */
   val mm11SizedPhashSql: String = {
@@ -914,38 +858,8 @@ object MultimodalQueries {
       .replace("FROM documents WHERE", "FROM mm8corpus WHERE")
   }
 
-  /** Compaction for the pHash family — fold the delta assets' signatures
-    * into the persisted store and the delta-touching pair counts (mm7's
-    * three disjoint classes) into the adjudicated counts, publish as a new
-    * generation, sweep the superseded one. Only the delta is DCT-hashed;
-    * base signatures and counts are copied from parquet. Answer-invariant
-    * by mm7's own additive pair-class contract. */
-  private[queries] def compactPhashIndex(s: SparkSession, dir: String): java.nio.file.Path = {
-    import graft.operators.PersistedIndex
-    val cur = ensurePhashIndex(s, dir)
-    val w0 = PersistedIndex.readSplit(s, cur)
-    val docs = t(s, dir, "documents")
-    val hi = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    if (hi <= w0) return cur // nothing in flight — compaction is a no-op
-    val target = PersistedIndex.home("phash_index", dir, phashFp(dir) + "_c" + hi)
-    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
-      // append-only fold: no dead set, the in-flight segment is the fresh
-      // side — [[phashDelta]]'s add classes are exactly mm7's three
-      // disjoint pair classes
-      foldPhashArtifacts(s, tmp, cur,
-        graft.operators.CdcRules.emptyIds(s, "asset_id"),
-        docs.filter(col("doc_id") > w0).select("doc_id", "text"), hi)
-    }
-    PersistedIndex.sweepSuperseded(target, dir)
-    target
-  }
-
-  def mm7PhashDelta(s: SparkSession, dir: String): DataFrame = {
-    val home = ensurePhashIndex(s, dir)
-    val split = graft.operators.PersistedIndex.readSplit(s, home)
-    phashServe(s, home, graft.operators.CdcRules.emptyIds(s, "asset_id"),
-      t(s, dir, "documents").filter(col("doc_id") > split).select("doc_id", "text"))
-  }
+  def mm7PhashDelta(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, PhashMaintenance, Appends)
 
   val queries: Map[String, QueryFn] = Map(
     "mm7_phash_delta" -> (mm7PhashDelta _),

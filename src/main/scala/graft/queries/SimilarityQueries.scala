@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.streaming.IndexMaintenance
+import graft.streaming.IndexMaintenance.{Appends, Feed, SizedFeed, Tombstones}
 import Q._
 
 /** Similarity search over the `embeddings` table (64-dim float vectors) —
@@ -337,42 +339,6 @@ object SimilarityQueries {
     CdcRules.vecFeed(vecsWin, "vec_id", "embedding", wStar)
   }
 
-  /** Compaction for the IVF family — fold the in-flight delta vectors into
-    * the persisted cell table under the FROZEN centroids (the FAISS
-    * add-after-train contract ss7/ss9 already freeze against): the delta
-    * is assigned with the SAME centroid index the probe used in-plan, so
-    * the move from probe-time assignment to persisted rows is bit-exact
-    * and ss9's answers are byte-identical before/after; the centroids
-    * artifact is copied, never retrained. Published as a new generation,
-    * superseded one swept — the [[graft.queries.TextQueries
-    * .compactBasePostingsIndex]] lifecycle on the vector family. */
-  private[queries] def compactIvfDeltaIndex(s: SparkSession, dir: String): java.nio.file.Path = {
-    import graft.operators.PersistedIndex
-    val cur = ensureIvfDeltaIndex(s, dir)
-    val w0 = PersistedIndex.readSplit(s, cur)
-    val emb = t(s, dir, "embeddings")
-    val hi = emb.agg(max(col("vec_id"))).collect()(0).getLong(0)
-    if (hi <= w0) return cur // nothing in flight — compaction is a no-op
-    val target = PersistedIndex.home("ivf_delta_index", dir, ivfFp(dir) + "_c" + hi)
-    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
-      val centroids = s.read.parquet(cur.resolve("centroids").toString)
-      val idx = graft.operators.Similarity.centroidIndex(centroids, "vec_id", "embedding")
-      val deltaCells = withCell(withNorm(emb.filter(col("vec_id") > w0)), idx)
-        .select(col("vec_id"), col("embedding"), col("norm"),
-          col("cell").cast(LongType).as("cell"))
-      val baseCells = s.read.parquet(cur.resolve("cells").toString)
-        .select(col("vec_id"), col("embedding"), col("norm"),
-          col("cell").cast(LongType).as("cell"))
-      graft.sources.Layout.writePartitioned(
-        baseCells.unionByName(deltaCells), tmp.resolve("cells").toString, "cell")
-      centroids.write.mode("overwrite").parquet(tmp.resolve("centroids").toString)
-      PersistedIndex.splitStats(s, hi)
-        .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
-    }
-    PersistedIndex.sweepSuperseded(target, dir)
-    target
-  }
-
   /** ss9_delta_probe — ANN search over the SEGMENTED index: newly-arrived
     * vectors are searchable immediately, without retraining or re-assigning
     * the base (the FAISS add-after-train serving shape; ss7 audits the
@@ -464,13 +430,10 @@ object SimilarityQueries {
   }
 
   def ss9DeltaProbe(s: SparkSession, dir: String): DataFrame = {
-    val home = ensureIvfDeltaIndex(s, dir)
-    val split = graft.operators.PersistedIndex.readSplit(s, home)
+    val (home, dead, delta) = IndexMaintenance.serving(s, dir, IvfMaintenance, Appends)
     val q = withNorm(t(s, dir, "embeddings")).filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"), col("norm").as("qn"))
-    ivfServe(s, home, graft.operators.CdcRules.emptyIds(s, "vec_id"),
-      t(s, dir, "embeddings").filter(col("vec_id") > split).select("vec_id", "embedding"),
-      q)
+    ivfServe(s, home, dead, delta, q)
   }
 
   val ss9DeltaProbeSql: String =
@@ -536,53 +499,19 @@ object SimilarityQueries {
   }
 
   def ss10TombstoneProbe(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val embAll = t(s, dir, "embeddings")
-    val wStar = CdcRules.feedSplit(embAll, "vec_id")
-    val q = postChangeQueries(s, dir, wStar)
-    val cdc = PersistedIndex.home("ivf_delta_index", dir, ivfFp(dir) + "_cdc" + wStar)
-    if (PersistedIndex.isBuilt(cdc))
-      return ivfServe(s, cdc, CdcRules.emptyIds(s, "vec_id"),
-        CdcRules.emptyRows(s, "vec_id", "embedding",
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)), q)
-    val home = ensureIvfDeltaIndex(s, dir)
-    val snap = PersistedIndex.readSplit(s, home)
-    ivfServe(s, home,
-      CdcRules.tombstoneIds(embAll, "vec_id", wStar),
-      CdcRules.freshRows(embAll, "vec_id", "embedding", wStar, snap,
-        CdcRules.negatedVector), q)
+    val wStar = IndexMaintenance.feedSplit(s, dir, IvfMaintenance)
+    val (home, dead, fresh) =
+      IndexMaintenance.serving(s, dir, IvfMaintenance, Tombstones, Some(wStar))
+    ivfServe(s, home, dead, fresh, postChangeQueries(s, dir, wStar))
   }
 
-  /** EXPUNGE-DELETES COMPACTION for the IVF family: dead and updated-old
-    * vectors physically leave the persisted cell table, re-embedded
-    * updates + appends are assigned under the FROZEN centroids (copied,
-    * never retrained — the FAISS immutable-training contract) and folded
-    * in. Published under `<fp>_cdc<feedSplit>`, invisible to currentHome
-    * — ss9's raw-corpus lineage keeps its base. */
-  private[queries] def compactCdcIvfIndex(s: SparkSession, dir: String): java.nio.file.Path = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val embAll = t(s, dir, "embeddings")
-    val wStar = CdcRules.feedSplit(embAll, "vec_id")
-    val target = PersistedIndex.home("ivf_delta_index", dir, ivfFp(dir) + "_cdc" + wStar)
-    if (PersistedIndex.isBuilt(target)) return target
-    val cur = ensureIvfDeltaIndex(s, dir)
-    val snap = PersistedIndex.readSplit(s, cur)
-    val hi = embAll.agg(max(col("vec_id"))).collect()(0).getLong(0)
-    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
-      val dead = CdcRules.tombstoneIds(embAll, "vec_id", wStar)
-      val fresh = CdcRules.freshRows(embAll, "vec_id", "embedding", wStar, snap,
-        CdcRules.negatedVector)
-      val centroids = s.read.parquet(cur.resolve("centroids").toString)
-      foldIvfArtifacts(s, tmp, cur, dead, fresh, math.max(snap, hi))
-    }
-    target
-  }
-
-  /** The IVF family's expunge-deletes artifact rewrite with the change
-    * set passed in — shared by [[compactCdcIvfIndex]] (rule-derived
-    * frames) and the streaming maintenance loop's fold
-    * ([[graft.streaming.IndexMaintenance]]). Centroids are COPIED, never
-    * retrained — the FAISS immutable-training contract. */
+  /** The IVF family's artifact rewrite with the change set passed in:
+    * dead vectors leave the persisted cell table, fresh vectors are
+    * assigned under the FROZEN centroids — copied, never retrained (the
+    * FAISS add-after-train contract) — with the same centroid index the
+    * probe assigns with in-plan, so folding appends moves them from
+    * probe-time assignment to persisted rows bit-exactly and ss9's
+    * answers are byte-identical across the fold. */
   private[graft] def foldIvfArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, dead: DataFrame, fresh: DataFrame, split: Long): Unit = {
     import graft.operators.PersistedIndex
@@ -607,13 +536,19 @@ object SimilarityQueries {
     * [[ivfServe]] with the post-change query slice derived from the SAME
     * (dead, fresh) frames (a deleted query stops querying, an updated one
     * probes with its new vector), fold = [[foldIvfArtifacts]]. */
-  private[graft] object IvfMaintenance
-      extends graft.streaming.IndexMaintenance.Family {
+  private[graft] object IvfMaintenance extends IndexMaintenance.Family {
     val name = "ivf"
     val idCol = "vec_id"
     val payloadCol = "embedding"
-    val payloadType: org.apache.spark.sql.types.DataType =
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)
+    val payloadType: DataType = ArrayType(FloatType)
+    val kind = "ivf_delta_index"
+    def fingerprint(dir: String): String = ivfFp(dir)
+    def source(s: SparkSession, dir: String): DataFrame = t(s, dir, "embeddings")
+    val updated: Column => Column = graft.operators.CdcRules.negatedVector
+    def feed(s: SparkSession, dir: String, wStar: Long): DataFrame =
+      graft.operators.CdcRules.vecFeed(source(s, dir), idCol, payloadCol, wStar)
+    override def sizedFeed(s: SparkSession, dir: String, wStar: Long): DataFrame =
+      sizedVecFeed(s, dir, wStar)
     def ensureBase(s: SparkSession, dir: String): java.nio.file.Path =
       ensureIvfDeltaIndex(s, dir)
     def baseCount(s: SparkSession, base: java.nio.file.Path): Long =
@@ -647,13 +582,9 @@ object SimilarityQueries {
     * exactly ss10's update transform), with the post-change query slice
     * on the probe side — ss13 ≡ ss10 and the oracle is shared. */
   def ss13FeedProbe(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val embAll = t(s, dir, "embeddings")
-    val wStar = CdcRules.feedSplit(embAll, "vec_id")
-    val home = ensureIvfDeltaIndex(s, dir)
-    val (dead, fresh) = CdcRules.feedFrames(
-      CdcRules.vecFeed(embAll, "vec_id", "embedding", wStar),
-      "vec_id", "embedding", PersistedIndex.readSplit(s, home))
+    val wStar = IndexMaintenance.feedSplit(s, dir, IvfMaintenance)
+    val (home, dead, fresh) =
+      IndexMaintenance.serving(s, dir, IvfMaintenance, Feed, Some(wStar))
     ivfServe(s, home, dead, fresh, postChangeQueries(s, dir, wStar))
   }
 
@@ -667,16 +598,12 @@ object SimilarityQueries {
     * window vectors were never re-crawled). At the correctness SFs the
     * window covers the whole corpus and ss14 ≡ ss10/ss13. */
   def ss14SizedProbe(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val embAll = t(s, dir, "embeddings")
-    val wStar = CdcRules.feedSplit(embAll, "vec_id")
-    val home = ensureIvfDeltaIndex(s, dir)
-    // r22: the windowed feed reads the range-clustered artifact (pushed
-    // vec_id range over disjoint file envelopes) instead of scanning the
-    // raw embeddings table — [[sizedVecFeed]]; rows are identical.
-    val (dead, fresh) = CdcRules.feedFrames(
-      sizedVecFeed(s, dir, wStar),
-      "vec_id", "embedding", PersistedIndex.readSplit(s, home))
+    val wStar = IndexMaintenance.feedSplit(s, dir, IvfMaintenance)
+    // the windowed feed reads the range-clustered artifact (pushed vec_id
+    // range over disjoint file envelopes) instead of scanning the raw
+    // embeddings table — [[sizedVecFeed]]; rows are identical.
+    val (home, dead, fresh) =
+      IndexMaintenance.serving(s, dir, IvfMaintenance, SizedFeed, Some(wStar))
     ivfServe(s, home, dead, fresh, sizedPostChangeQueries(s, dir, wStar))
   }
 
@@ -701,7 +628,7 @@ object SimilarityQueries {
     * change set, then probe the expunged cells with the post-change query
     * slice (empty tombstone/fresh frames; shares ss10's oracle). */
   def ss12ExpungedProbe(s: SparkSession, dir: String): DataFrame = {
-    compactCdcIvfIndex(s, dir)
+    IndexMaintenance.compactCdc(s, dir, IvfMaintenance)
     ss10TombstoneProbe(s, dir)
   }
 
@@ -875,8 +802,8 @@ object SimilarityQueries {
     * make within-block pairing quadratic, and NOT the r7 fixed stride
     * whose centroid count grew linearly and made the assign quadratic.
     *
-    * Trained-centroid face: measured r10 (graft.tools.Dd6Experiment,
-    * BASELINE.md) — k-means at the same k beats hash-stride by ≤6% warm
+    * Trained-centroid face, measured (BASELINE.md): k-means at the same
+    * k beats hash-stride by ≤6% warm
     * but costs 3.5–5.9 s training and yields a WORSE Σcellsize² (uniform
     * synthetic embeddings give k-means nothing to exploit, and its cells
     * come out less balanced than the stride's). Negative result: dd6

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.{PorterStemmer, TextFunctions => TF}
+import graft.streaming.IndexMaintenance
+import graft.streaming.IndexMaintenance.{Appends, Feed, SizedFeed, Tombstones}
 import Q._
 
 /** Text-operator suite over the `documents` table — the reference's
@@ -1329,8 +1331,8 @@ object TextQueries {
       (log(col("pos").cast(DoubleType) + lit(1.0)) / log(lit(2.0)))).cast(LongType)
     // score every term in ONE corpus pass and materialize the narrow
     // (doc_id, rel_*, score_*) frame per (session, dir) — without it each
-    // term's dcg/idcg branch re-scans the corpus (12 pruned scans; audited
-    // by PlanPeek r6). Same evaluate-many-rankings shape as the AL pool.
+    // term's dcg/idcg branch re-scans the corpus (12 pruned scans in the
+    // unshared plan). Same evaluate-many-rankings shape as the AL pool.
     val scoredAll = graft.operators.SessionShare.materialized(s, dir, "ndcg_scored") {
       val cols = qterms.flatMap { q =>
         Seq(least(size(filter(col("tk"), x => x === lit(q))), lit(3)).as(s"rel_$q"),
@@ -2433,8 +2435,8 @@ object TextQueries {
     * `split_id` in the stats row). */
   private[graft] def ensureBasePostingsIndex(s: SparkSession, dir: String): java.nio.file.Path = {
     import graft.operators.PersistedIndex
-    // generation-aware: resolves a compacted snapshot when one exists
-    // ([[compactBasePostingsIndex]]); answer-invariant either way
+    // generation-aware: resolves an append-folded snapshot when one exists
+    // ([[IndexMaintenance.foldAppends]]); answer-invariant either way
     PersistedIndex.ensure("postings_base", dir, postingsFp(dir))(
       buildBasePostings(s, dir, _, None))
   }
@@ -2461,63 +2463,6 @@ object TextQueries {
       .withColumn("split_id", lit(split))
       .withColumn("n_buckets", lit(nBk))
       .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
-  }
-
-  /** COMPACTION as an operation (VERDICT r13 #3 / r14 next-round #3): fold
-    * the in-flight delta segment into a NEW snapshot generation — the
-    * Lucene segment-merge step that keeps incremental serving's delta
-    * work bounded between rebuilds. The new generation is published under
-    * `<fp>_c<hi>` (hi = the folded-in watermark) with one atomic rename;
-    * [[ensureBasePostingsIndex]] resolves it transparently, so every probe
-    * (ir10's segment merge, ir14's tombstone subtract, e2e7's audit row)
-    * re-points at the post-compaction watermark with zero code change —
-    * and because segment merge is answer-invariant, probe results are
-    * byte-identical before/after while the delta census drops to 0. The
-    * superseded generation is swept after publish. Fold cost: one
-    * delta-only tokenization (pushed range predicate) + a rewrite of the
-    * persisted artifacts — base postings are COPIED from parquet, never
-    * re-derived from text. Returns the current home (the new generation,
-    * or the existing one when no rows are in flight). */
-  private[queries] def compactBasePostingsIndex(s: SparkSession, dir: String): java.nio.file.Path = {
-    import graft.operators.PersistedIndex
-    val cur = ensureBasePostingsIndex(s, dir)
-    val st = graft.operators.PersistedIndex.statsRow(s, cur)
-    val (nB, dlB, w0) =
-      (st.getAs[Long]("n_docs"), st.getAs[Long]("total_dl"), st.getAs[Long]("split_id"))
-    val docs = t(s, dir, "documents")
-    val hi = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    if (hi <= w0) return cur // nothing in flight — compaction is a no-op
-    val target = PersistedIndex.home("postings_base", dir, postingsFp(dir) + "_c" + hi)
-    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
-      // carry the generation's bucket modulus (the delta is ~1/9 of the
-      // base — same scale, same count; the recomputed bucket column must
-      // agree with the copied rows' layout either way)
-      val nBk = readBuckets(s, cur)
-      // the ONLY corpus access: the delta rows being folded in
-      val deltaTf = docs.filter(col("doc_id") > w0)
-        .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
-        .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
-        .localCheckpoint(true)
-      val deltaDl = deltaTf.groupBy("doc_id").agg(sum("tf").as("dl"))
-      val basePost = s.read.parquet(cur.resolve("postings").toString)
-        .select("doc_id", "word", "tf", "dl")
-      graft.sources.Layout.writePartitioned(
-        basePost.unionByName(deltaTf.join(deltaDl, Seq("doc_id")))
-          .withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
-        tmp.resolve("postings").toString, "bucket", "word")
-      s.read.parquet(cur.resolve("doclen").toString).unionByName(deltaDl)
-        .write.mode("overwrite").parquet(tmp.resolve("doclen").toString)
-      // exact Long merge of the sufficient statistics — no re-count of
-      // the base segment
-      deltaDl.agg(
-          (coalesce(count(lit(1)), lit(0L)) + lit(nB)).as("n_docs"),
-          (coalesce(sum("dl"), lit(0L)) + lit(dlB)).as("total_dl"))
-        .withColumn("split_id", lit(hi))
-        .withColumn("n_buckets", lit(nBk))
-        .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
-    }
-    PersistedIndex.sweepSuperseded(target, dir)
-    target
   }
 
   /** The shared BM25 SERVING KERNEL over a persisted postings snapshot:
@@ -2589,11 +2534,6 @@ object TextQueries {
       .orderBy(desc("bm25_e6"), col("doc_id")).limit(20)
   }
 
-  private def noIds(s: SparkSession): DataFrame =
-    graft.operators.CdcRules.emptyIds(s, "doc_id")
-  private def noDocs(s: SparkSession): DataFrame =
-    graft.operators.CdcRules.emptyRows(s, "doc_id", "text", StringType)
-
   /** A fresh segment's pinned (doc_id, word, tf), session-shared per
     * (home, derivation tag) — r21: serves that consume the IDENTICAL
     * fresh frame each paid their own eager checkpoint job per call. Keyed
@@ -2625,14 +2565,13 @@ object TextQueries {
     * crafted corpus and selective terms, and read the watermark back. */
   private[queries] def ir10Internals(s: SparkSession, dir: String,
       qterms: Seq[String]): (DataFrame, Long) = {
-    val home = ensureBasePostingsIndex(s, dir)
-    val split = graft.operators.PersistedIndex.readSplit(s, home)
     // the ONLY corpus access: the delta segment, behind a pushed range
     // predicate — tokenization cost is delta-proportional
-    val delta = t(s, dir, "documents").filter(col("doc_id") > split)
-      .select("doc_id", "text")
-    (bm25Serve(s, home, noIds(s), delta, qterms,
-      freshTfShared = Some(appendFreshTf(s, home, delta))), split)
+    val (home, dead, delta) =
+      IndexMaintenance.serving(s, dir, IndexMaintenance.Postings, Appends)
+    (bm25Serve(s, home, dead, delta, qterms,
+      freshTfShared = Some(appendFreshTf(s, home, delta))),
+      graft.operators.PersistedIndex.readSplit(s, home))
   }
 
   /** ir14_tombstone_index — tombstone/UPDATE-aware incremental serving, the
@@ -2666,7 +2605,7 @@ object TextQueries {
   def ir14TombstoneIndex(s: SparkSession, dir: String): DataFrame =
     ir14Internals(s, dir, RetrievalQTerms)._1
 
-  private def postingsFp(dir: String): String =
+  private[graft] def postingsFp(dir: String): String =
     // v2: postings rows CARRY the document length (Lucene's
     // norms-with-postings convention) so the batched serve never joins
     // the corpus-sized doclen artifact; v1 stored (doc_id, word, tf) only
@@ -2681,67 +2620,25 @@ object TextQueries {
     * CONTAIN the appends (the fresh-append leg keys on the snapshot
     * watermark, the dead/update legs on the feed's). When a CDC-folded
     * generation for this exact feed watermark exists
-    * ([[compactCdcPostingsIndex]]), serving skips the subtract arithmetic
-    * entirely: both frames are EMPTY LocalRelations, the optimizer erases
-    * the anti-joins, and the plan reads persisted artifacts only. */
+    * ([[IndexMaintenance.compactCdc]]), serving skips the subtract
+    * arithmetic entirely: both frames are EMPTY LocalRelations, the
+    * optimizer erases the anti-joins, and the plan reads persisted
+    * artifacts only. Otherwise the tombstones are deletes ∪ updates' old
+    * versions (id-only), and the fresh rows — the ONLY text tokenized at
+    * serve time — are the updated docs' re-crawled text plus the
+    * not-yet-folded append segment. */
   private[queries] def ir14Internals(s: SparkSession, dir: String,
       qterms: Seq[String]): (DataFrame, Long) = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val cdc = PersistedIndex.home("postings_base", dir, postingsFp(dir) + "_cdc" + wStar)
-    if (PersistedIndex.isBuilt(cdc))
-      return (bm25Serve(s, cdc, noIds(s), noDocs(s), qterms), wStar)
-    val home = ensureBasePostingsIndex(s, dir)
-    val snap = PersistedIndex.readSplit(s, home)
-    // tombstones: deletes ∪ updates' old versions (id-only projection);
-    // fresh rows — the ONLY text tokenized at serve time: updated docs
-    // with their re-crawled text, plus the not-yet-folded append segment
-    val dead = CdcRules.tombstoneIds(docs, "doc_id", wStar)
-    val fresh = CdcRules.freshRows(docs, "doc_id", "text", wStar, snap,
-      CdcRules.redactedText)
+    val fam = IndexMaintenance.Postings
+    val wStar = IndexMaintenance.feedSplit(s, dir, fam)
+    val (home, dead, fresh) = IndexMaintenance.serving(s, dir, fam, Tombstones, Some(wStar))
     (bm25Serve(s, home, dead, fresh, qterms), wStar)
   }
 
-  /** EXPUNGE-DELETES COMPACTION for the postings family (VERDICT r15 #2 —
-    * the Lucene `forceMerge`/expungeDeletes contract): fold the ENTIRE
-    * [[graft.operators.CdcRules]] change set at the current feed watermark
-    * into a new snapshot generation — dead and updated rows physically
-    * leave the postings/doclen artifacts via id anti-joins, re-crawled
-    * updates and appends enter through one fresh tokenization, and the
-    * stats row re-merges by the same exact Long sums the serve uses, so
-    * the generation's artifacts are bit-equal to a full rebuild over the
-    * post-change corpus. Published under `<fp>_cdc<feedSplit>` (atomic
-    * rename; invisible to [[graft.operators.PersistedIndex.currentHome]]
-    * so the append-only faces keep serving the raw-corpus lineage) and
-    * resolved by [[ir14Internals]] by exact name — the serve-time
-    * tombstone frame shrinks to EMPTY while results stay byte-identical.
-    * The base generation is NOT swept: ir6b/ir10/e2e7 still serve the
-    * raw corpus from it. */
-  private[queries] def compactCdcPostingsIndex(s: SparkSession, dir: String): java.nio.file.Path = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val target = PersistedIndex.home("postings_base", dir, postingsFp(dir) + "_cdc" + wStar)
-    if (PersistedIndex.isBuilt(target)) return target
-    val cur = ensureBasePostingsIndex(s, dir)
-    val st = graft.operators.PersistedIndex.statsRow(s, cur)
-    val (nB, dlB, snap) =
-      (st.getAs[Long]("n_docs"), st.getAs[Long]("total_dl"), st.getAs[Long]("split_id"))
-    val hi = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
-      val dead = CdcRules.tombstoneIds(docs, "doc_id", wStar)
-      val fresh = CdcRules.freshRows(docs, "doc_id", "text", wStar, snap,
-        CdcRules.redactedText)
-      foldPostingsArtifacts(s, tmp, cur, dead, fresh, math.max(snap, hi))
-    }
-    target
-  }
-
-  /** The postings family's expunge-deletes artifact rewrite with the
-    * change set passed IN — shared by [[compactCdcPostingsIndex]] (rule-
-    * derived frames) and the streaming maintenance loop's fold (segment-
-    * derived frames, [[graft.streaming.IndexMaintenance]]): dead rows
+  /** The postings family's artifact rewrite with the change set passed
+    * IN — the fold of [[IndexMaintenance.compactCdc]] (rule-derived
+    * frames), [[IndexMaintenance.foldAppends]] (no dead, appends fresh)
+    * and the streaming loop (segment-derived frames): dead rows
     * LEAVE every artifact, fresh payloads tokenize once, stats update by
     * exact Long subtract/add; base postings are otherwise copied from
     * parquet, never re-derived from text. */
@@ -2783,7 +2680,7 @@ object TextQueries {
     * but the probe plan carries empty tombstone/fresh frames and touches
     * persisted artifacts only. */
   def ir14bExpungedServe(s: SparkSession, dir: String): DataFrame = {
-    compactCdcPostingsIndex(s, dir)
+    IndexMaintenance.compactCdc(s, dir, IndexMaintenance.Postings)
     ir14Internals(s, dir, RetrievalQTerms)._1
   }
 
@@ -2838,29 +2735,13 @@ object TextQueries {
     * ([[graft.streaming.EventStreams.cdcStream]] is the generator here,
     * so the DuckDB oracle replays the same table; reference anchor: the
     * skip-marker idempotency of `scrapping/papers_download.py:49-61` is
-    * the 's' op). [[feedServe]] consumes ONLY the feed frame: 'd'/'u'
+    * the 's' op). The serve consumes ONLY the
+    * [[graft.operators.CdcRules.feedFrames]] split of the feed: 'd'/'u'
     * ids tombstone, 'u'/'a' payloads re-index, 's' rows are ignored —
-    * FeedServeSpec proves the arithmetic is feed-agnostic by serving a
+    * R16QueriesSpec proves the arithmetic is feed-agnostic by serving a
     * hand-written feed no rule set generated. */
-  def ir15FeedIndex(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.CdcRules
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    feedServe(s, ensureBasePostingsIndex(s, dir),
-      graft.streaming.EventStreams.cdcStream(docs, wStar))
-  }
-
-  /** Serve BM25 from the persisted snapshot + an explicit feed table —
-    * generic in the feed: tombstones are the 'd'/'u' ids, the fresh
-    * segment is the 'u' payloads plus 'a' payloads not yet folded into
-    * the snapshot. No rule set in sight. */
-  private[queries] def feedServe(s: SparkSession, home: java.nio.file.Path,
-      feed: DataFrame, freshTfTag: Option[String] = None): DataFrame = {
-    val snap = graft.operators.PersistedIndex.readSplit(s, home)
-    val (dead, fresh) = graft.operators.CdcRules.feedFrames(feed, "doc_id", "text", snap)
-    bm25Serve(s, home, dead, fresh, RetrievalQTerms,
-      freshTfShared = freshTfTag.map(sharedFreshTf(s, home, _, fresh)))
-  }
+  def ir15FeedIndex(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, IndexMaintenance.Postings, Feed)
 
   /** ir22_sized_feed — ir15 at a CRAWL-SIZED batch (VERDICT r16 #2): the
     * feed generator takes a batch bound ([[graft.operators.CdcRules
@@ -2873,15 +2754,12 @@ object TextQueries {
     * is pure id arithmetic, replayed by the oracle; at the correctness
     * SFs it covers the whole corpus and ir22 ≡ ir15 by construction. */
   def ir22SizedFeed(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.CdcRules
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
+    val (home, dead, fresh) =
+      IndexMaintenance.serving(s, dir, IndexMaintenance.Postings, SizedFeed)
     // the sized window's fresh tokenization is shared with ir23 (identical
     // feedFrames derivation over the identical sized feed)
-    feedServe(s, ensureBasePostingsIndex(s, dir),
-      CdcRules.sizedFeed(
-        graft.streaming.EventStreams.cdcStream(docs, wStar), "doc_id", wStar),
-      freshTfTag = Some("sizedfeed_fresh_tf"))
+    bm25Serve(s, home, dead, fresh, RetrievalQTerms,
+      freshTfShared = Some(sharedFreshTf(s, home, "sizedfeed_fresh_tf", fresh)))
   }
 
   /** The sized-feed corpus CTEs: ir15's feed-assembled corpus with the
@@ -2907,14 +2785,8 @@ object TextQueries {
     * feed: 12 queries ride one plan whose fresh leg tokenizes O(window)
     * rows (the ir16-fresh-leg pricing VERDICT r16 #2 asks for). */
   def ir23SizedQueryBatch(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val home = ensureBasePostingsIndex(s, dir)
-    val (dead, fresh) = CdcRules.feedFrames(
-      CdcRules.sizedFeed(
-        graft.streaming.EventStreams.cdcStream(docs, wStar), "doc_id", wStar),
-      "doc_id", "text", PersistedIndex.readSplit(s, home))
+    val (home, dead, fresh) =
+      IndexMaintenance.serving(s, dir, IndexMaintenance.Postings, SizedFeed)
     batchServe(s, home, dead, fresh, BatchQueries, BatchTopK,
       freshTfShared = Some(sharedFreshTf(s, home, "sizedfeed_fresh_tf", fresh)))
   }
@@ -2994,12 +2866,10 @@ object TextQueries {
     * query's slice of a batched run is bit-equal to running it alone. */
   private[queries] def ir16Internals(s: SparkSession, dir: String,
       batch: Seq[(Long, Seq[String])], k: Int): DataFrame = {
-    val home = ensureBasePostingsIndex(s, dir)
-    val split = graft.operators.PersistedIndex.readSplit(s, home)
-    val delta = t(s, dir, "documents").filter(col("doc_id") > split)
-      .select("doc_id", "text")
-    batchServe(s, home, graft.operators.CdcRules.emptyIds(s, "doc_id"),
-      delta, batch, k, freshTfShared = Some(appendFreshTf(s, home, delta)))
+    val (home, dead, delta) =
+      IndexMaintenance.serving(s, dir, IndexMaintenance.Postings, Appends)
+    batchServe(s, home, dead, delta, batch, k,
+      freshTfShared = Some(appendFreshTf(s, home, delta)))
   }
 
   /** The batched BM25 SERVING KERNEL — [[bm25Serve]]'s many-query sibling:
@@ -3086,19 +2956,9 @@ object TextQueries {
     * would be invisible to it); resolves the expunged generation when
     * one exists (ir14's branch) and then serves persisted-only. */
   def ir20CdcQueryBatch(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val cdc = PersistedIndex.home("postings_base", dir, postingsFp(dir) + "_cdc" + wStar)
-    if (PersistedIndex.isBuilt(cdc))
-      return batchServe(s, cdc, CdcRules.emptyIds(s, "doc_id"), noDocs(s),
-        BatchQueries, BatchTopK)
-    val home = ensureBasePostingsIndex(s, dir)
-    val snap = PersistedIndex.readSplit(s, home)
-    batchServe(s, home,
-      CdcRules.tombstoneIds(docs, "doc_id", wStar),
-      CdcRules.freshRows(docs, "doc_id", "text", wStar, snap, CdcRules.redactedText),
-      BatchQueries, BatchTopK)
+    val (home, dead, fresh) =
+      IndexMaintenance.serving(s, dir, IndexMaintenance.Postings, Tombstones)
+    batchServe(s, home, dead, fresh, BatchQueries, BatchTopK)
   }
 
   val ir16QueryBatchSql: String = batchSqlOver("", "documents")
@@ -3441,32 +3301,18 @@ object TextQueries {
       .groupBy("doc_id", "word")
       .agg(sort_array(collect_list("pos")).as("positions"))
 
-  /** The corpus APPEND segment above a resolved positions home's
-    * watermark — as a TRUE empty LocalRelation when the generation's
-    * stats carry the fold-complete marker ([[compactBasePosIndex]] folded
-    * the whole corpus), so PropagateEmptyRelation erases the entire
-    * tokenization leg under [[posServe]] and the probe plan is
-    * persisted-only (VERDICT r16 #6: a `doc_id > split` filter the
-    * planner cannot know is empty kept a corpus scan + posexplode
-    * subtree in every positional probe after a fold). */
-  private def posDelta(s: SparkSession, dir: String,
-      home: java.nio.file.Path): DataFrame = {
-    val (split, atMax) = graft.operators.PersistedIndex.readSplitInfo(s, home)
-    if (atMax) noDocs(s)
-    else t(s, dir, "documents").filter(col("doc_id") > split).select("doc_id", "text")
-  }
-
-  /** APPEND-FOLD compaction for the positional family —
-    * [[compactBasePostingsIndex]]'s shape on positions: fold the
-    * in-flight append segment into a `<fp>_c<hi>` generation that
-    * [[ensurePosIndex]] resolves transparently, with
-    * [[graft.operators.PersistedIndex.splitStatsAtMax]] recording that
-    * the fold consumed the corpus — every later positional probe
-    * (ir11b/ir13/ir13b/ir17) serves persisted-only via [[posDelta]].
-    * Deliberately does NOT sweep superseded homes: the plain base home
-    * must survive for the audit faces (e2e8 audits the BASE lineage so
-    * its census stays corpus-replayable) and the `_cdc` expunge
-    * generations must survive for the tombstone faces. */
+  /** APPEND-FOLD compaction for the positional family — its OWN fold,
+    * not [[IndexMaintenance.foldAppends]], for two reasons. It records
+    * [[graft.operators.PersistedIndex.splitStatsAtMax]] — the fold
+    * consumed the corpus — so every later positional probe (ir11b/ir13/
+    * ir13b/ir17) gets a TRUE empty append frame from
+    * [[IndexMaintenance.serving]] and serves persisted-only (a
+    * `doc_id > split` filter the planner cannot know is empty kept a
+    * corpus scan + posexplode subtree in every probe). And it deliberately
+    * does NOT sweep superseded homes: the plain base home must survive for
+    * the audit faces (e2e8 audits the BASE lineage so its census stays
+    * corpus-replayable) and the `_cdc` expunge generations must survive
+    * for the tombstone faces. */
   private[queries] def compactBasePosIndex(s: SparkSession, dir: String): java.nio.file.Path = {
     import graft.operators.PersistedIndex
     val cur = ensurePosIndex(s, dir)
@@ -3474,7 +3320,7 @@ object TextQueries {
     if (atMax) return cur
     val docs = t(s, dir, "documents")
     val hi = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    val target = PersistedIndex.home("positions_index", dir, posFp(dir) + "_c" + hi)
+    val target = IndexMaintenance.appendHome(dir, PositionsMaintenance, hi)
     PersistedIndex.buildIfAbsent(target, dir) { tmp =>
       val nBk = readBuckets(s, cur)
       // the ONLY corpus access: the delta rows being folded in (empty when
@@ -3544,14 +3390,8 @@ object TextQueries {
     * query time (pushed `doc_id > split` range — the ir10 merge applied
     * to positions), results bit-equal to ir11 (segment merge is
     * invisible to the answer, so the oracle is shared). */
-  def ir11bPersistedPositions(s: SparkSession, dir: String): DataFrame = {
-    val (w1, w2) = PhraseTerms
-    val home = ensurePosIndex(s, dir)
-    phraseMatch(
-      posServe(s, home, graft.operators.CdcRules.emptyIds(s, "doc_id"),
-        posDelta(s, dir, home), Seq(w1, w2)),
-      w1, w2)
-  }
+  def ir11bPersistedPositions(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, PositionsMaintenance, Appends)
 
   /** ir18_tombstone_phrase — tombstone/UPDATE-aware PHRASE search: the
     * [[graft.operators.CdcRules]] semantics on the POSITIONAL family (the
@@ -3560,52 +3400,15 @@ object TextQueries {
     * under their re-crawled (reversed) text — the phrase "w1 w2" stops
     * matching and "w2 w1" starts, exactly what the oracle replays —
     * appends are ir11b's delta. When the expunged generation for this
-    * feed watermark exists ([[compactCdcPosIndex]]), the serve reads
-    * persisted lists only (empty frames, the ir14b contract). */
-  def ir18TombstonePhrase(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val (w1, w2) = PhraseTerms
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val cdc = PersistedIndex.home("positions_index", dir, posFp(dir) + "_cdc" + wStar)
-    if (PersistedIndex.isBuilt(cdc))
-      return phraseMatch(
-        posServe(s, cdc, CdcRules.emptyIds(s, "doc_id"), noDocs(s), Seq(w1, w2)), w1, w2)
-    val home = ensurePosIndex(s, dir)
-    val snap = PersistedIndex.readSplit(s, home)
-    phraseMatch(
-      posServe(s, home,
-        CdcRules.tombstoneIds(docs, "doc_id", wStar),
-        CdcRules.freshRows(docs, "doc_id", "text", wStar, snap, CdcRules.reversedTokens),
-        Seq(w1, w2)),
-      w1, w2)
-  }
+    * feed watermark exists ([[IndexMaintenance.compactCdc]]), the serve
+    * reads persisted lists only (empty frames, the ir14b contract). */
+  def ir18TombstonePhrase(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, PositionsMaintenance, Tombstones)
 
-  /** EXPUNGE-DELETES COMPACTION for the positional family: dead and
-    * updated-old position lists physically leave, re-positioned updates +
-    * appends fold in (ALL words — the generation serves every term),
-    * published under `<fp>_cdc<feedSplit>`, invisible to currentHome. */
-  private[queries] def compactCdcPosIndex(s: SparkSession, dir: String): java.nio.file.Path = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val target = PersistedIndex.home("positions_index", dir, posFp(dir) + "_cdc" + wStar)
-    if (PersistedIndex.isBuilt(target)) return target
-    val cur = ensurePosIndex(s, dir)
-    val snap = PersistedIndex.readSplit(s, cur)
-    val hi = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
-      val dead = CdcRules.tombstoneIds(docs, "doc_id", wStar)
-      val fresh = CdcRules.freshRows(docs, "doc_id", "text", wStar, snap,
-        CdcRules.reversedTokens)
-      foldPosArtifacts(s, tmp, cur, dead, fresh, math.max(snap, hi))
-    }
-    target
-  }
-
-  /** The positions family's expunge-deletes artifact rewrite with the
-    * change set passed in (shared with the streaming maintenance loop —
-    * see [[foldPostingsArtifacts]]). */
+  /** The positions family's artifact rewrite with the change set passed
+    * in — dead and updated-old position lists leave, re-positioned
+    * updates + appends fold in (ALL words — the generation serves every
+    * term); see [[foldPostingsArtifacts]]. */
   private[graft] def foldPosArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, dead: DataFrame, fresh: DataFrame, split: Long): Unit = {
     import graft.operators.PersistedIndex
@@ -3629,12 +3432,10 @@ object TextQueries {
   /** The positional family's hooks into the streaming maintenance loop
     * ([[graft.streaming.IndexMaintenance]]): probe = the ir19 feed face's
     * phrase query, fold = [[foldPosArtifacts]]. */
-  private[graft] object PositionsMaintenance
-      extends graft.streaming.IndexMaintenance.Family {
+  private[graft] object PositionsMaintenance extends IndexMaintenance.DocFamily {
     val name = "positions"
-    val idCol = "doc_id"
-    val payloadCol = "text"
-    val payloadType: org.apache.spark.sql.types.DataType = StringType
+    val kind = "positions_index"
+    def fingerprint(dir: String): String = posFp(dir)
     def ensureBase(s: SparkSession, dir: String): java.nio.file.Path =
       ensurePosIndex(s, dir)
     def baseCount(s: SparkSession, base: java.nio.file.Path): Long =
@@ -3652,7 +3453,7 @@ object TextQueries {
   /** ir18b_expunged_phrase — fold, then serve phrase matches straight
     * from the expunged position lists (shares ir18's oracle). */
   def ir18bExpungedPhrase(s: SparkSession, dir: String): DataFrame = {
-    compactCdcPosIndex(s, dir)
+    IndexMaintenance.compactCdc(s, dir, PositionsMaintenance)
     ir18TombstonePhrase(s, dir)
   }
 
@@ -3662,17 +3463,8 @@ object TextQueries {
     * [[graft.operators.CdcRules.feedFrames]] split of the cdcStream
     * table; reversedTokens 'u' payloads are exactly ir18's update
     * transform, so ir19 ≡ ir18 and the oracle is shared. */
-  def ir19FeedPhrase(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.{CdcRules, PersistedIndex}
-    val (w1, w2) = PhraseTerms
-    val docs = t(s, dir, "documents")
-    val wStar = CdcRules.feedSplit(docs, "doc_id")
-    val home = ensurePosIndex(s, dir)
-    val (dead, fresh) = CdcRules.feedFrames(
-      graft.streaming.EventStreams.cdcStream(docs, wStar), "doc_id", "text",
-      PersistedIndex.readSplit(s, home))
-    phraseMatch(posServe(s, home, dead, fresh, Seq(w1, w2)), w1, w2)
-  }
+  def ir19FeedPhrase(s: SparkSession, dir: String): DataFrame =
+    IndexMaintenance.serve(s, dir, PositionsMaintenance, Feed)
 
   /** ir11's SQL replayed over the POST-CHANGE corpus (the ir14/dd20
     * oracle convention — updates reversed, so the phrase flips sides). */
@@ -3717,10 +3509,9 @@ object TextQueries {
 
   private[queries] def ir13Internals(s: SparkSession, dir: String,
       w1: String, w2: String, w3: String, slop: Int): DataFrame = {
-    val home = ensurePosIndex(s, dir)
     val terms = Seq(w1, w2, w3)
-    val pt = posServe(s, home, graft.operators.CdcRules.emptyIds(s, "doc_id"),
-      posDelta(s, dir, home), terms)
+    val (home, dead, delta) = IndexMaintenance.serving(s, dir, PositionsMaintenance, Appends)
+    val pt = posServe(s, home, dead, delta, terms)
     def posOf(w: String, as: String) =
       pt.filter(col("word") === w).select(col("doc_id"), col("positions").as(as))
     val win = lit(slop + 2L)
@@ -3754,10 +3545,9 @@ object TextQueries {
 
   private[queries] def ir13bInternals(s: SparkSession, dir: String,
       w1: String, w2: String, w3: String, slop: Int): DataFrame = {
-    val home = ensurePosIndex(s, dir)
     val terms = Seq(w1, w2, w3)
-    val pt = posServe(s, home, graft.operators.CdcRules.emptyIds(s, "doc_id"),
-      posDelta(s, dir, home), terms)
+    val (home, dead, delta) = IndexMaintenance.serving(s, dir, PositionsMaintenance, Appends)
+    val pt = posServe(s, home, dead, delta, terms)
     def posOf(w: String, as: String) =
       pt.filter(col("word") === w).select(col("doc_id"), col("positions").as(as))
     val win = lit(slop + 2L)
@@ -3823,10 +3613,9 @@ object TextQueries {
   private[queries] def ir21Internals(s: SparkSession, dir: String,
       batch: Seq[(Long, String, String, Int)], k: Int): DataFrame = {
     import s.implicits._
-    val home = ensurePosIndex(s, dir)
     val terms = batch.flatMap(b => Seq(b._2, b._3)).distinct.sorted
-    val pt = posServe(s, home, graft.operators.CdcRules.emptyIds(s, "doc_id"),
-      posDelta(s, dir, home), terms)
+    val (home, dead, delta) = IndexMaintenance.serving(s, dir, PositionsMaintenance, Appends)
+    val pt = posServe(s, home, dead, delta, terms)
     val triples = batch.map(b => (b._2, b._3, b._4)).distinct
     val tripleId = triples.zipWithIndex
       .map { case (t, i) => t -> i.toLong }.toMap

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -24,10 +24,14 @@ import graft.queries.TextQueries
   *
   * GENERALIZED over a per-family adapter (VERDICT r17 #3): the segment
   * land / last-writer merge / policy / fold-and-retire kernel is family
-  * blind; a [[Family]] supplies (ensure base, fold artifacts, serve,
-  * census) — postings, positions, LSH, KG, pHash and IVF all ride the
-  * same loop, each folding with the exact compactCdc* recipe its batch
-  * faces already spec-pin.
+  * blind; a [[Family]] supplies (index kind and fingerprint, source
+  * table, update transform, feed generators, ensure base, census, fold
+  * artifacts, serve) — postings, positions, LSH, KG, pHash and IVF all
+  * ride the same loop. The same hooks drive the BATCH lifecycle: every
+  * tombstone, expunge, feed and append face resolves its serving state
+  * through [[serving]] and folds through [[compactCdc]] /
+  * [[foldAppends]], so this module alone names the `_cdc<w>` and
+  * `_c<hi>` generations.
   *
   * Idempotence/restart contract (the resumable ingestion of the
   * reference's `scrapping/papers_download.py:49-61,136-151`, whose
@@ -57,9 +61,11 @@ import graft.queries.TextQueries
   */
 object IndexMaintenance {
 
-  /** One persisted index family's hooks into the maintenance loop. All
-    * methods take the SAME (dead, fresh) frames the family's batch feed
-    * face derives via [[CdcRules.feedFrames]]. */
+  /** One persisted index family's hooks into the index lifecycle — the
+    * streaming loop below and the batch faces' [[serving]], [[compactCdc]]
+    * and [[foldAppends]]. All serve/fold methods take the SAME (dead,
+    * fresh) frames: [[CdcRules.feedFrames]] of a feed, or the rule-derived
+    * tombstone/fresh pair. */
   trait Family {
     def name: String
     /** feed id column ("doc_id" / "vec_id"). */
@@ -68,14 +74,28 @@ object IndexMaintenance {
     def payloadCol: String
     /** payload type in the feed and segment parquet. */
     def payloadType: DataType
+    /** the persisted index kind — the homes' parent under `staging/`. */
+    def kind: String
+    /** the base home's fingerprint over `dir`; fold generations publish
+      * under it with a `_cdc<w>` / `_c<hi>` suffix. */
+    def fingerprint(dir: String): String
+    /** the corpus table the family indexes (idCol, payloadCol, …). */
+    def source(s: SparkSession, dir: String): DataFrame
+    /** the rule feed's payload transform for a re-crawled (updated) row. */
+    def updated: Column => Column
+    /** the generated (id, op, payload) change feed at watermark `wStar`. */
+    def feed(s: SparkSession, dir: String, wStar: Long): DataFrame
+    /** [[feed]] restricted to the crawl window. */
+    def sizedFeed(s: SparkSession, dir: String, wStar: Long): DataFrame =
+      CdcRules.sizedFeed(feed(s, dir, wStar), idCol, wStar)
     /** resolve (building if absent) the family's published base index. */
     def ensureBase(s: SparkSession, dir: String): Path
     /** the serving-set size the compaction policy prices changes against. */
     def baseCount(s: SparkSession, base: Path): Long
-    /** rewrite the family's artifacts under `tmp` as base ∖ dead ∪ fresh —
-      * the compactCdc* recipe with the change set passed in. `split` is the
-      * watermark to record in the folded stats (the loop keeps the base's:
-      * folded appends' segments are deleted, so nothing re-applies). */
+    /** rewrite the family's artifacts under `tmp` as base ∖ dead ∪ fresh,
+      * recording `split` as the folded watermark (the loop keeps the
+      * base's: folded appends' segments are deleted, so nothing
+      * re-applies). */
     def foldInto(s: SparkSession, tmp: Path, base: Path,
         dead: DataFrame, fresh: DataFrame, split: Long): Unit
     /** the family's query face over base ∖ dead ∪ fresh. */
@@ -83,12 +103,27 @@ object IndexMaintenance {
         dead: DataFrame, fresh: DataFrame): DataFrame
   }
 
-  /** The postings family — BM25 serving, the loop's original face. */
-  object Postings extends Family {
-    val name = "postings"
+  /** A family over the documents corpus: (doc_id, text) payloads, the
+    * [[EventStreams.cdcStream]] feed, re-crawls with reversed tokens. */
+  trait DocFamily extends Family {
     val idCol = "doc_id"
     val payloadCol = "text"
     val payloadType: DataType = StringType
+    def updated: Column => Column = CdcRules.reversedTokens
+    def source(s: SparkSession, dir: String): DataFrame =
+      graft.Tables(s, dir, "documents")
+    def feed(s: SparkSession, dir: String, wStar: Long): DataFrame =
+      EventStreams.cdcStream(source(s, dir), wStar)
+  }
+
+  /** The postings family — BM25 serving, the loop's original face. Its
+    * re-crawl is the literal 'redacted': BM25 is order-free, so a token
+    * reversal would be invisible to it. */
+  object Postings extends DocFamily {
+    val name = "postings"
+    val kind = "postings_base"
+    def fingerprint(dir: String): String = TextQueries.postingsFp(dir)
+    override def updated: Column => Column = CdcRules.redactedText
     def ensureBase(s: SparkSession, dir: String): Path =
       TextQueries.ensureBasePostingsIndex(s, dir)
     def baseCount(s: SparkSession, base: Path): Long =
@@ -99,6 +134,151 @@ object IndexMaintenance {
     def serve(s: SparkSession, dir: String, base: Path,
         dead: DataFrame, fresh: DataFrame): DataFrame =
       TextQueries.bm25Serve(s, base, dead, fresh, TextQueries.RetrievalQTerms)
+  }
+
+  /** The six persisted families, one per index kind. */
+  lazy val Families: Seq[Family] = Seq(Postings,
+    graft.queries.TextQueries.PositionsMaintenance,
+    graft.queries.DedupQueries.LshMaintenance,
+    graft.queries.MatchQueries.KgMaintenance,
+    graft.queries.MultimodalQueries.PhashMaintenance,
+    graft.queries.SimilarityQueries.IvfMaintenance)
+
+  // ---- the batch lifecycle: serve base ∖ dead ∪ fresh, fold it in ------
+
+  /** The change set a batch face serves against. */
+  sealed trait ChangeSet
+  /** Rows past the snapshot watermark, nothing tombstoned (ir10/ir11b/
+    * dd18/kg6/mm7/ss9). A generation whose stats carry the fold-complete
+    * marker serves a TRUE empty fresh frame, so the plan is
+    * persisted-only. */
+  case object Appends extends ChangeSet
+  /** The [[CdcRules]] rule set at the feed watermark (ir14/ir18/dd20/kg7/
+    * mm8/ss10). Once [[compactCdc]] has published that watermark's
+    * generation, the serve reads it with empty frames — the optimizer
+    * erases the anti-joins and the plan reads persisted artifacts only. */
+  case object Tombstones extends ChangeSet
+  /** The family's generated feed table, [[Family.feed]] (ir15/ir19/dd22/
+    * kg9/mm10/ss13). */
+  case object Feed extends ChangeSet
+  /** The feed restricted to the crawl window, [[Family.sizedFeed]]
+    * (ir22/dd23/kg10/mm11/ss14). */
+  case object SizedFeed extends ChangeSet
+
+  /** The feed watermark of the family's corpus (one bounded driver read). */
+  def feedSplit(s: SparkSession, dir: String, f: Family): Long =
+    CdcRules.feedSplit(f.source(s, dir), f.idCol)
+
+  /** `<fp>_cdc<w>`: the expunge generation of the rule change set at feed
+    * watermark `wStar` — invisible to [[PersistedIndex.currentHome]], so
+    * the append-only faces keep serving the raw-corpus lineage. */
+  def cdcHome(dir: String, f: Family, wStar: Long): Path =
+    PersistedIndex.home(f.kind, dir, f.fingerprint(dir) + "_cdc" + wStar)
+
+  /** `<fp>_c<hi>`: the append generation holding every row up to id `hi`,
+    * which [[PersistedIndex.currentHome]] resolves transparently. */
+  def appendHome(dir: String, f: Family, hi: Long): Path =
+    PersistedIndex.home(f.kind, dir, f.fingerprint(dir) + "_c" + hi)
+
+  private def noIds(s: SparkSession, f: Family): DataFrame =
+    CdcRules.emptyIds(s, f.idCol)
+
+  private def noRows(s: SparkSession, f: Family): DataFrame =
+    CdcRules.emptyRows(s, f.idCol, f.payloadCol, f.payloadType)
+
+  private def maxId(src: DataFrame, f: Family): Long =
+    src.agg(max(col(f.idCol))).collect()(0).getLong(0)
+
+  /** (serving home, dead ids, fresh rows) for `changes` — what a batch
+    * face hands to its kernel, as [[probe]] does for the streaming loop.
+    * The append floor of every fresh frame is the SNAPSHOT watermark
+    * (rows already folded into the artifacts never re-enter), while the
+    * rule and feed legs key on the CORPUS feed watermark, so a face stays
+    * oracle-identical across folds. Faces that already hold the feed
+    * watermark pass it as `wStar`. */
+  def serving(s: SparkSession, dir: String, f: Family, changes: ChangeSet,
+      wStar: Option[Long] = None): (Path, DataFrame, DataFrame) = {
+    lazy val w = wStar.getOrElse(feedSplit(s, dir, f))
+    def feedServing(feed: Long => DataFrame) = {
+      val home = f.ensureBase(s, dir)
+      val (dead, fresh) = CdcRules.feedFrames(feed(w), f.idCol, f.payloadCol,
+        PersistedIndex.readSplit(s, home))
+      (home, dead, fresh)
+    }
+    changes match {
+      case Appends =>
+        val home = f.ensureBase(s, dir)
+        val (split, atMax) = PersistedIndex.readSplitInfo(s, home)
+        (home, noIds(s, f),
+          if (atMax) noRows(s, f)
+          else f.source(s, dir).filter(col(f.idCol) > split).select(f.idCol, f.payloadCol))
+      case Tombstones =>
+        val cdc = cdcHome(dir, f, w)
+        if (PersistedIndex.isBuilt(cdc)) (cdc, noIds(s, f), noRows(s, f))
+        else {
+          val home = f.ensureBase(s, dir)
+          val src = f.source(s, dir)
+          (home, CdcRules.tombstoneIds(src, f.idCol, w),
+            CdcRules.freshRows(src, f.idCol, f.payloadCol, w,
+              PersistedIndex.readSplit(s, home), f.updated))
+        }
+      case Feed => feedServing(f.feed(s, dir, _))
+      case SizedFeed => feedServing(f.sizedFeed(s, dir, _))
+    }
+  }
+
+  /** The family's own query face over [[serving]]. */
+  def serve(s: SparkSession, dir: String, f: Family, changes: ChangeSet): DataFrame = {
+    val (home, dead, fresh) = serving(s, dir, f, changes)
+    f.serve(s, dir, home, dead, fresh)
+  }
+
+  /** EXPUNGE-DELETES COMPACTION (the Lucene `forceMerge`/expungeDeletes
+    * contract): fold the ENTIRE [[CdcRules]] change set at the current
+    * feed watermark into [[cdcHome]] — dead and updated-old rows
+    * physically leave every artifact, re-crawled updates and appends
+    * enter through one fresh derivation, so the generation is bit-equal
+    * to a full rebuild over the post-change corpus and [[Tombstones]]
+    * serving reads it with empty frames. The base generation is NOT
+    * swept: the append-only faces and the e2e8 audit still read it.
+    * Idempotent: returns the published generation when it exists. */
+  def compactCdc(s: SparkSession, dir: String, f: Family): Path = {
+    val src = f.source(s, dir)
+    val wStar = CdcRules.feedSplit(src, f.idCol)
+    val target = cdcHome(dir, f, wStar)
+    if (PersistedIndex.isBuilt(target)) return target
+    val base = f.ensureBase(s, dir)
+    val snap = PersistedIndex.readSplit(s, base)
+    val hi = maxId(src, f)
+    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
+      f.foldInto(s, tmp, base, CdcRules.tombstoneIds(src, f.idCol, wStar),
+        CdcRules.freshRows(src, f.idCol, f.payloadCol, wStar, snap, f.updated),
+        math.max(snap, hi))
+    }
+    target
+  }
+
+  /** APPEND COMPACTION (the Lucene segment merge): fold the rows past the
+    * base's watermark into [[appendHome]] — nothing dead, the in-flight
+    * segment is the fresh side — then sweep the superseded generation.
+    * The base's own resolution re-points at the new generation, and
+    * because segment merge is answer-invariant the append faces serve
+    * byte-identical results while their delta work drops to zero. Only
+    * the appended rows are re-derived; base artifacts are copied. Returns
+    * the current home (unchanged when nothing is in flight). */
+  def foldAppends(s: SparkSession, dir: String, f: Family): Path = {
+    val base = f.ensureBase(s, dir)
+    val w0 = PersistedIndex.readSplit(s, base)
+    val src = f.source(s, dir)
+    val hi = maxId(src, f)
+    if (hi <= w0) return base
+    val target = appendHome(dir, f, hi)
+    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
+      f.foldInto(s, tmp, base, noIds(s, f),
+        src.filter(col(f.idCol) > w0).select(f.idCol, f.payloadCol), hi)
+    }
+    PersistedIndex.sweepSuperseded(target, dir)
+    target
   }
 
   private def segName(batchId: Long) = f"seg_$batchId%012d"
@@ -269,9 +449,7 @@ object IndexMaintenance {
       family: Family = Postings): DataFrame = {
     val (base, _, segs) = resolve(s, dir, root, family)
     val (dead, fresh) =
-      if (segs.isEmpty)
-        (CdcRules.emptyIds(s, family.idCol),
-          CdcRules.emptyRows(s, family.idCol, family.payloadCol, family.payloadType))
+      if (segs.isEmpty) (noIds(s, family), noRows(s, family))
       else changeSet(s, segs, family, PersistedIndex.readSplit(s, base))
     family.serve(s, dir, base, dead, fresh)
   }

@@ -426,43 +426,6 @@ class R13QueriesSpec extends SparkSpec {
       "the base artifact must contain the deleted and updated docs' pairs")
   }
 
-  test("lsh compaction: probe byte-identical, delta work gone, superseded generation swept") {
-    import spark.implicits._
-    // the dd18 fixture corpus: compaction must fold the straddler and the
-    // delta-internal pair into the persisted pair set without changing the
-    // served answer
-    val tmp = java.nio.file.Files.createTempDirectory("dd18cmp").toString
-    val dup = "the quick brown fox jumps over the lazy dog"
-    val docs = (0L until 100L).map { i =>
-      val text =
-        if (Set(10L, 20L, 40L, 95L).contains(i)) dup
-        else if (Set(96L, 97L).contains(i)) "entirely different delta text here"
-        else s"u${i}a u${i}b u${i}c u${i}d"
-      (i, text, text.length.toLong)
-    }.toDF("doc_id", "text", "n_chars")
-    docs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val before = DedupQueries.dd18DeltaNeardup(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val home0 = DedupQueries.ensureLshIndex(spark, tmp)
-    val home1 = DedupQueries.compactLshIndex(spark, tmp)
-    assert(home1.getFileName.toString.endsWith("_c99"))
-    assert(java.nio.file.Files.exists(home0.resolve("_SUPERSEDED")),
-      "the superseded generation is stamped — a concurrent reader survives the cycle")
-    graft.operators.PersistedIndex.sweepSuperseded(home1, tmp, 0L)
-    assert(!java.nio.file.Files.exists(home0), "the stamped generation sweeps once the grace elapses")
-    assert(DedupQueries.ensureLshIndex(spark, tmp) === home1, "resolution re-points")
-    assert(graft.operators.PersistedIndex.readSplit(spark, home1) === 99L)
-    // all seven pairs now live in the artifact; the probe's delta term is empty
-    val persisted = spark.read.parquet(home1.resolve("pairs").toString)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(persisted === Set((10L, 20L), (10L, 40L), (20L, 40L), (10L, 95L),
-      (20L, 95L), (40L, 95L), (96L, 97L)))
-    val after = DedupQueries.dd18DeltaNeardup(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(after === before, "compaction must be invisible to the served answer")
-    assert(DedupQueries.compactLshIndex(spark, tmp) === home1, "compact again is a no-op")
-  }
-
   test("ss10 fixture: deleted vector leaves the cells, updated query probes with its new vector") {
     import spark.implicits._
     // ids 0..99 → watermark 90. Vec 33 (33%13==7, deleted) and vec 28
@@ -494,44 +457,6 @@ class R13QueriesSpec extends SparkSpec {
     val q2 = rows.filter(_._1 == 2L).sortBy(_._2)
     assert(q2.head._3 === 15L && q2.head._4 === 1000000L,
       "two identically-updated vectors stay mutual neighbors (both negated)")
-  }
-
-  test("ivf compaction: probe byte-identical under frozen centroids, superseded generation swept") {
-    import spark.implicits._
-    // the ss9 fixture corpus: vector 95 (query 0's exact copy) arrives in
-    // the delta; compaction must move it into the persisted cells WITHOUT
-    // retraining centroids, leaving the served ranking byte-identical
-    val tmp = java.nio.file.Files.createTempDirectory("ss9cmp").toString
-    val vecs = (0L until 100L).map { i =>
-      val v: Seq[Float] =
-        if (i == 95L) Seq(1f, 0f, 0f, 0f)
-        else Seq(1f, (i % 7).toFloat, (i * 3 % 11).toFloat, (i * 5 % 13).toFloat)
-      (i, v, (i % 3).toInt)
-    }.toDF("vec_id", "embedding", "label")
-    vecs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
-    val before = SimilarityQueries.ss9DeltaProbe(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
-    val home0 = SimilarityQueries.ensureIvfDeltaIndex(spark, tmp)
-    val cents0 = spark.read.parquet(home0.resolve("centroids").toString)
-      .collect().map(_.getLong(0)).sorted.toSeq
-    val home1 = SimilarityQueries.compactIvfDeltaIndex(spark, tmp)
-    assert(home1.getFileName.toString.endsWith("_c99"))
-    assert(java.nio.file.Files.exists(home0.resolve("_SUPERSEDED")),
-      "the superseded generation is stamped — a concurrent reader survives the cycle")
-    graft.operators.PersistedIndex.sweepSuperseded(home1, tmp, 0L)
-    assert(!java.nio.file.Files.exists(home0), "the stamped generation sweeps once the grace elapses")
-    assert(SimilarityQueries.ensureIvfDeltaIndex(spark, tmp) === home1, "resolution re-points")
-    assert(graft.operators.PersistedIndex.readSplit(spark, home1) === 99L)
-    // centroids frozen (copied, not retrained); the delta vector now lives in cells
-    val cents1 = spark.read.parquet(home1.resolve("centroids").toString)
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(cents1 === cents0, "compaction must never retrain centroids")
-    assert(spark.read.parquet(home1.resolve("cells").toString)
-      .filter(col("vec_id") === 95L).count() === 1L)
-    val after = SimilarityQueries.ss9DeltaProbe(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(after === before, "compaction must be invisible to the served ranking")
-    assert(SimilarityQueries.compactIvfDeltaIndex(spark, tmp) === home1, "no-op when drained")
   }
 
   test("kg7 fixture: deleted doc's pair vanishes, updated doc's phrase entity breaks") {
@@ -573,42 +498,6 @@ class R13QueriesSpec extends SparkSpec {
     assert(pairs.contains(("data", "hash join")), "the delta doc's pair must appear")
   }
 
-  test("kg compaction: merged statistics byte-identical, superseded generation swept") {
-    import spark.implicits._
-    // gazetteer entities straddling the watermark: base docs pair
-    // data+stream, delta docs pair data+window — compaction folds the
-    // delta's counts into the persisted statistics
-    val tmp = java.nio.file.Files.createTempDirectory("kg6cmp").toString
-    val docs = (0L until 100L).map { i =>
-      val text =
-        if (i < 30L) "data stream flows here"
-        else if (i >= 91L) "data window opens here"
-        else s"plain u${i} filler"
-      (i, text, text.length.toLong)
-    }.toDF("doc_id", "text", "n_chars")
-    docs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val before = MatchQueries.kg6DeltaGraph(spark, tmp).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
-    assert(before.map(p => (p._1, p._2)).contains(("data", "window")),
-      "the delta-only pair must be served before compaction")
-    val home0 = MatchQueries.ensureKgDeltaIndex(spark, tmp)
-    val home1 = MatchQueries.compactKgDeltaIndex(spark, tmp)
-    assert(home1.getFileName.toString.endsWith("_c99"))
-    assert(java.nio.file.Files.exists(home0.resolve("_SUPERSEDED")),
-      "the superseded generation is stamped — a concurrent reader survives the cycle")
-    graft.operators.PersistedIndex.sweepSuperseded(home1, tmp, 0L)
-    assert(!java.nio.file.Files.exists(home0), "the stamped generation sweeps once the grace elapses")
-    assert(MatchQueries.ensureKgDeltaIndex(spark, tmp) === home1, "resolution re-points")
-    // the delta pair's counts now live in the persisted co table
-    val co = spark.read.parquet(home1.resolve("co").toString).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    assert(co(("data", "window")) === 9L)
-    val after = MatchQueries.kg6DeltaGraph(spark, tmp).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
-    assert(after === before, "compaction must be invisible to the served graph")
-    assert(MatchQueries.compactKgDeltaIndex(spark, tmp) === home1, "no-op when drained")
-  }
-
   test("mm8 fixture: tombstone-served counts equal mm4 over the post-change corpus") {
     import spark.implicits._
     // ids 0..129 → watermark 117. The dup payload lives at 10, 33
@@ -642,37 +531,6 @@ class R13QueriesSpec extends SparkSpec {
     assert(!byId.contains(33L), "the deleted asset must leave the store")
     assert(byId(10L) >= 2L && byId(50L) >= 2L && byId(120L) >= 2L,
       "the surviving copies (base, base, delta) must stay mutual near-dups")
-  }
-
-  test("phash compaction: probe byte-identical, superseded generation swept") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("mm7cmp").toString
-    val payload = ("the quick brown fox jumps over the lazy dog " * 3).trim
-    val docs = (0L until 100L).map { i =>
-      val text =
-        if (i == 40L || i == 95L) payload
-        else s"asset $i " + (s"u${i}x" * 20) + " trailing content to clear the 64-char floor"
-      (i, text, text.length.toLong)
-    }.toDF("doc_id", "text", "n_chars")
-    docs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val before = MultimodalQueries.mm7PhashDelta(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val home0 = MultimodalQueries.ensurePhashIndex(spark, tmp)
-    val home1 = MultimodalQueries.compactPhashIndex(spark, tmp)
-    assert(home1.getFileName.toString.endsWith("_c99"))
-    assert(java.nio.file.Files.exists(home0.resolve("_SUPERSEDED")),
-      "the superseded generation is stamped — a concurrent reader survives the cycle")
-    graft.operators.PersistedIndex.sweepSuperseded(home1, tmp, 0L)
-    assert(!java.nio.file.Files.exists(home0), "the stamped generation sweeps once the grace elapses")
-    assert(MultimodalQueries.ensurePhashIndex(spark, tmp) === home1, "resolution re-points")
-    // the straddling near-pair's counts now live in the persisted artifact
-    val counts = spark.read.parquet(home1.resolve("rows").toString).collect()
-      .map(r => r.getLong(0) -> r.getLong(3)).toMap
-    assert(counts(40L) >= 1L && counts(95L) >= 1L)
-    val after = MultimodalQueries.mm7PhashDelta(spark, tmp).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(after === before, "compaction must be invisible to the served counts")
-    assert(MultimodalQueries.compactPhashIndex(spark, tmp) === home1, "no-op when drained")
   }
 
   test("kg6: merged counts equal a full rebuild; base is never re-matched") {

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.CdcRules
+import graft.streaming.IndexMaintenance
 
 /** Round-16 pins: the shared CdcRules module and the EXPUNGE-DELETES
   * compaction cycle (VERDICT r15 #2/#3) across the non-postings families
@@ -59,7 +60,7 @@ class R16QueriesSpec extends SparkSpec {
     val before = DedupQueries.dd20TombstoneNeardup(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(before.map(p => (p._1, p._2)).toSet === Set((10L, 50L), (10L, 120L), (50L, 120L)))
-    val cdcHome = DedupQueries.compactCdcLshIndex(spark, tmp)
+    val cdcHome = IndexMaintenance.compactCdc(spark, tmp, DedupQueries.LshMaintenance)
     assert(cdcHome.getFileName.toString.endsWith("_cdc117"))
     // dead signatures and dead-touching pairs PHYSICALLY left
     val sigIds = spark.read.parquet(cdcHome.resolve("sigs").toString)
@@ -80,7 +81,7 @@ class R16QueriesSpec extends SparkSpec {
     val face = DedupQueries.dd21ExpungedNeardup(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(face === before)
-    assert(DedupQueries.compactCdcLshIndex(spark, tmp) === cdcHome, "refold is a no-op")
+    assert(IndexMaintenance.compactCdc(spark, tmp, DedupQueries.LshMaintenance) === cdcHome, "refold is a no-op")
   }
 
   test("dd20 ∘ plain compaction: the feed stays corpus-pinned, serve byte-identical") {
@@ -100,7 +101,7 @@ class R16QueriesSpec extends SparkSpec {
     val before = DedupQueries.dd20TombstoneNeardup(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(before.map(p => (p._1, p._2)).toSet === Set((10L, 50L), (10L, 124L), (50L, 124L)))
-    DedupQueries.compactLshIndex(spark, tmp)
+    IndexMaintenance.foldAppends(spark, tmp, DedupQueries.LshMaintenance)
     val after = DedupQueries.dd20TombstoneNeardup(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(after === before,
@@ -124,7 +125,7 @@ class R16QueriesSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val before = MatchQueries.kg7TombstoneGraph(spark, tmp).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
-    val cdcHome = MatchQueries.compactCdcKgIndex(spark, tmp)
+    val cdcHome = IndexMaintenance.compactCdc(spark, tmp, MatchQueries.KgMaintenance)
     assert(cdcHome.getFileName.toString.endsWith("_cdc117"))
     val coPairs = spark.read.parquet(cdcHome.resolve("co").toString)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
@@ -146,7 +147,7 @@ class R16QueriesSpec extends SparkSpec {
     val face = MatchQueries.kg8ExpungedGraph(spark, tmp).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
     assert(face === before)
-    assert(MatchQueries.compactCdcKgIndex(spark, tmp) === cdcHome, "refold is a no-op")
+    assert(IndexMaintenance.compactCdc(spark, tmp, MatchQueries.KgMaintenance) === cdcHome, "refold is a no-op")
   }
 
   test("ss10 ∘ CDC-expunge: dead vectors leave the cells, updated vectors re-assigned, serve identical") {
@@ -164,7 +165,7 @@ class R16QueriesSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val before = SimilarityQueries.ss10TombstoneProbe(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
-    val cdcHome = SimilarityQueries.compactCdcIvfIndex(spark, tmp)
+    val cdcHome = IndexMaintenance.compactCdc(spark, tmp, SimilarityQueries.IvfMaintenance)
     assert(cdcHome.getFileName.toString.endsWith("_cdc90"))
     val cells = spark.read.parquet(cdcHome.resolve("cells").toString)
       .select("vec_id", "embedding").collect()
@@ -182,7 +183,7 @@ class R16QueriesSpec extends SparkSpec {
     val face = SimilarityQueries.ss12ExpungedProbe(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
     assert(face === before)
-    assert(SimilarityQueries.compactCdcIvfIndex(spark, tmp) === cdcHome, "refold is a no-op")
+    assert(IndexMaintenance.compactCdc(spark, tmp, SimilarityQueries.IvfMaintenance) === cdcHome, "refold is a no-op")
   }
 
   test("shouldCompact: fires strictly ABOVE theta, never at it, never on an empty serving set") {
@@ -235,7 +236,7 @@ class R16QueriesSpec extends SparkSpec {
     val (b0, t0, f0) = census(base)
     assert((b0, t0, f0) === (118L, 18L, 21L), "the fixture census (watermark 117)")
     assert(PersistedIndex.shouldCompact(b0, t0, f0), "32% in flight must fire the policy")
-    val folded = TextQueries.compactCdcPostingsIndex(spark, tmp)
+    val folded = IndexMaintenance.compactCdc(spark, tmp, IndexMaintenance.Postings)
     val (b1, t1, f1) = census(folded)
     assert((t1, f1) === (0L, 0L), "the fold drains the in-flight set")
     assert(b1 === b0 - t0 + f0, "the fold preserved the serving census")
@@ -264,7 +265,9 @@ class R16QueriesSpec extends SparkSpec {
         (91L until 100L).map(i => (i, "a", text(i))) ++
         Seq((12L, "s", null: String))
       ).toDF("doc_id", "op", "payload")
-    val got = TextQueries.feedServe(spark, home, feed).collect()
+    val (dead, fresh) = CdcRules.feedFrames(feed, "doc_id", "text",
+      graft.operators.PersistedIndex.readSplit(spark, home))
+    val got = IndexMaintenance.Postings.serve(spark, tmpA, home, dead, fresh).collect()
       .map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2))).toSeq
     // expected: all-docs BM25 over the hand-materialized post-change corpus
     val tmpB = java.nio.file.Files.createTempDirectory("feedB").toString
@@ -402,7 +405,7 @@ class R16QueriesSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val before = MultimodalQueries.mm8TombstonePhash(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    val cdcHome = MultimodalQueries.compactCdcPhashIndex(spark, tmp)
+    val cdcHome = IndexMaintenance.compactCdc(spark, tmp, MultimodalQueries.PhashMaintenance)
     assert(cdcHome.getFileName.toString.endsWith("_cdc117"))
     val sigIds = spark.read.parquet(cdcHome.resolve("rows").toString)
       .select("asset_id").collect().map(_.getLong(0)).toSet
@@ -421,6 +424,6 @@ class R16QueriesSpec extends SparkSpec {
     val face = MultimodalQueries.mm9ExpungedPhash(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
     assert(face === before)
-    assert(MultimodalQueries.compactCdcPhashIndex(spark, tmp) === cdcHome, "refold is a no-op")
+    assert(IndexMaintenance.compactCdc(spark, tmp, MultimodalQueries.PhashMaintenance) === cdcHome, "refold is a no-op")
   }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.streaming.IndexMaintenance
 
 /** Invariant checks for the r9 retrieval faces beyond the DuckDB replay:
   * PRF expansion must widen, never replace, the base ranking, and hybrid
@@ -183,46 +184,6 @@ class RetrievalSpec extends SparkSpec {
     assert(top.map(_.getLong(0)).contains(40L), "base hits must still be served")
   }
 
-  test("compaction: probe byte-identical, delta census 0, superseded generation swept") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    // the ir10fix corpus: ids 0..99, watermark 90, best match arrives in
-    // the delta — compaction folds it into the snapshot
-    val tmp = java.nio.file.Files.createTempDirectory("ir10cmp").toString
-    val docs = (0L until 100L).map { i =>
-      val text =
-        if (i == 95L) "needle needle needle"
-        else if (i == 40L) "needle pad pad"
-        else "pad pad pad"
-      (i, text, text.length.toLong)
-    }.toDF("doc_id", "text", "n_chars")
-    docs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val (res0, split0) = TextQueries.ir10Internals(spark, tmp, Seq("needle"))
-    assert(split0 === 90L)
-    val before = res0.collect().map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2))).toSeq
-    val home0 = TextQueries.ensureBasePostingsIndex(spark, tmp)
-    val home1 = TextQueries.compactBasePostingsIndex(spark, tmp)
-    assert(home1.getFileName.toString.endsWith("_c99"),
-      "the new generation is keyed by the folded-in watermark")
-    assert(java.nio.file.Files.exists(home0.resolve("_SUPERSEDED")),
-      "the superseded generation is stamped — a concurrent reader survives the cycle")
-    graft.operators.PersistedIndex.sweepSuperseded(home1, tmp, 0L)
-    assert(!java.nio.file.Files.exists(home0), "the stamped generation sweeps once the grace elapses")
-    assert(TextQueries.ensureBasePostingsIndex(spark, tmp) === home1,
-      "resolution must re-point at the compacted snapshot — e2e7's audit reads through this")
-    assert(graft.operators.PersistedIndex.readSplit(spark, home1) === 99L)
-    // the delta census (e2e7's postings-row arithmetic) reads 0 in flight
-    assert(spark.read.parquet(s"$tmp/documents.parquet")
-      .filter(col("doc_id") > 99L).count() === 0L)
-    // segment merge is answer-invariant: the served top-k is byte-identical
-    val (res1, split1) = TextQueries.ir10Internals(spark, tmp, Seq("needle"))
-    assert(split1 === 99L)
-    val after = res1.collect().map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2))).toSeq
-    assert(after === before)
-    // compacting an already-compacted index with nothing in flight is a no-op
-    assert(TextQueries.compactBasePostingsIndex(spark, tmp) === home1)
-  }
-
   test("ir14 fixture: deleted doc vanishes, updated doc's old tokens stop matching, delta doc wins") {
     import spark.implicits._
     // ids 0..129 → watermark 117. The pre-change WINNER (doc 20, 20%13==7)
@@ -302,7 +263,7 @@ class RetrievalSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2))).toSeq
     assert(beforeRows.filter(_._3 > 0L).map(_._1).contains(124L),
       "pre-fold, doc 124 is an ordinary append and serves")
-    TextQueries.compactBasePostingsIndex(spark, tmpA)
+    IndexMaintenance.foldAppends(spark, tmpA, IndexMaintenance.Postings)
     val (res, split) = TextQueries.ir14Internals(spark, tmpA, TextQueries.RetrievalQTerms)
     assert(split === 117L, "the feed watermark is corpus-derived, not the snapshot's")
     val got = res.collect()
@@ -327,7 +288,7 @@ class RetrievalSpec extends SparkSpec {
       .coalesce(1).write.mode("overwrite").parquet(s"$tmpA/documents.parquet")
     val before = TextQueries.ir14Internals(spark, tmpA, TextQueries.RetrievalQTerms)._1
       .collect().map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2))).toSeq
-    val cdcHome = TextQueries.compactCdcPostingsIndex(spark, tmpA)
+    val cdcHome = IndexMaintenance.compactCdc(spark, tmpA, IndexMaintenance.Postings)
     assert(cdcHome.getFileName.toString.endsWith("_cdc117"),
       "the expunged generation is keyed by the folded feed watermark")
     // dead and updated-old rows PHYSICALLY left the artifacts; the
@@ -356,7 +317,7 @@ class RetrievalSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getAs[Number](1).longValue(), r.getLong(2))).toSeq
     assert(faceRows === before)
     // compacting again is a no-op (same feed watermark → same generation)
-    assert(TextQueries.compactCdcPostingsIndex(spark, tmpA) === cdcHome)
+    assert(IndexMaintenance.compactCdc(spark, tmpA, IndexMaintenance.Postings) === cdcHome)
   }
 
   test("ir17: snippet text fetch is pushed to ≤ k docs; windows contain the phrase") {
@@ -405,7 +366,7 @@ class RetrievalSpec extends SparkSpec {
     assert(got === Seq((30L, 1L, 2L), (41L, 1L, 2L), (120L, 1L, 1L)),
       "survivor at pos 2, the update-created match ('y table scan x') at pos 2, the delta doc at pos 1")
     // expunge: dead lists leave, serve goes persisted-only, answer invariant
-    val cdcHome = TextQueries.compactCdcPosIndex(spark, tmp)
+    val cdcHome = IndexMaintenance.compactCdc(spark, tmp, TextQueries.PositionsMaintenance)
     assert(cdcHome.getFileName.toString.endsWith("_cdc117"))
     val docsIn = spark.read.parquet(cdcHome.resolve("positions").toString)
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
@@ -418,7 +379,7 @@ class RetrievalSpec extends SparkSpec {
     val face = TextQueries.ir18bExpungedPhrase(spark, tmp).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(face === got)
-    assert(TextQueries.compactCdcPosIndex(spark, tmp) === cdcHome, "refold is a no-op")
+    assert(IndexMaintenance.compactCdc(spark, tmp, TextQueries.PositionsMaintenance) === cdcHome, "refold is a no-op")
   }
 
   test("ir11: phrase matches from positional postings equal a brute-force text scan") {
