@@ -158,21 +158,27 @@ object PersistedIndex {
   }
 
   /** Grace period between a home being superseded and its physical
-    * deletion (VERDICT r16 #7): deleting immediately after the new
-    * publish would yank files out from under a SECOND process mid-read
-    * of the old generation (FileNotFoundException halfway through its
-    * scan). Ten minutes bounds any reasonable probe; a reader that
-    * resolved a home gets at least this long to finish with it.
-    * Overridable via -Dgraft.sweep.grace.ms ONLY so the cross-process
-    * maintenance harness (scripts/crossproc_maintenance.sh) can compress
-    * real deletions into a minutes-long run while still exceeding its
-    * probes' duration; production keeps the default. A 10 s FLOOR is
-    * enforced on the override (ADVICE r19): a launch misconfigured with a
-    * tiny/zero value must not silently disable the read-grace window that
-    * keeps sweeps from yanking files out from under a concurrent reader —
-    * the harness's 30 s setting clears the floor. */
-  val SweepGraceMs: Long =
-    sys.props.get("graft.sweep.grace.ms").map(v => math.max(v.toLong, 10000L))
+    * deletion: deleting immediately after the new publish would yank
+    * files out from under a SECOND process mid-read of the old generation
+    * (FileNotFoundException halfway through its scan). Ten minutes bounds
+    * any reasonable probe; a reader that resolved a home gets at least
+    * this long to finish with it. Overridable via -Dgraft.sweep.grace.ms
+    * ONLY so the cross-process maintenance harness
+    * (scripts/crossproc_maintenance.sh) can compress real deletions into
+    * a minutes-long run while still exceeding its probes' duration;
+    * production keeps the default. See [[sweepGraceMsFrom]]. */
+  val SweepGraceMs: Long = sweepGraceMsFrom(sys.props.get("graft.sweep.grace.ms"))
+
+  /** The [[SweepGraceMs]] a knob value selects: an integer is floored at
+    * 10 s — a launch misconfigured with a tiny/zero value must not
+    * silently disable the read-grace window that keeps sweeps from
+    * yanking files out from under a concurrent reader (the harness's
+    * 30 s setting clears the floor); an absent or malformed value selects
+    * the ten-minute default. Never throws — this runs in the object's
+    * initializer, where an exception would make every later
+    * `PersistedIndex` call in the JVM fail. */
+  private[graft] def sweepGraceMsFrom(v: Option[String]): Long =
+    v.flatMap(_.trim.toLongOption).map(math.max(_, 10000L))
       .getOrElse(10L * 60L * 1000L)
 
   /** Remove COMPLETE homes under `current`'s parent that serve the same
@@ -452,6 +458,23 @@ object PersistedIndex {
     * cached per published home). */
   def readSplit(s: SparkSession, home: Path): Long =
     statsRow(s, home).getAs[Long]("split_id")
+
+  /** Hash-bucket count for a store of `n` rows: ~80 rows a bucket (a
+    * bucket-pruned read stays roughly constant in size as the store
+    * grows), at least 16 (a small store still prunes) and at most `cap`
+    * (partition discovery pays per directory). A family records the count
+    * in its `stats` row as `n_buckets` ([[recordedBuckets]]). */
+  def sizedBuckets(n: Long, cap: Long): Long =
+    math.max(16L, math.min(cap, (n + 79L) / 80L))
+
+  /** The bucket modulus a home was built with: its `stats` row's
+    * `n_buckets`, or `legacy` — the fixed count its family wrote before
+    * the column was recorded. */
+  def recordedBuckets(s: SparkSession, home: Path, legacy: Long): Long = {
+    val r = statsRow(s, home)
+    if (r.schema.fieldNames.contains("n_buckets")) r.getAs[Long]("n_buckets")
+    else legacy
+  }
 
   /** [[splitStats]] with the FOLD-COMPLETE marker: written by append-fold
     * compactions whose folded watermark is the corpus MAX id. A home's

@@ -969,57 +969,88 @@ object DedupQueries {
   private def lshFp(dir: String): String =
     "v2_" + graft.operators.PersistedIndex.tableFingerprint(dir, "documents")
 
-  /** Hive-partition count of the `bands` artifact, and the bucket of one
-    * (band, key) row — a deterministic pure function of the join key, so a
-    * serve can compute its delta's touched buckets and read ONLY those
-    * partitions (PartitionFilters, no data IO outside them). 256 keeps
-    * directory cardinality modest (guide §6) while a crawl-window delta
-    * touches ≪ 256 of them at scale. */
+  /** The `bands` modulus cap, and the modulus of every home whose `stats`
+    * row lacks `n_buckets` (all such homes were written 256-way and serve
+    * with it, so their fingerprint stands). */
   private val LshBandBuckets = 256L
 
-  /** Pruned-path gate: engage the bucket-pruned bands read only when the
-    * delta touches at most this many buckets (measured break-even —
-    * see [[lshServe]]'s A/B note; at ≥ full coverage the pre-exploded
-    * artifact read loses to the in-memory re-band). r22 raised the r21
-    * gate (1/4) to 3/4 from a four-point sf100 ladder over the 4.5M-sig
-    * store (R22LshMicroAb, warm pass): 16/256 buckets 0.78 s pruned vs
-    * 3.25 s re-band (4.2×), 116/256 1.83 vs 3.91 (2.1×), 179/256 2.72 vs
-    * 3.31 (1.2×), 246/256 7.58 vs 5.41 (re-band wins) — crossover
-    * ≈ 200–230 of 256, so 192 keeps a margin below it. Both paths are
-    * bit-equal (spec-pinned), the gate only picks the cheaper plan. */
-  private val LshPrunedBucketMax = (LshBandBuckets * 3 / 4).toInt
+  /** Hive-partition count of a generation's `bands` artifact, sized with
+    * its signature store by the postings rule
+    * ([[graft.operators.PersistedIndex.sizedBuckets]], ~80 signatures a
+    * bucket, at least 16) under a cap of [[LshBandBuckets]]: a store of
+    * 20,480 signatures or more keeps the 256-way layout. Stores under
+    * 2,560 signatures get 16 directories: below Spark's parallel
+    * partition-discovery threshold (32), so no listing job runs. The
+    * modulus is recorded in `stats` as `n_buckets`; a serve derives it
+    * from there ([[lshBucketsOf]]), never from this rule. */
+  private[graft] def lshBucketsFor(nSigs: Long): Long =
+    graft.operators.PersistedIndex.sizedBuckets(nSigs, LshBandBuckets)
 
-  private def lshBandBucket(band: Column, key: Column): Column =
-    pmod(xxhash64(band, key), lit(LshBandBuckets))
+  /** The modulus a home's `bands` artifact was written with: its `stats`
+    * row's `n_buckets`, or [[LshBandBuckets]] for a row without it. */
+  private[graft] def lshBucketsOf(s: SparkSession, home: java.nio.file.Path): Long =
+    graft.operators.PersistedIndex.recordedBuckets(s, home, LshBandBuckets)
+
+  /** Pruned-path gate: the bucket-pruned `bands` read engages only when the
+    * delta touches at most 3/4 of the store's `nBuckets` buckets; above
+    * that the pre-exploded artifact read (4× the rows of the signature
+    * store) loses to the in-memory re-band. Measured on the 256-way sf100
+    * store (4.5M signatures, warm pass, pruned vs re-band): 16 touched
+    * 0.78 vs 3.25 s, 116 1.83 vs 3.91 s, 179 2.72 vs 3.31 s, 246 7.58 vs
+    * 5.41 s — crossover ≈ 200–230 of 256, so 3/4 keeps a margin below it.
+    * Both paths are bit-equal (spec-pinned); the gate only picks the
+    * cheaper plan. */
+  private def lshPrunedBucketMax(nBuckets: Long): Long = nBuckets * 3 / 4
+
+  /** The `bands` bucket of one (band, key) row under modulus `nBuckets` —
+    * a pure function of the join key, so a serve computes its delta's
+    * touched buckets with the home's own modulus and reads ONLY those
+    * partitions (PartitionFilters, no data IO outside them). */
+  private[queries] def lshBandBucket(band: Column, key: Column, nBuckets: Long): Column =
+    pmod(xxhash64(band, key), lit(nBuckets))
 
   private[queries] def ensureLshIndex(s: SparkSession, dir: String): java.nio.file.Path = {
     import graft.operators.PersistedIndex
     PersistedIndex.ensure("lsh_index", dir, lshFp(dir)) { tmp =>
       val split = PersistedIndex.idWatermark(t(s, dir, "documents"), "doc_id")
-      val baseSigs = Dedup.minhashSignatures(
-        t(s, dir, "documents").filter(col("doc_id") <= split), "doc_id", "text")
-      baseSigs.write.mode("overwrite").parquet(tmp.resolve("sigs").toString)
+      val nSigs = writeLshSigs(Dedup.minhashSignatures(
+        t(s, dir, "documents").filter(col("doc_id") <= split), "doc_id", "text"), tmp)
       Dedup.lshCandidatePairs(
           s.read.parquet(tmp.resolve("sigs").toString), "doc_id")
         .write.mode("overwrite").parquet(tmp.resolve("pairs").toString)
-      writeLshBands(s, tmp)
-      PersistedIndex.splitStats(s, split)
-        .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+      writeLshBands(s, tmp, nSigs, split)
     }
   }
 
-  /** The banded projection of a generation's `sigs`, persisted
-    * key-bucketed (one directory per [[lshBandBucket]] value, rows sorted
-    * by (band, key) for page-level stats pruning): the serve-time
+  /** Write a generation's `sigs` artifact and return its row count, observed
+    * on the write itself (no extra job; a re-count of the written store
+    * only if Spark reported none). */
+  private def writeLshSigs(sigs: DataFrame, tmp: java.nio.file.Path): Long = {
+    val out = tmp.resolve("sigs").toString
+    val (counted, rows) = graft.sources.Layout.withRowCount(sigs)
+    counted.write.mode("overwrite").parquet(out)
+    rows().getOrElse(sigs.sparkSession.read.parquet(out).count())
+  }
+
+  /** The banded projection of a generation's `sigs` (`nSigs` rows),
+    * persisted key-bucketed into [[lshBucketsFor]]`(nSigs)` directories
+    * (one per [[lshBandBucket]] value, rows sorted by (band, key) for
+    * page-level stats pruning), and the generation's `stats` row: the
+    * watermark `split_id` and that modulus as `n_buckets`. The serve-time
     * incremental pairing reads ONLY the delta's touched buckets instead of
-    * re-banding the whole store per probe — the dd23 3.48 s full-store
-    * scan at sf100 was exactly that re-band (VERDICT r20 #3). */
-  private def writeLshBands(s: SparkSession, tmp: java.nio.file.Path): Unit =
+    * re-banding the whole store per probe. */
+  private def writeLshBands(s: SparkSession, tmp: java.nio.file.Path,
+      nSigs: Long, split: Long): Unit = {
+    val nBk = lshBucketsFor(nSigs)
     graft.sources.Layout.writePartitioned(
       Dedup.bandedSignatures(
           s.read.parquet(tmp.resolve("sigs").toString), "doc_id")
-        .withColumn("kb", lshBandBucket(col("band"), col("key"))),
+        .withColumn("kb", lshBandBucket(col("band"), col("key"), nBk)),
       tmp.resolve("bands").toString, "kb", "band", "key")
+    graft.operators.PersistedIndex.splitStats(s, split)
+      .withColumn("n_buckets", lit(nBk))
+      .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+  }
 
   /** dd20_tombstone_neardup — tombstone/UPDATE-aware near-dup gating, ir14's
     * CDC semantics applied to the LSH family (VERDICT r13 #2 generalized
@@ -1057,30 +1088,26 @@ object DedupQueries {
     // (delta×base + both ends of delta×delta) — shingle/minhash once
     val freshSigs = graft.operators.CdcRules.pinDerived(s, fresh,
       Dedup.minhashSignatures(fresh, "doc_id", "text"))
-    // r21 (VERDICT r20 #3): when the delta's band keys touch FEW of the
-    // persisted `bands` artifact's buckets, the pairing's base side reads
-    // the artifact PRUNED to those buckets (PartitionFilters on `kb`) —
-    // O(touched buckets), not O(store); the bucket is a pure function of
-    // the (band, key) join key, so every matchable base row is in a kept
-    // bucket and pruning is exact. GATED adaptively: a crawl-sized window
-    // (5k ids → ~20k band keys) saturates any hive-scale bucket count, and
-    // a full 256/256-bucket artifact read measured SLOWER than re-banding
-    // the sig store in-memory (sf100 A/B: 4.95 s vs 4.14 s — the
-    // pre-exploded artifact is 4× the rows of the sig store), so pruning
-    // only engages when ≤ 1/4 of the buckets are touched — the streaming
-    // micro-batch scale, where it skips ≥ 3/4 of the store's bytes.
-    // A statically-empty fresh frame skips the pairing leg entirely (the
-    // expunged/post-fold serve stays a pure `pairs` read); a bands-less
-    // generation always re-bands.
+    // When the delta's band keys touch few of the persisted `bands`
+    // artifact's buckets, the pairing's base side reads the artifact
+    // PRUNED to those buckets (PartitionFilters on `kb`) — O(touched
+    // buckets), not O(store). The bucket is a pure function of the
+    // (band, key) join key under the home's recorded modulus, so every
+    // matchable base row is in a kept bucket and pruning is exact. A
+    // crawl-sized window saturates the buckets and re-bands instead
+    // ([[lshPrunedBucketMax]]). A statically-empty fresh frame skips the
+    // pairing leg entirely (the expunged/post-fold serve stays a pure
+    // `pairs` read); a bands-less generation always re-bands.
     val freshPairs =
       if (graft.operators.CdcRules.isKnownEmpty(fresh)) None
+      else if (!java.nio.file.Files.exists(home.resolve("bands")))
+        Some(Dedup.incrementalCandidatePairs(baseSigs, freshSigs, "doc_id"))
       else {
-        val kbs =
-          if (!java.nio.file.Files.exists(home.resolve("bands"))) Array.empty[Long]
-          else Dedup.bandedSignatures(freshSigs, "doc_id")
-            .select(lshBandBucket(col("band"), col("key")).as("kb"))
-            .distinct().collect().map(_.getLong(0)).sorted
-        if (kbs.nonEmpty && kbs.length <= LshPrunedBucketMax) {
+        val nBk = lshBucketsOf(s, home)
+        val kbs = Dedup.bandedSignatures(freshSigs, "doc_id")
+          .select(lshBandBucket(col("band"), col("key"), nBk).as("kb"))
+          .distinct().collect().map(_.getLong(0)).sorted
+        if (kbs.nonEmpty && kbs.length <= lshPrunedBucketMax(nBk)) {
           val baseBands = graft.operators.PersistedIndex.artifactFrame(s, home, "bands")
             .where(col("kb").isin(kbs.map(java.lang.Long.valueOf): _*))
             .select("doc_id", "band", "key")
@@ -1105,12 +1132,10 @@ object DedupQueries {
     * answer-invariant across it (dd18's union contract). */
   private[graft] def foldLshArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, dead: DataFrame, fresh: DataFrame, split: Long): Unit = {
-    import graft.operators.PersistedIndex
     val liveSigs = s.read.parquet(cur.resolve("sigs").toString)
       .join(dead, Seq("doc_id"), "left_anti")
     val freshSigs = Dedup.minhashSignatures(fresh, "doc_id", "text")
-    liveSigs.unionByName(freshSigs)
-      .write.mode("overwrite").parquet(tmp.resolve("sigs").toString)
+    val nSigs = writeLshSigs(liveSigs.unionByName(freshSigs), tmp)
     s.read.parquet(cur.resolve("pairs").toString)
       .join(dead.select(col("doc_id").as("id_a")), Seq("id_a"), "left_anti")
       .join(dead.select(col("doc_id").as("id_b")), Seq("id_b"), "left_anti")
@@ -1118,10 +1143,9 @@ object DedupQueries {
       .unionByName(Dedup.incrementalCandidatePairs(liveSigs, freshSigs, "doc_id"))
       .write.mode("overwrite").parquet(tmp.resolve("pairs").toString)
     // every folded generation republishes the key-bucketed bands over its
-    // own (post-fold) sigs, so the pruned serve works across generations
-    writeLshBands(s, tmp)
-    PersistedIndex.splitStats(s, split)
-      .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+    // own (post-fold) sigs, sized to them, so the pruned serve works
+    // across generations
+    writeLshBands(s, tmp, nSigs, split)
   }
 
   /** The LSH family's hooks into the streaming maintenance loop: probe =

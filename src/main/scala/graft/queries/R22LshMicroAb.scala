@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * session and artifacts:
   *   A: bucket-pruned `bands` artifact read (PartitionFilters on kb)
   *   B: full in-memory re-band of the surviving signature store
-  * and prints per-pass timings, the touched-bucket count (k of 256 —
-  * bytes skipped ≈ 1 − k/256 by uniform bucketing), and pair-set equality.
+  * and prints per-pass timings, the touched-bucket count (k of the
+  * home's recorded `bands` modulus n — bytes skipped ≈ 1 − k/n by
+  * uniform bucketing), and pair-set equality.
   *
   * `runMain graft.queries.R22LshMicroAb [windowIds]` at
   * $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS (Bench's session shape). */
@@ -38,10 +39,11 @@ object R22LshMicroAb {
       .select("doc_id", "text")
     val freshSigs = CdcRules.pinDerived(s, fresh,
       Dedup.minhashSignatures(fresh, "doc_id", "text"))
+    val nBk = DedupQueries.lshBucketsOf(s, home)
     val kbs = Dedup.bandedSignatures(freshSigs, "doc_id")
-      .select(pmod(xxhash64(col("band"), col("key")), lit(256L)).as("kb"))
+      .select(DedupQueries.lshBandBucket(col("band"), col("key"), nBk).as("kb"))
       .distinct().collect().map(_.getLong(0)).sorted
-    println(s"AB touched_buckets=${kbs.length}/256 window=$window split=$split")
+    println(s"AB touched_buckets=${kbs.length}/$nBk window=$window split=$split")
     val baseSigs = PersistedIndex.artifactFrame(s, home, "sigs")
     val baseBands = PersistedIndex.artifactFrame(s, home, "bands")
       .where(col("kb").isin(kbs.map(java.lang.Long.valueOf): _*))

@@ -2161,15 +2161,12 @@ object TextQueries {
     * files, cold ones stay single-file), and the serve read prunes by
     * bucket + term IN-list either way. */
   private[graft] def bucketCountFor(nDocs: Long): Long =
-    math.max(16L, math.min(1024L, (nDocs + 79L) / 80L))
+    graft.operators.PersistedIndex.sizedBuckets(nDocs, 1024L)
 
   /** The bucket modulus a home was BUILT with — from its stats artifact
     * (one bounded row); [[PostingsBuckets]] for pre-column rows. */
-  private[graft] def readBuckets(s: SparkSession, home: java.nio.file.Path): Long = {
-    val r = graft.operators.PersistedIndex.statsRow(s, home)
-    if (r.schema.fieldNames.contains("n_buckets")) r.getAs[Long]("n_buckets")
-    else PostingsBuckets.toLong
-  }
+  private[graft] def readBuckets(s: SparkSession, home: java.nio.file.Path): Long =
+    graft.operators.PersistedIndex.recordedBuckets(s, home, PostingsBuckets)
 
   /** ir9's skip-list block width in DOCS — 64, the Block-Max WAND
     * literature's granularity (Ding & Suel 2011 use 64–128), finer than
@@ -2482,8 +2479,7 @@ object TextQueries {
     // (bounded driver read, the ss2b partition-filter class)
     val st = graft.operators.PersistedIndex.statsRow(s, home)
     val (nB, dlB) = (st.getAs[Long]("n_docs"), st.getAs[Long]("total_dl"))
-    val nBk = if (st.schema.fieldNames.contains("n_buckets"))
-      st.getAs[Long]("n_buckets") else PostingsBuckets.toLong
+    val nBk = readBuckets(s, home)
     val qbuckets = qterms.map(q => detHash60Local(q) % nBk).distinct.sorted
     val baseTf3 = graft.operators.PersistedIndex.artifactFrame(s, home, "postings")
       .where(col("bucket").isin(qbuckets.map(java.lang.Long.valueOf): _*) &&
@@ -2887,8 +2883,7 @@ object TextQueries {
     val (k1, b) = (1.2, 0.75)
     val st = graft.operators.PersistedIndex.statsRow(s, home)
     val (nB, dlB) = (st.getAs[Long]("n_docs"), st.getAs[Long]("total_dl"))
-    val nBk = if (st.schema.fieldNames.contains("n_buckets"))
-      st.getAs[Long]("n_buckets") else PostingsBuckets.toLong
+    val nBk = readBuckets(s, home)
     val allTerms = batch.flatMap(_._2).distinct.sorted
     val qt = broadcast(
       batch.flatMap { case (qid, ts) => ts.map(w => (qid, w)) }

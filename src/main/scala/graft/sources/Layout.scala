@@ -44,34 +44,45 @@ object Layout {
     * files (and the per-file cap). 1M rows ≈ the ~128 MB file target for
     * postings-shaped rows; no bench-scale partition reaches it, so uniform
     * corpora keep the one-file-per-bucket layout byte-for-byte.
-    * Overridable (ops/bench knob — the skew-at-scale proof in BASELINE.md
-    * runs a 500k-doc Zipf corpus with a 100k gate so the hot census is
-    * non-empty at bench scale); floored at 64k so a misconfigured launch
-    * cannot shatter every partition into max-fan salt files. */
+    * Overridable by `-Dgraft.layout.rows.per.file` or `GRAFT_ROWS_PER_FILE`
+    * (the skew-at-scale proof in BASELINE.md runs a 500k-doc Zipf corpus
+    * with a 100k gate so the hot census is non-empty at bench scale); see
+    * [[rowsPerFileFrom]] for how a value is read. */
   private[graft] val RowsPerFile: Long =
-    sys.props.get("graft.layout.rows.per.file")
-      .orElse(sys.env.get("GRAFT_ROWS_PER_FILE"))
-      .map(v => math.max(v.toLong, 65536L)).getOrElse(1L << 20)
+    rowsPerFileFrom(sys.props.get("graft.layout.rows.per.file")
+      .orElse(sys.env.get("GRAFT_ROWS_PER_FILE")))
+
+  /** The [[RowsPerFile]] a knob value selects: an integer is floored at
+    * 64k, so a misconfigured launch cannot shatter every partition into
+    * max-fan salt files; an absent or malformed value selects the 1M
+    * default. Never throws — this runs in the object's initializer, where
+    * an exception would make every later `Layout` call in the JVM fail. */
+  private[graft] def rowsPerFileFrom(v: Option[String]): Long =
+    v.flatMap(_.trim.toLongOption).map(math.max(_, 65536L)).getOrElse(1L << 20)
+
   private[graft] val MaxFilesPerPartition = 32L
 
-  /** [[writePartitioned]] with the skew cap explicit (ADVICE r18): a
-    * Zipf-hot partition value — a stopword's postings bucket holds a
-    * corpus-sized posting list — would otherwise funnel through ONE write
-    * task (a build-time straggler at scale) and land as ONE file. Salting
-    * is COUNT-GATED and WRITE-THEN-SALVAGE (ADVICE r19): the build frame
-    * is evaluated exactly ONCE — clustered one-file-per-partition and
-    * written. The census then runs over the WRITTEN store with an empty
-    * read schema (parquet footer row counts, no column IO, exact by
-    * construction — no determinism assumption between two evaluations of
-    * an expensive frame). Only if hot partitions exist (> `rowsPerFile`
-    * rows) are THOSE partitions read back (partition-pruned scan), split
-    * into ceil(n / rowsPerFile) ≤ [[MaxFilesPerPartition]] files via a
-    * deterministic row-hash salt, written to a swap dir, and directory-
-    * swapped in (a metadata move on HDFS-likes). Cold partitions keep
-    * exactly the single-file layout, hot files each remain internally
-    * sorted on (partitionCol, sortCols), so page-level stats pruning is
-    * unchanged and row order stays answer-invariant (the serve kernels
-    * aggregate or top-k).
+  /** [[writePartitioned]] with the skew cap explicit: a Zipf-hot
+    * partition value — a stopword's postings bucket holds a corpus-sized
+    * posting list — would otherwise funnel through ONE write task (a
+    * build-time straggler at scale) and land as ONE file. Salting is
+    * COUNT-GATED and WRITE-THEN-SALVAGE: the build frame is evaluated
+    * exactly ONCE — clustered one-file-per-partition and written — with
+    * its row count observed on that write (no extra job). When the write
+    * observed at most `rowsPerFile` rows, no partition can be hot and the
+    * call returns without listing or reading the store back. Only when it
+    * observed more (or Spark reported no count) does the census run, over
+    * the WRITTEN store with an empty read schema (parquet footer row
+    * counts, no column IO, exact by construction — no determinism
+    * assumption between two evaluations of an expensive frame). Only if
+    * hot partitions exist (> `rowsPerFile` rows) are THOSE partitions read
+    * back (partition-pruned scan), split into ceil(n / rowsPerFile) ≤
+    * [[MaxFilesPerPartition]] files via a deterministic row-hash salt,
+    * written to a swap dir, and directory-swapped in (a metadata move on
+    * HDFS-likes). Cold partitions keep exactly the single-file layout, hot
+    * files each remain internally sorted on (partitionCol, sortCols), so
+    * page-level stats pruning is unchanged and row order stays
+    * answer-invariant (the serve kernels aggregate or top-k).
     *
     * Known limitation: the salt hashes the non-partition columns, so a hot
     * partition made of rows identical on every other column hashes to one
@@ -81,12 +92,15 @@ object Layout {
       rowsPerFile: Long, sortCols: String*): Unit = {
     import org.apache.spark.sql.functions._
     val s = df.sparkSession
-    df.repartition(col(partitionCol))
+    val (counted, rows) = withRowCount(df)
+    counted.repartition(col(partitionCol))
       .sortWithinPartitions((partitionCol +: sortCols).map(col): _*)
       .write
       .mode(SaveMode.Overwrite)
       .partitionBy(partitionCol)
       .parquet(path)
+    // no more rows in all than the cap: no partition can be hot
+    if (rows().exists(_ <= rowsPerFile)) return
     // Census as its own driver-side action over the WRITTEN store, NOT a
     // join against the build frame: a (df ⋈ counts-over-df) join on the
     // partition column makes Spark inject a dynamic-partition-pruning
@@ -141,6 +155,22 @@ object Layout {
         .parquet(swap)
       swapPartitionDirs(path, swap)
     }
+  }
+
+  /** `df` with its row count observed on whichever action runs it, and
+    * the reader of that count. The count rides the action's own job (a
+    * Spark `Observation`), so it costs no scan. The reader returns None
+    * when Spark reported no value — a plan the optimizer proved empty
+    * reports an empty row — or when none arrived within a minute (the
+    * report travels on the listener bus); callers then count themselves. */
+  private[graft] def withRowCount(df: DataFrame): (DataFrame, () => Option[Long]) = {
+    import org.apache.spark.sql.functions.{count, lit}
+    import scala.concurrent.Await
+    import scala.concurrent.duration._
+    val obs = org.apache.spark.sql.Observation()
+    (df.observe(obs, count(lit(1)).as("rows")),
+      () => scala.util.Try(Await.result(obs.future, 1.minute)).toOption
+        .filter(r => r.length == 1 && !r.isNullAt(0)).map(_.getLong(0)))
   }
 
   /** Move every `partitionCol=value` directory under `swap` into `path`,

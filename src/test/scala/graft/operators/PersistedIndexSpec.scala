@@ -192,4 +192,16 @@ class PersistedIndexSpec extends SparkSpec {
     val df = (0L to 100L).toDF("doc_id")
     assert(PersistedIndex.idWatermark(df, "doc_id") === 90L)
   }
+
+  test("sweepGraceMsFrom: a malformed knob falls back to the default, an integer keeps the 10 s floor") {
+    val default = 10L * 60L * 1000L
+    assert(PersistedIndex.sweepGraceMsFrom(None) === default)
+    Seq("", "abc", "30s", "1e5", "99999999999999999999").foreach { v =>
+      assert(PersistedIndex.sweepGraceMsFrom(Some(v)) === default, s"value '$v'")
+    }
+    assert(PersistedIndex.sweepGraceMsFrom(Some("0")) === 10000L)
+    assert(PersistedIndex.sweepGraceMsFrom(Some("-5")) === 10000L)
+    assert(PersistedIndex.sweepGraceMsFrom(Some("30000")) === 30000L)
+    assert(PersistedIndex.sweepGraceMsFrom(Some(" 30000 ")) === 30000L)
+  }
 }

@@ -197,4 +197,96 @@ class IndexLifecycleSpec extends SparkSpec {
     assert(fams ===
       (IndexMaintenance.Families.map(_.name) ++ Seq("positions_base", "postings_stream")).sorted)
   }
+
+  test("lshBucketsFor: ~80 signatures a bucket, at least 16, at most 256") {
+    assert(DedupQueries.lshBucketsFor(13L) === 16L)
+    assert(DedupQueries.lshBucketsFor(1280L) === 16L)
+    assert(DedupQueries.lshBucketsFor(1281L) === 17L)
+    assert(DedupQueries.lshBucketsFor(20480L) === 256L)
+    assert(DedupQueries.lshBucketsFor(4500000L) === 256L)
+  }
+
+  /** A home's recorded `bands` modulus, after checking the artifact's
+    * `kb=` directories all lie below it. */
+  private def checkedLshBuckets(home: Path): Long = {
+    import scala.jdk.CollectionConverters._
+    val n = spark.read.parquet(home.resolve("stats").toString)
+      .select("n_buckets").collect().head.getLong(0)
+    val kbs = Files.list(home.resolve("bands")).iterator().asScala
+      .map(_.getFileName.toString).filter(_.startsWith("kb="))
+      .map(_.stripPrefix("kb=").toLong).toSeq
+    assert(kbs.nonEmpty && kbs.forall(k => k >= 0L && k < n),
+      s"bands directories ${kbs.sorted} outside modulus $n")
+    n
+  }
+
+  test("lsh bands are sized to the signature store on build and fold (stats.n_buckets)") {
+    val tmp = Files.createTempDirectory("lshsized").toString
+    writeDocs(tmp, i => s"u${i}a u${i}b u${i}c u${i}d", n = 2000L)
+    val lsh = DedupQueries.LshMaintenance
+    val home0 = lsh.ensureBase(spark, tmp)
+    val n0 = lsh.baseCount(spark, home0)
+    assert(checkedLshBuckets(home0) === DedupQueries.lshBucketsFor(n0))
+    val home1 = IndexMaintenance.foldAppends(spark, tmp, lsh)
+    val n1 = lsh.baseCount(spark, home1)
+    assert(n1 > n0, "the fold adds the delta's signatures")
+    assert(checkedLshBuckets(home1) === DedupQueries.lshBucketsFor(n1))
+    assert(DedupQueries.lshBucketsFor(n1) > DedupQueries.lshBucketsFor(n0),
+      "fixture must move the modulus between generations")
+  }
+
+  test("lsh home whose stats lack n_buckets (256-way bands) serves bit-equal on the pruned and re-band paths") {
+    import graft.operators.Dedup
+    val tmp = Files.createTempDirectory("lshlegacy").toString
+    writeDocs(tmp, i =>
+      if (Set(10L, 20L, 40L).contains(i)) nearDup else s"u${i}a u${i}b u${i}c u${i}d",
+      n = 400L)
+    val lsh = DedupQueries.LshMaintenance
+    val sized = lsh.ensureBase(spark, tmp)
+    // the layout every home had before the modulus was recorded
+    val legacy = Files.createTempDirectory("lshlegacyhome").resolve("idx")
+    PersistedIndex.buildIfAbsent(legacy) { out =>
+      Seq("sigs", "pairs").foreach { a =>
+        spark.read.parquet(sized.resolve(a).toString)
+          .write.parquet(out.resolve(a).toString)
+      }
+      graft.sources.Layout.writePartitioned(
+        Dedup.bandedSignatures(spark.read.parquet(out.resolve("sigs").toString), "doc_id")
+          .withColumn("kb", DedupQueries.lshBandBucket(col("band"), col("key"), 256L)),
+        out.resolve("bands").toString, "kb", "band", "key")
+      PersistedIndex.splitStats(spark, PersistedIndex.readSplit(spark, sized))
+        .write.parquet(out.resolve("stats").toString)
+    }
+    assert(DedupQueries.lshBucketsOf(spark, legacy) === 256L)
+    assert(DedupQueries.lshBucketsOf(spark, sized) < 256L)
+    val dead = Seq(20L, 7L).toDF("doc_id")
+    def freshDocs(ids: Seq[Long]) =
+      ids.map(i => (i, if (i % 50L == 0L) nearDup else s"f${i}a f${i}b f${i}c f${i}d"))
+        .toDF("doc_id", "text")
+    // 4 band keys a document: 6 documents touch at most 24 of 256 buckets,
+    // 150 touch well over the 192 the pruned path allows
+    Seq("pruned" -> freshDocs(1000L until 1006L), "re-band" -> freshDocs(1000L until 1150L))
+      .foreach { case (path, fresh) =>
+        val served = lsh.serve(spark, tmp, legacy, dead, fresh)
+        val plan = served.queryExecution.executedPlan.toString
+        val pruned = plan.contains("PartitionFilters") && plan.contains("kb#")
+        assert(pruned === (path == "pruned"), s"$path serve took the other path:\n$plan")
+        val baseSigs = spark.read.parquet(legacy.resolve("sigs").toString)
+          .join(dead, Seq("doc_id"), "left_anti")
+        val want = spark.read.parquet(legacy.resolve("pairs").toString)
+          .join(dead.select(col("doc_id").as("id_a")), Seq("id_a"), "left_anti")
+          .join(dead.select(col("doc_id").as("id_b")), Seq("id_b"), "left_anti")
+          .select("id_a", "id_b", "shared_bands")
+          .unionByName(Dedup.incrementalCandidatePairs(baseSigs,
+            Dedup.minhashSignatures(fresh, "doc_id", "text"), "doc_id"))
+          .withColumnRenamed("id_a", "doc_a").withColumnRenamed("id_b", "doc_b")
+          .orderBy("doc_a", "doc_b").collect().map(_.toSeq).toSeq
+        val got = served.collect().map(_.toSeq).toSeq
+        assert(got === want, s"$path serve over the 256-way home must equal the re-band")
+        assert(got.exists(r => r(1) == 1000L || r(1) == 1050L || r(1) == 1100L),
+          s"$path fixture must pair a fresh document")
+        assert(lsh.serve(spark, tmp, sized, dead, fresh).collect().map(_.toSeq).toSeq === got,
+          s"$path serve must not depend on the home's modulus")
+      }
+  }
 }

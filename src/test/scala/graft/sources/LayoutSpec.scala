@@ -123,4 +123,75 @@ class LayoutSpec extends SparkSpec {
       .filter(col("prev") > col("word"))
     assert(unsorted.isEmpty, "a salted file lost its sort order")
   }
+
+  /** Jobs started by `body` on this thread, counted by a listener. A fence
+    * job run after the body is the last event the listener sees, so every
+    * earlier job start has been delivered once the fence shows up. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("layout-body", "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("layout-fence", "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!groups.contains("layout-fence") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("layout-fence"), "fence job never reached the listener")
+      groups.toArray.count(_ == "layout-body")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("capped write under the cap: no job after its write job, same files as a plain clustered write") {
+    import spark.implicits._
+    // 40 partitions: at and above 32 Spark lists a partitioned store with a
+    // job of its own, which a read-back census would start
+    val rows = (0 until 2000).map(i => ((i % 40).toLong, i.toLong, s"w${i % 97}"))
+      .toDF("bucket", "doc_id", "word")
+    val root = java.nio.file.Files.createTempDirectory("graft_nocensus")
+    val capped = root.resolve("capped").toString
+    val plain = root.resolve("plain").toString
+    val cappedJobs = jobsStartedBy(
+      Layout.writePartitionedCapped(rows, capped, "bucket", rowsPerFile = 2000, "word"))
+    val plainJobs = jobsStartedBy(
+      rows.repartition(col("bucket")).sortWithinPartitions("bucket", "word")
+        .write.mode("overwrite").partitionBy("bucket").parquet(plain))
+    assert(cappedJobs === plainJobs,
+      s"capped write ran $cappedJobs jobs, the clustered write alone $plainJobs")
+    // per partition directory: one file, holding the same rows in the same order
+    def layout(path: String): Map[String, Seq[Seq[Any]]] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.list(java.nio.file.Paths.get(path)).iterator().asScala
+        .filter(java.nio.file.Files.isDirectory(_)).map { d =>
+          val files = java.nio.file.Files.list(d).iterator().asScala
+            .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+          assert(files.size === 1, s"$d holds ${files.size} files")
+          d.getFileName.toString ->
+            spark.read.parquet(files.head.toString).collect().map(_.toSeq).toSeq
+        }.toMap
+    }
+    val got = layout(capped)
+    assert(got.size === 40)
+    assert(got === layout(plain))
+  }
+
+  test("rowsPerFileFrom: a malformed knob falls back to the default, an integer keeps the 64k floor") {
+    val default = 1L << 20
+    assert(Layout.rowsPerFileFrom(None) === default)
+    Seq("", "abc", "1M", "1e6", "99999999999999999999").foreach { v =>
+      assert(Layout.rowsPerFileFrom(Some(v)) === default, s"value '$v'")
+    }
+    assert(Layout.rowsPerFileFrom(Some("0")) === 65536L)
+    assert(Layout.rowsPerFileFrom(Some("1000")) === 65536L)
+    assert(Layout.rowsPerFileFrom(Some("100000")) === 100000L)
+    assert(Layout.rowsPerFileFrom(Some(" 100000 ")) === 100000L)
+  }
 }
