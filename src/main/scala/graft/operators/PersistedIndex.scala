@@ -214,24 +214,27 @@ object PersistedIndex {
       val n = p.getFileName.toString
       if (n != current.getFileName.toString && !n.startsWith(".") && isBuilt(p)) {
         val src = p.resolve("_SOURCE")
-        if (Files.exists(src) && Files.readString(src) == sourceDir) {
-          val mark = p.resolve("_SUPERSEDED")
-          if (!Files.exists(mark))
-            Files.writeString(mark, now.toString) // phase 1: stamp only
-          else {
-            val at =
-              try Files.readString(mark).trim.toLong
-              catch { case _: NumberFormatException =>
-                // a corrupted/partial stamp must RESTART the grace window,
-                // not parse as epoch 0 and delete immediately — that would
-                // be exactly the no-grace hazard the stamp exists to
-                // prevent (ADVICE r17)
-                Files.writeString(mark, now.toString); now }
-            if (now - at >= graceMs) deleteTree(p) // phase 2: grace elapsed
-          }
-        }
+        if (Files.exists(src) && Files.readString(src) == sourceDir) retire(p, now, graceMs)
       }
     } finally it.close()
+  }
+
+  /** One step of the two-phase retirement of a superseded directory: an
+    * unstamped `p` gets its `_SUPERSEDED` stamp (`now`, wall-clock
+    * millis); a stamped one is deleted once the stamp is at least
+    * `graceMs` old. An unparsable stamp RESTARTS the window — parsing it
+    * as epoch 0 would delete at once, the no-grace hazard the stamp
+    * exists to prevent. Shared by [[sweepSuperseded]], [[sweepStale]] and
+    * the streaming loop's segment sweep. */
+  private[graft] def retire(p: Path, now: Long, graceMs: Long): Unit = {
+    val mark = p.resolve("_SUPERSEDED")
+    if (!Files.exists(mark)) Files.writeString(mark, now.toString)
+    else {
+      val at =
+        try Files.readString(mark).trim.toLong
+        catch { case _: NumberFormatException => Files.writeString(mark, now.toString); now }
+      if (now - at >= graceMs) deleteTree(p)
+    }
   }
 
   /** Run `build` against a staging dir and atomically publish it as `home`,
@@ -297,20 +300,12 @@ object PersistedIndex {
       } else if (isBuilt(p) && Files.exists(p.resolve("_SOURCE")) &&
           !Files.isDirectory(Paths.get(Files.readString(p.resolve("_SOURCE")))))
         deleteTree(p)
-      else if (isBuilt(p) && Files.exists(p.resolve("_SUPERSEDED"))) {
-        // stamped stragglers (VERDICT r17 #7): sweepSuperseded only
-        // deletes a stamped home when a LATER publish for the same source
-        // sweeps again — a family that never publishes again would leave
-        // it forever. Any sibling build finishes the retirement once the
-        // grace window has elapsed; an unparsable stamp restarts it.
-        val now = System.currentTimeMillis()
-        val mark = p.resolve("_SUPERSEDED")
-        val at =
-          try Files.readString(mark).trim.toLong
-          catch { case _: NumberFormatException =>
-            Files.writeString(mark, now.toString); now }
-        if (now - at >= SweepGraceMs) deleteTree(p)
-      }
+      else if (isBuilt(p) && Files.exists(p.resolve("_SUPERSEDED")))
+        // stamped stragglers: sweepSuperseded only deletes a stamped home
+        // when a LATER publish for the same source sweeps again — a family
+        // that never publishes again would leave it forever. Any sibling
+        // build finishes the retirement once the grace window has elapsed.
+        retire(p, System.currentTimeMillis(), SweepGraceMs)
     } finally it.close()
   }
 

@@ -1052,31 +1052,13 @@ object DedupQueries {
       .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
   }
 
-  /** dd20_tombstone_neardup — tombstone/UPDATE-aware near-dup gating, ir14's
-    * CDC semantics applied to the LSH family (VERDICT r13 #2 generalized
-    * the way compaction was): the [[graft.operators.CdcRules]] feed —
-    * deletes drop their signatures AND every persisted pair touching
-    * them; updates (re-crawled with the token order REVERSED — old
-    * shingles stop matching, the doc itself stays shingl-able) are
-    * tombstone + re-sign; appends are dd18's delta. Serving:
-    *   sigs'  = (persisted sigs ⟕̸ tombstones) — the survivors
-    *   pairs' = (persisted pairs ⟕̸ tombstones on EITHER side)
-    *            ∪ incremental pairs of (updated ∪ delta) vs sigs'
-    * Candidate sets are exact, not approximate: a pair's shared-band
-    * count depends only on the two docs' own signatures, so dropping
-    * dead-touching rows and pairing the fresh segment reproduces dd3's
-    * full re-pair over the post-change corpus bit-for-bit (the oracle:
-    * dd3's SQL chain over the post-change corpus CTE). Only updated +
-    * delta rows are ever shingled at serve time. */
-  /** The shared LSH SERVING KERNEL over a persisted signature/pair
-    * snapshot: the `dead` id frame drops signatures AND every persisted
-    * pair touching them (id-only anti-joins), the `fresh` (doc_id, text)
-    * frame is the ONLY text shingled, and its pairs probe the surviving
-    * signature store. dd18 passes (∅, appends); dd20 the
-    * [[graft.operators.CdcRules]] change set; the expunged serve (∅, ∅)
-    * against a CDC-folded generation. */
-  private def lshServe(s: SparkSession, home: java.nio.file.Path,
-      dead: DataFrame, fresh: DataFrame): DataFrame = {
+  /** The LSH family's change-set merge: the post-change (sigs, pairs)
+    * frames of `home`. `dead` ids drop their signatures and every
+    * persisted pair touching them (id-only anti-joins); the `fresh` rows,
+    * the only text shingled, pair against the surviving store.
+    * [[lshServe]] orders the pairs; [[foldLshArtifacts]] writes both. */
+  private def mergeLsh(s: SparkSession, home: java.nio.file.Path,
+      dead: DataFrame, fresh: DataFrame): (DataFrame, DataFrame) = {
     val baseSigs = graft.operators.PersistedIndex.artifactFrame(s, home, "sigs")
       .join(dead, Seq("doc_id"), "left_anti")
     val basePairs = graft.operators.PersistedIndex.artifactFrame(s, home, "pairs")
@@ -1084,8 +1066,7 @@ object DedupQueries {
       .join(dead.select(col("doc_id").as("id_b")), Seq("id_b"), "left_anti")
       // equi-joins move their key to the front — restore the pair layout
       .select("id_a", "id_b", "shared_bands")
-    // the incremental pairing reads the fresh signatures on three sides
-    // (delta×base + both ends of delta×delta) — shingle/minhash once
+    // read by the pairing's three sides and the fold's `sigs` write
     val freshSigs = graft.operators.CdcRules.pinDerived(s, fresh,
       Dedup.minhashSignatures(fresh, "doc_id", "text"))
     // When the delta's band keys touch few of the persisted `bands`
@@ -1115,33 +1096,46 @@ object DedupQueries {
           Some(Dedup.incrementalCandidatePairsBanded(baseBands, freshSigs, "doc_id"))
         } else Some(Dedup.incrementalCandidatePairs(baseSigs, freshSigs, "doc_id"))
       }
-    freshPairs.fold(basePairs)(basePairs.unionByName(_))
-      .withColumnRenamed("id_a", "doc_a").withColumnRenamed("id_b", "doc_b")
-      .orderBy("doc_a", "doc_b")
+    (baseSigs.unionByName(freshSigs), freshPairs.fold(basePairs)(basePairs.unionByName(_)))
   }
 
+  /** The LSH serve: the [[mergeLsh]] pairs, ordered — the fold writes the
+    * frames this serve merges. dd18 passes (∅, appends); dd20 the CDC
+    * change set; the expunged serve (∅, ∅) a CDC-folded generation. */
+  private def lshServe(s: SparkSession, home: java.nio.file.Path,
+      dead: DataFrame, fresh: DataFrame): DataFrame =
+    mergeLsh(s, home, dead, fresh)._2
+      .withColumnRenamed("id_a", "doc_a").withColumnRenamed("id_b", "doc_b")
+      .orderBy("doc_a", "doc_b")
+
+  /** dd20_tombstone_neardup — tombstone/UPDATE-aware near-dup gating,
+    * ir14's CDC semantics applied to the LSH family: the
+    * [[graft.operators.CdcRules]] feed — deletes drop their signatures
+    * AND every persisted pair touching them; updates (re-crawled with the
+    * token order REVERSED — old shingles stop matching, the doc itself
+    * stays shingl-able) are tombstone + re-sign; appends are dd18's
+    * delta. Serving ([[mergeLsh]]):
+    *   sigs'  = (persisted sigs ⟕̸ tombstones) — the survivors
+    *   pairs' = (persisted pairs ⟕̸ tombstones on EITHER side)
+    *            ∪ incremental pairs of (updated ∪ delta) vs sigs'
+    * Candidate sets are exact, not approximate: a pair's shared-band
+    * count depends only on the two docs' own signatures, so dropping
+    * dead-touching rows and pairing the fresh segment reproduces dd3's
+    * full re-pair over the post-change corpus bit-for-bit (the oracle:
+    * dd3's SQL chain over the post-change corpus CTE). Only updated +
+    * delta rows are ever shingled at serve time. */
   def dd20TombstoneNeardup(s: SparkSession, dir: String): DataFrame =
     IndexMaintenance.serve(s, dir, LshMaintenance, Tombstones)
 
-  /** The LSH family's artifact rewrite with the change set passed in:
-    * dead and updated-old signatures AND every persisted pair touching
-    * them physically leave, the re-shingled fresh rows enter with their
-    * probe pairs. Base signatures and pairs are copied from parquet —
-    * an append fold just moves the delta-touching pairs from the
-    * probe-time term into the persisted term, so serving is
-    * answer-invariant across it (dd18's union contract). */
+  /** The LSH family's fold: it writes the [[mergeLsh]] frames — the pairs
+    * [[lshServe]] orders, and the surviving plus fresh signatures — as a
+    * new generation, so serving is answer-invariant across it (dd18's
+    * union contract). Base signatures and pairs are copied from parquet. */
   private[graft] def foldLshArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, dead: DataFrame, fresh: DataFrame, split: Long): Unit = {
-    val liveSigs = s.read.parquet(cur.resolve("sigs").toString)
-      .join(dead, Seq("doc_id"), "left_anti")
-    val freshSigs = Dedup.minhashSignatures(fresh, "doc_id", "text")
-    val nSigs = writeLshSigs(liveSigs.unionByName(freshSigs), tmp)
-    s.read.parquet(cur.resolve("pairs").toString)
-      .join(dead.select(col("doc_id").as("id_a")), Seq("id_a"), "left_anti")
-      .join(dead.select(col("doc_id").as("id_b")), Seq("id_b"), "left_anti")
-      .select("id_a", "id_b", "shared_bands")
-      .unionByName(Dedup.incrementalCandidatePairs(liveSigs, freshSigs, "doc_id"))
-      .write.mode("overwrite").parquet(tmp.resolve("pairs").toString)
+    val (sigs, pairs) = mergeLsh(s, cur, dead, fresh)
+    val nSigs = writeLshSigs(sigs, tmp)
+    pairs.write.mode("overwrite").parquet(tmp.resolve("pairs").toString)
     // every folded generation republishes the key-bucketed bands over its
     // own (post-fold) sigs, sized to them, so the pruned serve works
     // across generations

@@ -728,38 +728,39 @@ object MatchQueries {
   def kg6DeltaGraph(s: SparkSession, dir: String): DataFrame =
     IndexMaintenance.serve(s, dir, KgMaintenance, Appends)
 
-  /** The shared KG SERVING KERNEL over the persisted sufficient-statistic
-    * snapshot: the `dead` id frame subtracts its entity contributions via
-    * the persisted per-doc `ed` table (dead docs are NEVER re-matched),
-    * the `fresh` (doc_id, text) frame is the ONLY text that meets the
-    * Aho-Corasick matcher, and all three statistic families (per-pair co
-    * counts, per-entity doc counts, the census) merge by exact Long sums
-    * over disjoint doc sets. kg6 passes (∅, appends); kg7 the
-    * [[graft.operators.CdcRules]] change set; the expunged serve (∅, ∅)
-    * against a CDC-folded generation. */
-  private def kgServe(s: SparkSession, home: java.nio.file.Path,
-      dead: DataFrame, fresh: DataFrame): DataFrame = {
-    val st = graft.operators.PersistedIndex.statsRow(s, home)
-    val ndB = st.getAs[Long]("nd")
-    val edDead = graft.operators.CdcRules.pinDerived(s, dead,
-      graft.operators.PersistedIndex.artifactFrame(s, home, "ed")
-        .join(dead, Seq("doc_id"), "left_semi"))
+  /** The KG family's change-set merge: the post-change (ed, co, ent, nd)
+    * frames of `home` once the `dead` docs leave and the `fresh`
+    * (doc_id, text) rows enter. Dead docs' entity sets come from the
+    * persisted per-doc `ed` table (never re-matched); only the fresh rows
+    * meet the Aho-Corasick matcher. The three statistic families — per-pair
+    * co counts, per-entity doc counts, the census — merge by exact Long
+    * subtract/add over disjoint doc sets, and a pair or entity whose count
+    * reaches 0 drops out, as a rebuild would never emit it. The `nd`
+    * subtraction assumes dead ids were in the served corpus, which the
+    * feed op contract ('a' = never-served doc) guarantees. [[kgServe]]
+    * scores these frames and [[foldKgArtifacts]] writes them. */
+  private def mergeKg(s: SparkSession, home: java.nio.file.Path, dead: DataFrame,
+      fresh: DataFrame): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    import graft.operators.{CdcRules, PersistedIndex}
+    val ndB = PersistedIndex.statsRow(s, home).getAs[Long]("nd")
+    val edBase = PersistedIndex.artifactFrame(s, home, "ed")
+    val edDead = CdcRules.pinDerived(s, dead, edBase.join(dead, Seq("doc_id"), "left_semi"))
     val fm = FastMatch.matcher(gazetteer)
-    val edF = graft.operators.CdcRules.pinDerived(s, fresh,
+    val edF = CdcRules.pinDerived(s, fresh,
       fresh.select(col("doc_id"), explode(fm(col("text"))).as("m"))
         .select(col("doc_id"), col("m.matched").as("entity")).distinct())
     def coOf(ed: DataFrame, as: String) = ed.as("a").join(ed.as("b"), Seq("doc_id"))
       .filter(col("a.entity") < col("b.entity"))
       .groupBy(col("a.entity").as("e1"), col("b.entity").as("e2"))
       .agg(count(lit(1)).as(as))
-    val co = graft.operators.PersistedIndex.artifactFrame(s, home, "co")
+    val co = PersistedIndex.artifactFrame(s, home, "co")
       .join(coOf(edDead, "n_co_x"), Seq("e1", "e2"), "full_outer")
       .join(coOf(edF, "n_co_f"), Seq("e1", "e2"), "full_outer")
       .select(col("e1"), col("e2"),
         (coalesce(col("n_co"), lit(0L)) - coalesce(col("n_co_x"), lit(0L)) +
           coalesce(col("n_co_f"), lit(0L))).as("n_co"))
       .filter(col("n_co") > 0)
-    val ent = graft.operators.PersistedIndex.artifactFrame(s, home, "ent")
+    val ent = PersistedIndex.artifactFrame(s, home, "ent")
       .join(edDead.groupBy("entity").agg(count(lit(1)).as("n_docs_x")),
         Seq("entity"), "full_outer")
       .join(edF.groupBy("entity").agg(count(lit(1)).as("n_docs_f")),
@@ -771,6 +772,18 @@ object MatchQueries {
     val nd = dead.agg(count(lit(1)).as("n_x"))
       .crossJoin(fresh.agg(count(lit(1)).as("n_f")))
       .select((lit(ndB) - col("n_x") + col("n_f")).as("nd"))
+    (edBase.join(dead, Seq("doc_id"), "left_anti").unionByName(edF), co, ent, nd)
+  }
+
+  /** The KG serve: kg1's NPMI over the [[mergeKg]] frames of the
+    * persisted sufficient statistics plus a change set — the fold writes
+    * the frames this serve merges, so the answer is bit-equal to kg1 over
+    * the post-change corpus. kg6 passes (∅, appends); kg7 the
+    * [[graft.operators.CdcRules]] change set; the expunged serve (∅, ∅)
+    * against a CDC-folded generation. */
+  private def kgServe(s: SparkSession, home: java.nio.file.Path,
+      dead: DataFrame, fresh: DataFrame): DataFrame = {
+    val (_, co, ent, nd) = mergeKg(s, home, dead, fresh)
     val d = DoubleType
     val (pxy, px, py) = (
       col("n_co").cast(d) / col("nd").cast(d),
@@ -802,55 +815,17 @@ object MatchQueries {
   def kg7TombstoneGraph(s: SparkSession, dir: String): DataFrame =
     IndexMaintenance.serve(s, dir, KgMaintenance, Tombstones)
 
-  /** The KG family's artifact rewrite with the change set passed in:
-    * dead docs' rows leave the per-doc `ed` artifact and their count
-    * contributions are subtracted out of `co`/`ent`/`nd` by the same
-    * exact Long sums the serve uses (pairs/entities whose merged count
-    * reaches 0 drop out entirely); re-matched fresh docs fold in. Only
-    * the fresh rows meet the matcher — base statistics are copied from
-    * parquet, so an append fold is answer-invariant by kg6's
-    * additive-counts contract. Like [[kgServe]]'s census
-    * update, the `nd` subtraction assumes dead ids were in the served
-    * corpus — the feed op contract ('a' = never-served doc) guarantees
-    * it. */
+  /** The KG family's fold: it writes the [[mergeKg]] frames — the ones
+    * [[kgServe]] scores — as a new generation. Only the fresh rows meet
+    * the matcher; base statistics are copied from parquet, so an append
+    * fold is answer-invariant by kg6's additive-counts contract. */
   private[graft] def foldKgArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, dead: DataFrame, fresh: DataFrame, split: Long): Unit = {
-    import graft.operators.PersistedIndex
-    val ndB = PersistedIndex.statsRow(s, cur).getAs[Long]("nd")
-    val edBase = s.read.parquet(cur.resolve("ed").toString)
-    val edDead = edBase.join(dead, Seq("doc_id"), "left_semi").localCheckpoint(true)
-    val fm = FastMatch.matcher(gazetteer)
-    val edF = fresh.select(col("doc_id"), explode(fm(col("text"))).as("m"))
-      .select(col("doc_id"), col("m.matched").as("entity")).distinct()
-      .localCheckpoint(true)
-    edBase.join(dead, Seq("doc_id"), "left_anti").unionByName(edF)
-      .write.mode("overwrite").parquet(tmp.resolve("ed").toString)
-    def coOf(ed: DataFrame, as: String) = ed.as("a").join(ed.as("b"), Seq("doc_id"))
-      .filter(col("a.entity") < col("b.entity"))
-      .groupBy(col("a.entity").as("e1"), col("b.entity").as("e2"))
-      .agg(count(lit(1)).as(as))
-    s.read.parquet(cur.resolve("co").toString)
-      .join(coOf(edDead, "n_co_x"), Seq("e1", "e2"), "full_outer")
-      .join(coOf(edF, "n_co_f"), Seq("e1", "e2"), "full_outer")
-      .select(col("e1"), col("e2"),
-        (coalesce(col("n_co"), lit(0L)) - coalesce(col("n_co_x"), lit(0L)) +
-          coalesce(col("n_co_f"), lit(0L))).as("n_co"))
-      .filter(col("n_co") > 0)
-      .write.mode("overwrite").parquet(tmp.resolve("co").toString)
-    s.read.parquet(cur.resolve("ent").toString)
-      .join(edDead.groupBy("entity").agg(count(lit(1)).as("n_docs_x")),
-        Seq("entity"), "full_outer")
-      .join(edF.groupBy("entity").agg(count(lit(1)).as("n_docs_f")),
-        Seq("entity"), "full_outer")
-      .select(col("entity"),
-        (coalesce(col("n_docs"), lit(0L)) - coalesce(col("n_docs_x"), lit(0L)) +
-          coalesce(col("n_docs_f"), lit(0L))).as("n_docs"))
-      .filter(col("n_docs") > 0)
-      .write.mode("overwrite").parquet(tmp.resolve("ent").toString)
-    dead.agg(count(lit(1)).as("n_x"))
-      .crossJoin(fresh.agg(count(lit(1)).as("n_f")))
-      .select((lit(ndB) - col("n_x") + col("n_f")).as("nd"))
-      .withColumn("split_id", lit(split))
+    val (ed, co, ent, nd) = mergeKg(s, cur, dead, fresh)
+    ed.write.mode("overwrite").parquet(tmp.resolve("ed").toString)
+    co.write.mode("overwrite").parquet(tmp.resolve("co").toString)
+    ent.write.mode("overwrite").parquet(tmp.resolve("ent").toString)
+    nd.withColumn("split_id", lit(split))
       .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
   }
 

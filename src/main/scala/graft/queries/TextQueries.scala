@@ -1047,6 +1047,26 @@ object TextQueries {
   /** The fixed ad-hoc query of the retrieval family (ta13 / ir1). */
   private[graft] val RetrievalQTerms = Seq("data", "spark", "join")
 
+  /** One BM25 term score, k1 = 1.2 and b = 0.75:
+    * idf·tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)) with
+    * idf = ln((N − df + 0.5)/(df + 0.5) + 1). `tf`, `df`, `nDocs` and `dl`
+    * are integral columns cast to DOUBLE here; `avgdl` is already a double.
+    * Every Spark-side BM25 scores through this one expression tree, so
+    * the faces that must agree (ir6 ≡ ta13, the persisted and merged
+    * serves, the block-max bounds) evaluate bit-identical doubles. */
+  private[queries] def bm25Term(tf: Column, df: Column, nDocs: Column, dl: Column,
+      avgdl: Column): Column = {
+    val (k1, b) = (1.2, 0.75)
+    val (tfd, dfd) = (tf.cast(DoubleType), df.cast(DoubleType))
+    val idf = log((nDocs.cast(DoubleType) - dfd + 0.5) / (dfd + 0.5) + 1.0)
+    idf * (tfd * (k1 + 1.0)) /
+      (tfd + lit(k1) * (lit(1.0 - b) + lit(b) * (dl.cast(DoubleType) / avgdl)))
+  }
+
+  /** avgdl from a stats row's (n_docs, total_dl). */
+  private def statsAvgdl: Column =
+    col("total_dl").cast(DoubleType) / col("n_docs").cast(DoubleType)
+
   /** Per-document e6 BM25 of [[RetrievalQTerms]] over ALL documents — the
     * shared scoring core of ta13 (top-20 face), ir1/ir4 (fusion input),
     * ir2 (PRF base), and ir3's sparse arm (SimilarityQueries). One corpus
@@ -1061,7 +1081,6 @@ object TextQueries {
 
   private def bm25ScoresPlan(s: SparkSession, dir: String,
       qterms: Seq[String] = RetrievalQTerms): DataFrame = {
-    val (k1, b) = (1.2, 0.75)
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .withColumn("dl", size(col("tk")))
@@ -1069,13 +1088,8 @@ object TextQueries {
       qterms.map(q => sum(when(array_contains(col("tk"), q), 1L).otherwise(0L))
         .as(s"df_$q"))
     val stats = docs.agg(count(lit(1)).as("n_docs"), statCols: _*)
-    val avgdl = col("total_dl").cast(DoubleType) / col("n_docs").cast(DoubleType)
-    def termScore(q: String) = {
-      val tf = size(filter(col("tk"), x => x === lit(q))).cast(DoubleType)
-      val df = col(s"df_$q").cast(DoubleType)
-      val idf = log((col("n_docs").cast(DoubleType) - df + 0.5) / (df + 0.5) + 1.0)
-      idf * (tf * (k1 + 1.0)) / (tf + lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl").cast(DoubleType) / avgdl)))
-    }
+    def termScore(q: String) = bm25Term(size(filter(col("tk"), x => x === lit(q))),
+      col(s"df_$q"), col("n_docs"), col("dl"), statsAvgdl)
     val score = qterms.map(termScore).reduceLeft(_ + _)
     docs.crossJoin(broadcast(stats))
       .select(col("doc_id"), col("dl"),
@@ -1311,7 +1325,6 @@ object TextQueries {
     * corpus. */
   def a21Ndcg(s: SparkSession, dir: String): DataFrame = {
     val qterms = Seq("data", "spark", "join")
-    val (k1, b) = (1.2, 0.75)
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), tokens(col("text")).as("tk"))
       .withColumn("dl", size(col("tk")))
@@ -1319,13 +1332,8 @@ object TextQueries {
       qterms.map(q => sum(when(array_contains(col("tk"), q), 1L).otherwise(0L))
         .as(s"df_$q"))
     val stats = docs.agg(count(lit(1)).as("n_docs"), statCols: _*)
-    val avgdl = col("total_dl").cast(DoubleType) / col("n_docs").cast(DoubleType)
-    def termScore(q: String) = {
-      val tf = size(filter(col("tk"), x => x === lit(q))).cast(DoubleType)
-      val df = col(s"df_$q").cast(DoubleType)
-      val idf = log((col("n_docs").cast(DoubleType) - df + 0.5) / (df + 0.5) + 1.0)
-      idf * (tf * (k1 + 1.0)) / (tf + lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl").cast(DoubleType) / avgdl)))
-    }
+    def termScore(q: String) = bm25Term(size(filter(col("tk"), x => x === lit(q))),
+      col(s"df_$q"), col("n_docs"), col("dl"), statsAvgdl)
     def dcgAddend = round(lit(1e6) *
       (pow(lit(2.0), col("rel").cast(DoubleType)) - lit(1.0)) /
       (log(col("pos").cast(DoubleType) + lit(1.0)) / log(lit(2.0)))).cast(LongType)
@@ -1964,9 +1972,15 @@ object TextQueries {
     * — strictly cheaper than the re-scan+shuffle it replaces. */
   private[queries] def tfTable(s: SparkSession, dir: String): DataFrame =
     graft.operators.SessionShare.materialized(s, dir, "tf_table")(
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
-        .groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
+      termFreqs(t(s, dir, "documents")))
+
+  /** The (doc_id, word, tf) term frequencies of a (doc_id, text) frame:
+    * one explode + one (doc, word) count. The corpus table ([[tfTable]])
+    * and every fresh segment the postings family serves or folds
+    * tokenize through it. */
+  private def termFreqs(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(tokens(col("text"))).as("word"))
+      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
 
   def ta6Tfidf(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
@@ -2068,27 +2082,37 @@ object TextQueries {
     * the scored join keys on doc_id; top-20 is a bounded TakeOrdered. */
   def ir6PostingsBm25(s: SparkSession, dir: String): DataFrame = {
     val qterms = RetrievalQTerms
-    val (k1, b) = (1.2, 0.75)
     val tf = tfTable(s, dir)
     val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
     val tf3 = tf.filter(col("word").isInCollection(qterms))
+    val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_dl"))
+      .crossJoin(termDfs(tf3, qterms))
+    bm25TopK(tf3, dl, stats, qterms, 20)
+  }
+
+  /** One row of per-term document frequencies `df_<term>` over a
+    * (doc_id, word, tf) frame restricted to `qterms`. */
+  private def termDfs(tf3: DataFrame, qterms: Seq[String]): DataFrame = {
+    val dfCols = qterms.map(q => sum(when(col("word") === q, 1L).otherwise(0L)).as(s"df_$q"))
+    tf3.agg(dfCols.head, dfCols.tail: _*)
+  }
+
+  /** The top-`k` (doc_id, dl, bm25_e6) of `qterms` by (score desc,
+    * doc_id) over every document of `dl` (doc_id, dl): each term's tf
+    * pivots out of `tf3` (doc_id, word, tf; an absent term scores 0), the
+    * one-row `stats` carries n_docs, total_dl and each `df_<term>`. Term
+    * scores add in `qterms` order and round to e6 once — ir6's arithmetic,
+    * shared by every single-query BM25 face over an index. */
+  private def bm25TopK(tf3: DataFrame, dl: DataFrame, stats: DataFrame,
+      qterms: Seq[String], k: Int): DataFrame = {
     val pivotCols = qterms.map(q => max(when(col("word") === q, col("tf"))).as(s"tf_$q"))
     val pivoted = tf3.groupBy("doc_id").agg(pivotCols.head, pivotCols.tail: _*)
-    val dfCols = qterms.map(q => sum(when(col("word") === q, 1L).otherwise(0L)).as(s"df_$q"))
-    val dfRow = tf3.agg(dfCols.head, dfCols.tail: _*)
-    val stats = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_dl")).crossJoin(dfRow)
-    val avgdl = col("total_dl").cast(DoubleType) / col("n_docs").cast(DoubleType)
-    def termScore(q: String) = {
-      val tfd = coalesce(col(s"tf_$q"), lit(0L)).cast(DoubleType)
-      val dfd = col(s"df_$q").cast(DoubleType)
-      val idf = log((col("n_docs").cast(DoubleType) - dfd + 0.5) / (dfd + 0.5) + 1.0)
-      idf * (tfd * (k1 + 1.0)) / (tfd + lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl").cast(DoubleType) / avgdl)))
-    }
-    val score = qterms.map(termScore).reduceLeft(_ + _)
+    val score = qterms.map(q => bm25Term(coalesce(col(s"tf_$q"), lit(0L)), col(s"df_$q"),
+      col("n_docs"), col("dl"), statsAvgdl)).reduceLeft(_ + _)
     dl.join(pivoted, Seq("doc_id"), "left")
       .crossJoin(broadcast(stats))
       .select(col("doc_id"), col("dl"), round(score * 1e6).cast(LongType).as("bm25_e6"))
-      .orderBy(desc("bm25_e6"), col("doc_id")).limit(20)
+      .orderBy(desc("bm25_e6"), col("doc_id")).limit(k)
   }
 
   val ir6PostingsBm25Sql: String = {
@@ -2124,42 +2148,26 @@ object TextQueries {
        |ORDER BY bm25_e6 DESC, doc_id LIMIT 20""".stripMargin
   }
 
-  /** Hash-bucket count for ir6b's persisted postings layout. At test scale
-    * 64 directories; a production index raises this (or switches to
-    * [[graft.sources.Layout.writeBucketed]] — same pruned probe, bucket
-    * pruning instead of directory pruning) to keep each bucket ~128 MB. */
-  /** Legacy fixed bucket count — now only the READ default for stats rows
-    * that predate the `n_buckets` column (homes persisted by earlier
-    * builds were all written 64-way). New builds size the count with the
-    * corpus via [[bucketCountFor]]. */
+  /** The word-hash bucket modulus of postings and positions homes whose
+    * `stats` row predates the `n_buckets` column: every such home was
+    * written 64-way and serves with it. New builds size the count with
+    * the corpus ([[bucketCountFor]]). */
   private[graft] val PostingsBuckets = 64
 
-  /** Corpus-sized bucket count (VERDICT r16 #5): the postings/positions
-    * stores hive-partition by word-hash bucket, and with a FIXED count
-    * the per-bucket bytes grow linearly in the corpus — the probe's
-    * "bucket-pruned" read quietly becomes corpus-proportional (BASELINE
-    * attributed ir6b's 2.02× first decade to exactly this). Scale the
-    * count with the doc census at BUILD time (~80 docs per bucket keeps
-    * the pruned read roughly constant across decades — ~64-way at the
-    * sf0.1 anchor, so the change is bench-neutral there) and RECORD it in
-    * the stats artifact: probes derive the modulus from the artifact they
-    * serve ([[readBuckets]]), never from a constant, so a probe binary
-    * can never disagree with the layout it reads. Bounds: ≥16 keeps tiny
-    * spec corpora exercising real pruning; ≤1024 bounds the partition-
-    * DIRECTORY count — the first sf10 ladder run at 6250 buckets showed
-    * every positional/postings probe paying a uniform ~4.5 s of
-    * partition-discovery listing, dwarfing the pruned read it was meant
-    * to shrink (file-listing cost scales with dir count, data cost with
-    * per-bucket bytes; ~500 docs/bucket at the cap keeps both small,
-    * and [[graft.operators.PersistedIndex.artifactFrame]] amortizes the
-    * remaining listing to once per session). */
-  /** Bucket modulus by corpus size. Skew note (ADVICE r18): bucket keys
-    * are term hashes, so a Zipfian vocabulary concentrates one bucket with
-    * the stopword posting lists — the bucket COUNT cannot fix that.
-    * [[graft.sources.Layout.writePartitioned]] count-gates a file-level
-    * salt for exactly that case (hot directories split into ≤32 sorted
-    * files, cold ones stay single-file), and the serve read prunes by
-    * bucket + term IN-list either way. */
+  /** Bucket modulus of a postings or positions store over `nDocs`
+    * documents: ~80 documents a bucket, at least 16, at most 1024
+    * ([[graft.operators.PersistedIndex.sizedBuckets]]). With a fixed
+    * count the per-bucket bytes grow with the corpus and the "pruned"
+    * probe read becomes corpus-proportional; sized, it stays roughly
+    * constant. The floor keeps small corpora pruning; the cap bounds the
+    * partition directories a probe lists (an sf10 store at 6,250 buckets
+    * paid ~4.5 s of listing per probe). The count is recorded in the
+    * `stats` artifact and probes take the modulus from the home they
+    * read ([[readBuckets]]), never from this rule. Bucket keys are term
+    * hashes, so a Zipfian vocabulary still concentrates the stopword
+    * lists in one bucket — the count cannot fix that;
+    * [[graft.sources.Layout.writePartitioned]] salts such hot directories
+    * into up to 32 sorted files. */
   private[graft] def bucketCountFor(nDocs: Long): Long =
     graft.operators.PersistedIndex.sizedBuckets(nDocs, 1024L)
 
@@ -2186,30 +2194,6 @@ object TextQueries {
     java.lang.Long.parseLong(hex.substring(0, 15), 16)
   }
 
-  /** ir6b_persisted_postings — ir6 served from a PERSISTED index: the
-    * ss2b pattern applied to the BM25/postings family. ir5/ir6 prove the
-    * index-build and index-query operators but rebuild the posting lists
-    * per run; every production BM25 stack builds ONCE (offline) and serves
-    * every query from the persisted artifacts. Build-if-absent (under a
-    * corpus-fingerprinted staging dir, [[graft.operators.PersistedIndex]])
-    * writes three artifacts: `postings` — the (word, doc_id, tf) table
-    * hive-partitioned by a [[PostingsBuckets]]-way word-hash bucket, so a
-    * query's `bucket IN (…)` prunes directories at plan time (the
-    * word-partitioned pruned read ir6's scaladoc promises); `doclen` — the
-    * narrow (doc_id, dl) table BM25's length normalization needs; and
-    * `stats` — the one-row (n_docs, total_dl) corpus statistics.
-    *
-    * The probe plan scans ZERO corpus files: bucket ids for the literal
-    * query terms are computed driver-side ([[detHash60Local]] — no data
-    * touched, plan-time constants), the postings read prunes to ≤|terms|
-    * buckets, per-term df comes from the pruned postings, and the scoring
-    * replays ir6's double arithmetic over identical inputs in identical
-    * term order — so the e6 scores are bit-equal to ir6 (asserted in
-    * RetrievalSpec along with the no-corpus-scan plan shape; the oracle is
-    * ir6's SQL — the persisted detour is invisible to the answer). Probe
-    * cost is (pruned postings + doclen + one stats row), independent of
-    * vocabulary size and of any text column — the ~1× decade a served
-    * index should give. */
   /** Build-if-absent the persisted postings index and return its home —
     * shared by ir6b (serve) and ir9 (block-max pruned serve). Artifacts:
     * `postings` (word, doc_id, tf — hive-partitioned by word-hash
@@ -2223,7 +2207,6 @@ object TextQueries {
     * need) — bump it whenever artifacts change shape, or stale homes get
     * silently reused. */
   private[queries] def ensurePostingsIndex(s: SparkSession, dir: String): java.nio.file.Path = {
-    val (k1, b) = (1.2, 0.75)
     import graft.operators.PersistedIndex
     PersistedIndex.ensure("postings_index", dir,
       "v3_" + PersistedIndex.tableFingerprint(dir, "documents")) { tmp =>
@@ -2241,12 +2224,7 @@ object TextQueries {
       // round()ed final scores (Σ_t ceil(1e6·ts_t) ≥ round(1e6·Σ_t ts_t))
       val dfT = tf.groupBy("word").agg(count(lit(1)).as("df"))
       val st = dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_dl"))
-      val avgdl = col("total_dl").cast(DoubleType) / col("n_docs").cast(DoubleType)
-      val idf = log((col("n_docs").cast(DoubleType) - col("df").cast(DoubleType) + 0.5) /
-        (col("df").cast(DoubleType) + 0.5) + 1.0)
-      val ts = idf * (col("tf").cast(DoubleType) * (k1 + 1.0)) /
-        (col("tf").cast(DoubleType) + lit(k1) * (lit(1.0 - b) +
-          lit(b) * (col("dl").cast(DoubleType) / avgdl)))
+      val ts = bm25Term(col("tf"), col("df"), col("n_docs"), col("dl"), statsAvgdl)
       graft.sources.Layout.writePartitioned(
         tf.join(dl, Seq("doc_id")).join(dfT, Seq("word")).crossJoin(broadcast(st))
           .withColumn("ts_ub_e6", ceil(lit(1e6) * ts).cast(LongType))
@@ -2256,35 +2234,64 @@ object TextQueries {
     }
   }
 
-  def ir6bPersistedPostings(s: SparkSession, dir: String): DataFrame = {
-    val qterms = RetrievalQTerms
-    val (k1, b) = (1.2, 0.75)
-    val home = ensurePostingsIndex(s, dir)
-    // ---- probe path: persisted artifacts ONLY (no corpus scan below) ----
+  /** ir6b_persisted_postings — ir6 served from a PERSISTED index: the
+    * ss2b pattern applied to the BM25/postings family. ir5/ir6 prove the
+    * index-build and index-query operators but rebuild the posting lists
+    * per run; every production BM25 stack builds ONCE (offline) and serves
+    * every query from the persisted artifacts. Build-if-absent (under a
+    * corpus-fingerprinted staging dir, [[graft.operators.PersistedIndex]])
+    * writes the artifacts of [[ensurePostingsIndex]]: `postings` — the
+    * (word, doc_id, tf) table hive-partitioned by word-hash bucket, so a
+    * query's `bucket IN (…)` prunes directories at plan time (the
+    * word-partitioned pruned read ir6's scaladoc promises); `doclen` — the
+    * narrow (doc_id, dl) table BM25's length normalization needs; and
+    * `stats` — the one-row (n_docs, total_dl) corpus statistics.
+    * ir9 falls back to this exact plan ([[persistedBm25]]).
+    *
+    * The probe plan scans ZERO corpus files: bucket ids for the literal
+    * query terms are computed driver-side ([[detHash60Local]] — no data
+    * touched, plan-time constants), the postings read prunes to ≤|terms|
+    * buckets, per-term df comes from the pruned postings, and the scoring
+    * replays ir6's double arithmetic over identical inputs in identical
+    * term order — so the e6 scores are bit-equal to ir6 (asserted in
+    * RetrievalSpec along with the no-corpus-scan plan shape; the oracle is
+    * ir6's SQL — the persisted detour is invisible to the answer). Probe
+    * cost is (pruned postings + doclen + one stats row), independent of
+    * vocabulary size and of any text column — the ~1× decade a served
+    * index should give. */
+  def ir6bPersistedPostings(s: SparkSession, dir: String): DataFrame =
+    persistedBm25(s, ensurePostingsIndex(s, dir), RetrievalQTerms)
+
+  /** The `artifact` rows of a persisted word-bucketed store (postings,
+    * blockmax, positions) for `terms` only: the driver computes the
+    * terms' buckets under the home's recorded modulus, so the read lands
+    * as a `bucket IN (…)` PartitionFilter plus a pushed term filter. */
+  private def prunedArtifact(s: SparkSession, home: java.nio.file.Path,
+      artifact: String, terms: Seq[String]): DataFrame = {
     val nBk = readBuckets(s, home)
-    val qbuckets = qterms.map(q => detHash60Local(q) % nBk).distinct.sorted
-    val tf3 = graft.operators.PersistedIndex.artifactFrame(s, home, "postings")
+    val qbuckets = terms.map(q => detHash60Local(q) % nBk).distinct.sorted
+    graft.operators.PersistedIndex.artifactFrame(s, home, artifact)
       .where(col("bucket").isin(qbuckets.map(java.lang.Long.valueOf): _*) &&
-        col("word").isInCollection(qterms))
-      .select("doc_id", "word", "tf")
-    val dl = graft.operators.PersistedIndex.artifactFrame(s, home, "doclen")
-    val pivotCols = qterms.map(q => max(when(col("word") === q, col("tf"))).as(s"tf_$q"))
-    val pivoted = tf3.groupBy("doc_id").agg(pivotCols.head, pivotCols.tail: _*)
-    val dfCols = qterms.map(q => sum(when(col("word") === q, 1L).otherwise(0L)).as(s"df_$q"))
-    val stats = graft.operators.PersistedIndex.artifactFrame(s, home, "stats")
-      .crossJoin(tf3.agg(dfCols.head, dfCols.tail: _*))
-    val avgdl = col("total_dl").cast(DoubleType) / col("n_docs").cast(DoubleType)
-    def termScore(q: String) = {
-      val tfd = coalesce(col(s"tf_$q"), lit(0L)).cast(DoubleType)
-      val dfd = col(s"df_$q").cast(DoubleType)
-      val idf = log((col("n_docs").cast(DoubleType) - dfd + 0.5) / (dfd + 0.5) + 1.0)
-      idf * (tfd * (k1 + 1.0)) / (tfd + lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl").cast(DoubleType) / avgdl)))
-    }
-    val score = qterms.map(termScore).reduceLeft(_ + _)
-    dl.join(pivoted, Seq("doc_id"), "left")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("dl"), round(score * 1e6).cast(LongType).as("bm25_e6"))
-      .orderBy(desc("bm25_e6"), col("doc_id")).limit(20)
+        col("word").isInCollection(terms))
+  }
+
+  /** What BM25 over a persisted postings home reads for `qterms`: the
+    * bucket-pruned (doc_id, word, tf) rows, the `doclen` artifact, and
+    * the `stats` row widened with each term's df from the pruned rows. */
+  private def persistedTerms(s: SparkSession, home: java.nio.file.Path,
+      qterms: Seq[String]): (DataFrame, DataFrame, DataFrame) = {
+    val tf3 = prunedArtifact(s, home, "postings", qterms).select("doc_id", "word", "tf")
+    (tf3, graft.operators.PersistedIndex.artifactFrame(s, home, "doclen"),
+      graft.operators.PersistedIndex.artifactFrame(s, home, "stats")
+        .crossJoin(termDfs(tf3, qterms)))
+  }
+
+  /** ir6's top-20 scored from a persisted postings home — ir6b's plan and
+    * ir9's uncertified fallback. */
+  private def persistedBm25(s: SparkSession, home: java.nio.file.Path,
+      qterms: Seq[String]): DataFrame = {
+    val (tf3, dl, stats) = persistedTerms(s, home, qterms)
+    bm25TopK(tf3, dl, stats, qterms, 20)
   }
 
   /** ir9_blockmax_bm25 — Block-Max pruned BM25 (the Ding & Suel 2011
@@ -2337,67 +2344,34 @@ object TextQueries {
     * can measure real pruning and swap in selective query terms. */
   private[queries] def ir9Internals(s: SparkSession, dir: String,
       qterms: Seq[String]): (DataFrame, DataFrame, DataFrame) = {
-    val (k1, b) = (1.2, 0.75)
     val topK = 20
     val home = ensurePostingsIndex(s, dir)
-    val qbuckets = qterms.map(q => detHash60Local(q) % readBuckets(s, home))
-      .distinct.sorted
-    def prunedRead(path: String): DataFrame =
-      graft.operators.PersistedIndex.artifactFrame(s, home, path)
-        .where(col("bucket").isin(qbuckets.map(java.lang.Long.valueOf): _*) &&
-          col("word").isInCollection(qterms))
-    val tf3 = prunedRead("postings").select("doc_id", "word", "tf")
-    val dl = graft.operators.PersistedIndex.artifactFrame(s, home, "doclen")
-    val bounds = prunedRead("blockmax").groupBy("blk").agg(sum("ub_e6").as("bound_e6"))
-    val dfCols = qterms.map(q => sum(when(col("word") === q, 1L).otherwise(0L)).as(s"df_$q"))
-    val stats = graft.operators.PersistedIndex.artifactFrame(s, home, "stats")
-      .crossJoin(tf3.agg(dfCols.head, dfCols.tail: _*))
-    val avgdl = col("total_dl").cast(DoubleType) / col("n_docs").cast(DoubleType)
-    def termScore(q: String) = {
-      val tfd = coalesce(col(s"tf_$q"), lit(0L)).cast(DoubleType)
-      val dfd = col(s"df_$q").cast(DoubleType)
-      val idf = log((col("n_docs").cast(DoubleType) - dfd + 0.5) / (dfd + 0.5) + 1.0)
-      idf * (tfd * (k1 + 1.0)) / (tfd + lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl").cast(DoubleType) / avgdl)))
-    }
-    val score = qterms.map(termScore).reduceLeft(_ + _)
-    def scored(cands: DataFrame): DataFrame = {
-      val pivotCols = qterms.map(q => max(when(col("word") === q, col("tf"))).as(s"tf_$q"))
-      val pivoted = tf3.join(cands, Seq("doc_id"), "left_semi")
-        .groupBy("doc_id").agg(pivotCols.head, pivotCols.tail: _*)
-      dl.join(cands, Seq("doc_id"), "left_semi")
-        .join(pivoted, Seq("doc_id"), "left")
-        .crossJoin(broadcast(stats))
-        .select(col("doc_id"), col("dl"), round(score * 1e6).cast(LongType).as("bm25_e6"))
-    }
+    val (tf3, dl, stats) = persistedTerms(s, home, qterms)
+    val bounds = prunedArtifact(s, home, "blockmax", qterms)
+      .groupBy("blk").agg(sum("ub_e6").as("bound_e6"))
+    def scored(cands: DataFrame): DataFrame = bm25TopK(
+      tf3.join(cands, Seq("doc_id"), "left_semi"), dl.join(cands, Seq("doc_id"), "left_semi"),
+      stats, qterms, topK)
     // Fallback when the block-max precondition (≥ k docs carry a
     // query-term posting, so zero-score docs can never enter ir6's top-k)
     // cannot be certified from the seed block: score EVERY doc off the
-    // same persisted artifacts — ir6b's exact plan, so zero-score docs
-    // pad the top-k exactly as ir6's all-docs scoring does (ADVICE r13:
-    // the precondition was documented but never checked at runtime).
-    def fullScored: DataFrame = {
-      val pivotCols = qterms.map(q => max(when(col("word") === q, col("tf"))).as(s"tf_$q"))
-      val pivoted = tf3.groupBy("doc_id").agg(pivotCols.head, pivotCols.tail: _*)
-      dl.join(pivoted, Seq("doc_id"), "left")
-        .crossJoin(broadcast(stats))
-        .select(col("doc_id"), col("dl"), round(score * 1e6).cast(LongType).as("bm25_e6"))
-        .orderBy(desc("bm25_e6"), col("doc_id")).limit(topK)
-    }
+    // same persisted artifacts — ir6b's plan, so zero-score docs pad the
+    // top-k exactly as ir6's all-docs scoring does.
+    def fullScored: DataFrame = persistedBm25(s, home, qterms)
     val seedRow = bounds.orderBy(desc("bound_e6"), col("blk")).limit(1).collect()
     if (seedRow.isEmpty) return (fullScored, bounds, bounds)
     val seed = seedRow.head.getAs[Long]("blk")
     val seedDocs = tf3.filter(expr(s"doc_id div $Ir9Block") === seed)
       .select("doc_id").distinct()
     // θ = the k-th exact score inside the seed block (≤k-row collect)
-    val seedTop = scored(seedDocs).orderBy(desc("bm25_e6"), col("doc_id")).limit(topK).collect()
+    val seedTop = scored(seedDocs).collect()
     val theta = if (seedTop.isEmpty) 0L else seedTop.last.getAs[Long]("bm25_e6")
     if (!blockmaxCertified(seedTop.length, topK, theta)) return (fullScored, bounds, bounds)
     val kept = bounds.filter(col("bound_e6") >= theta)
     val candDocs = tf3.withColumn("blk", expr(s"doc_id div $Ir9Block"))
       .join(broadcast(kept.select("blk")), Seq("blk"), "left_semi")
       .select("doc_id").distinct()
-    val res = scored(candDocs).orderBy(desc("bm25_e6"), col("doc_id")).limit(topK)
-    (res, kept, bounds)
+    (scored(candDocs), kept, bounds)
   }
 
   /** ir10_delta_index — INCREMENTAL index maintenance: BM25 served from a
@@ -2462,96 +2436,81 @@ object TextQueries {
       .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
   }
 
-  /** The shared BM25 SERVING KERNEL over a persisted postings snapshot:
-    * base postings/doclen come bucket-pruned from the artifacts, the
-    * `dead` id frame leaves via anti-joins (column-pruned — no text bytes
-    * move), the `fresh` (doc_id, text) frame is the ONLY text tokenized,
-    * and the corpus statistics merge by exact Long sums (base − dead +
-    * fresh), so the answer is bit-equal to a full rebuild over
-    * (base ∖ dead) ∪ fresh. ir10 passes (∅, appends); ir14 passes the
-    * [[graft.operators.CdcRules]] change set; the expunged serve passes
-    * (∅, ∅) against a CDC-folded generation. */
-  private[graft] def bm25Serve(s: SparkSession, home: java.nio.file.Path,
-      dead: DataFrame, fresh: DataFrame, qterms: Seq[String],
-      freshTfShared: Option[DataFrame] = None): DataFrame = {
-    val (k1, b) = (1.2, 0.75)
-    // one-row persisted artifact: base stats + the snapshot watermark
-    // (bounded driver read, the ss2b partition-filter class)
+  /** The postings family's change-set merge: the post-change
+    * (postings, doclen, stats) frames of `home` once the `dead` ids leave
+    * and `freshTf` — the fresh rows' [[termFreqs]] — enters. `postings`
+    * (doc_id, word, tf, dl) is the home's base postings: bucket-pruned by
+    * a serve, whole by the fold. Document segments are
+    * disjoint, so postings and doclen merge as an anti-join plus a union
+    * and the one-row stats (n_docs, total_dl) as exact Long sums, base −
+    * dead + fresh. The serves ([[bm25Serve]], [[batchServe]]) query these
+    * frames and [[foldPostingsArtifacts]] writes them, so the answer over
+    * a folded generation is the answer over its parent plus the change
+    * set. */
+  private def mergePostings(s: SparkSession, home: java.nio.file.Path,
+      postings: DataFrame, dead: DataFrame,
+      freshTf: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val doclen = graft.operators.PersistedIndex.artifactFrame(s, home, "doclen")
     val st = graft.operators.PersistedIndex.statsRow(s, home)
     val (nB, dlB) = (st.getAs[Long]("n_docs"), st.getAs[Long]("total_dl"))
-    val nBk = readBuckets(s, home)
-    val qbuckets = qterms.map(q => detHash60Local(q) % nBk).distinct.sorted
-    val baseTf3 = graft.operators.PersistedIndex.artifactFrame(s, home, "postings")
-      .where(col("bucket").isin(qbuckets.map(java.lang.Long.valueOf): _*) &&
-        col("word").isInCollection(qterms))
-      .select("doc_id", "word", "tf")
-      .join(dead, Seq("doc_id"), "left_anti")
-    // the fresh segment's term frequencies feed FOUR consumers (tf3, dl,
-    // the df agg through tf3, freshStats) and Catalyst does not dedupe
-    // common subtrees — materialize the delta-proportional frame once
-    // (the kg6/mm8 convention) instead of re-tokenizing per consumer.
-    // Callers whose fresh side is the standard append delta pass the
-    // SESSION-shared pin ([[appendFreshTf]]) so the checkpoint is paid
-    // once per session, not once per serve.
-    val freshTf = freshTfShared.getOrElse(
-      graft.operators.CdcRules.pinDerived(s, fresh, fresh
-        .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
-        .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))))
-    val freshTf3 = freshTf.filter(col("word").isInCollection(qterms))
-      .select("doc_id", "word", "tf")
     val freshDl = freshTf.groupBy("doc_id").agg(sum("tf").as("dl"))
-    val baseDl = graft.operators.PersistedIndex.artifactFrame(s, home, "doclen")
-    val dl = baseDl.join(dead, Seq("doc_id"), "left_anti").unionByName(freshDl)
-    val tf3 = baseTf3.unionByName(freshTf3)
-    val pivotCols = qterms.map(q => max(when(col("word") === q, col("tf"))).as(s"tf_$q"))
-    val pivoted = tf3.groupBy("doc_id").agg(pivotCols.head, pivotCols.tail: _*)
-    val dfCols = qterms.map(q => sum(when(col("word") === q, 1L).otherwise(0L)).as(s"df_$q"))
-    // exact Long deltas to the persisted corpus stats: what leaves via the
-    // tombstone set, what enters via the fresh segment
-    val deadStats = baseDl.join(dead, Seq("doc_id"), "left_semi")
+    val deadStats = doclen.join(dead, Seq("doc_id"), "left_semi")
       .agg(count(lit(1)).as("n_dead"), coalesce(sum("dl"), lit(0L)).as("dl_dead"))
     val freshStats = freshDl
       .agg(count(lit(1)).as("n_fresh"), coalesce(sum("dl"), lit(0L)).as("dl_fresh"))
-    val stats = deadStats.crossJoin(freshStats)
+    (postings.select("doc_id", "word", "tf", "dl")
+      .join(dead, Seq("doc_id"), "left_anti")
+      // a LEFT join on freshDl's unique doc_id: a consumer that drops `dl`
+      // drops the join with it (the optimizer's unique-key join removal)
+      .unionByName(freshTf.join(broadcast(freshDl), Seq("doc_id"), "left")),
+     doclen.join(dead, Seq("doc_id"), "left_anti").unionByName(freshDl),
+     deadStats.crossJoin(freshStats)
       .select((lit(nB) - col("n_dead") + col("n_fresh")).as("n_docs"),
-        (lit(dlB) - col("dl_dead") + col("dl_fresh")).as("total_dl"))
-      .crossJoin(tf3.agg(dfCols.head, dfCols.tail: _*))
-    val avgdl = col("total_dl").cast(DoubleType) / col("n_docs").cast(DoubleType)
-    def termScore(q: String) = {
-      val tfd = coalesce(col(s"tf_$q"), lit(0L)).cast(DoubleType)
-      val dfd = col(s"df_$q").cast(DoubleType)
-      val idf = log((col("n_docs").cast(DoubleType) - dfd + 0.5) / (dfd + 0.5) + 1.0)
-      idf * (tfd * (k1 + 1.0)) / (tfd + lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl").cast(DoubleType) / avgdl)))
-    }
-    val score = qterms.map(termScore).reduceLeft(_ + _)
-    dl.join(pivoted, Seq("doc_id"), "left")
-      .crossJoin(broadcast(stats))
-      .select(col("doc_id"), col("dl"), round(score * 1e6).cast(LongType).as("bm25_e6"))
-      .orderBy(desc("bm25_e6"), col("doc_id")).limit(20)
+        (lit(dlB) - col("dl_dead") + col("dl_fresh")).as("total_dl")))
+  }
+
+  /** A fresh segment's (doc_id, word, tf), materialized once: a serve or
+    * fold reads it from several legs (postings, doclen, stats, df). */
+  private def freshTfOf(s: SparkSession, fresh: DataFrame): DataFrame =
+    graft.operators.CdcRules.pinDerived(s, fresh, termFreqs(fresh))
+
+  /** Single-query BM25 over a postings home plus a change set: ir6's
+    * top-20 over the [[mergePostings]] frames, with the base postings read
+    * bucket-pruned to `qterms` and the term filter pushed into the fresh
+    * leg. The fold writes the frames this serve merges, so the answer is
+    * bit-equal to a full rebuild over (base ∖ dead) ∪ fresh. ir10 passes
+    * (∅, appends); ir14 the [[graft.operators.CdcRules]] change set; the
+    * expunged serve (∅, ∅) against a CDC-folded generation. Callers whose
+    * fresh side is the standard append delta or sized feed pass the
+    * session-shared tokenization ([[sharedFreshTf]]). */
+  private[graft] def bm25Serve(s: SparkSession, home: java.nio.file.Path,
+      dead: DataFrame, fresh: DataFrame, qterms: Seq[String],
+      freshTfShared: Option[DataFrame] = None): DataFrame = {
+    val (postings, dl, stats) = mergePostings(s, home,
+      prunedArtifact(s, home, "postings", qterms), dead,
+      freshTfShared.getOrElse(freshTfOf(s, fresh)))
+    val tf3 = postings.where(col("word").isInCollection(qterms)).select("doc_id", "word", "tf")
+    bm25TopK(tf3, dl, stats.crossJoin(termDfs(tf3, qterms)), qterms, 20)
   }
 
   /** A fresh segment's pinned (doc_id, word, tf), session-shared per
-    * (home, derivation tag) — r21: serves that consume the IDENTICAL
-    * fresh frame each paid their own eager checkpoint job per call. Keyed
-    * by the home path (fingerprint + generation) and a tag naming the
-    * derivation, so different fresh classes never mix: "append_fresh_tf"
-    * (ir10 solo + ir16/ir24 batch — the raw append delta) and
-    * "sizedfeed_fresh_tf" (ir22/ir23 — the crawl-window feed split).
-    * Amortized warm cost is the by-design steady state the Bench scaladoc
-    * documents (the bm25_core convention); the first toucher still pays
-    * and reports the full build. */
+    * (home, derivation tag): serves that consume the IDENTICAL fresh frame
+    * would otherwise each pay their own eager checkpoint job per call.
+    * Keyed by the home path (fingerprint + generation) and a tag naming
+    * the derivation, so different fresh classes never mix:
+    * "append_fresh_tf" (ir10 solo + ir16/ir24 batch — the raw append
+    * delta) and "sizedfeed_fresh_tf" (ir22/ir23 — the crawl-window feed
+    * split). Amortized warm cost is the by-design steady state the Bench
+    * scaladoc documents (the bm25_core convention); the first toucher
+    * still pays and reports the full build. */
   private def sharedFreshTf(s: SparkSession, home: java.nio.file.Path,
       tag: String, fresh: DataFrame): DataFrame =
     // the analyzed-plan semanticHash binds the cache entry to the fresh
     // frame's actual DERIVATION, so a future caller reusing a tag with a
     // different fresh frame gets its own pin instead of silently reading
-    // the first caller's rows (r21 review finding)
+    // the first caller's rows
     graft.operators.SessionShare.cached(s, home.toString,
-      tag + "_" + fresh.queryExecution.analyzed.semanticHash()) {
-      graft.operators.CdcRules.pinDerived(s, fresh, fresh
-        .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
-        .groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
-    }
+      tag + "_" + fresh.queryExecution.analyzed.semanticHash())(freshTfOf(s, fresh))
 
   private def appendFreshTf(s: SparkSession, home: java.nio.file.Path,
       delta: DataFrame): DataFrame =
@@ -2631,41 +2590,25 @@ object TextQueries {
     (bm25Serve(s, home, dead, fresh, qterms), wStar)
   }
 
-  /** The postings family's artifact rewrite with the change set passed
-    * IN — the fold of [[IndexMaintenance.compactCdc]] (rule-derived
-    * frames), [[IndexMaintenance.foldAppends]] (no dead, appends fresh)
-    * and the streaming loop (segment-derived frames): dead rows
-    * LEAVE every artifact, fresh payloads tokenize once, stats update by
-    * exact Long subtract/add; base postings are otherwise copied from
-    * parquet, never re-derived from text. */
+  /** The postings family's fold: it writes, as a new generation, the
+    * frames [[bm25Serve]] and [[batchServe]] merge ([[mergePostings]]),
+    * taken over the whole base artifacts. Used by
+    * [[IndexMaintenance.compactCdc]] (rule-derived change set),
+    * [[IndexMaintenance.foldAppends]] (no dead, appends fresh) and the
+    * streaming loop (segment-derived change set). Only the fresh rows are
+    * tokenized; base postings are copied from parquet, re-bucketed under
+    * the parent's modulus. */
   private[graft] def foldPostingsArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, dead: DataFrame, fresh: DataFrame, split: Long): Unit = {
     import graft.operators.PersistedIndex
-    val st = PersistedIndex.statsRow(s, cur)
-    val (nB, dlB) = (st.getAs[Long]("n_docs"), st.getAs[Long]("total_dl"))
     val nBk = readBuckets(s, cur)
-    val freshTf = graft.operators.CdcRules.pinDerived(s, fresh, fresh
-      .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
-      .groupBy("doc_id", "word").agg(count(lit(1)).as("tf")))
-    val freshDl = freshTf.groupBy("doc_id").agg(sum("tf").as("dl"))
+    val (postings, doclen, stats) = mergePostings(s, cur,
+      PersistedIndex.artifactFrame(s, cur, "postings"), dead, freshTfOf(s, fresh))
     graft.sources.Layout.writePartitioned(
-      s.read.parquet(cur.resolve("postings").toString)
-        .select("doc_id", "word", "tf", "dl")
-        .join(dead, Seq("doc_id"), "left_anti")
-        .unionByName(freshTf.join(freshDl, Seq("doc_id")))
-        .withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
+      postings.withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
       tmp.resolve("postings").toString, "bucket", "word")
-    val baseDl = s.read.parquet(cur.resolve("doclen").toString)
-    baseDl.join(dead, Seq("doc_id"), "left_anti").unionByName(freshDl)
-      .write.mode("overwrite").parquet(tmp.resolve("doclen").toString)
-    val deadStats = baseDl.join(dead, Seq("doc_id"), "left_semi")
-      .agg(count(lit(1)).as("n_dead"), coalesce(sum("dl"), lit(0L)).as("dl_dead"))
-    val freshStats = freshDl
-      .agg(count(lit(1)).as("n_fresh"), coalesce(sum("dl"), lit(0L)).as("dl_fresh"))
-    deadStats.crossJoin(freshStats)
-      .select((lit(nB) - col("n_dead") + col("n_fresh")).as("n_docs"),
-        (lit(dlB) - col("dl_dead") + col("dl_fresh")).as("total_dl"))
-      .withColumn("split_id", lit(split))
+    doclen.write.mode("overwrite").parquet(tmp.resolve("doclen").toString)
+    stats.withColumn("split_id", lit(split))
       .withColumn("n_buckets", lit(nBk))
       .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
   }
@@ -2868,69 +2811,30 @@ object TextQueries {
       freshTfShared = Some(appendFreshTf(s, home, delta)))
   }
 
-  /** The batched BM25 SERVING KERNEL — [[bm25Serve]]'s many-query sibling:
-    * one bucket-pruned postings read for the whole batch's term union
-    * (per-term df falls out of the same read), the `dead` id frame leaves
-    * via anti-joins, the `fresh` (doc_id, text) frame is tokenized ONCE
-    * for the entire batch, corpus stats merge by exact Long sums, and the
-    * k-bounded native TopK serves every query from one plan. ir16 passes
+  /** The batched BM25 serve — [[bm25Serve]]'s many-query sibling over the
+    * same [[mergePostings]] frames (the fold writes the frames this serve
+    * merges): one bucket-pruned postings read for the whole batch's term
+    * union (per-term df falls out of the same read; postings carry the
+    * doc length, so nothing joins the corpus-sized doclen artifact), the
+    * fresh rows tokenized ONCE for the entire batch, and the k-bounded
+    * native TopK serving every query from one plan. ir16 passes
     * (∅, appends); ir20 the [[graft.operators.CdcRules]] change set. */
   private def batchServe(s: SparkSession, home: java.nio.file.Path,
       dead: DataFrame, fresh: DataFrame,
       batch: Seq[(Long, Seq[String])], k: Int,
       freshTfShared: Option[DataFrame] = None): DataFrame = {
-    import s.implicits._
-    val (k1, b) = (1.2, 0.75)
-    val st = graft.operators.PersistedIndex.statsRow(s, home)
-    val (nB, dlB) = (st.getAs[Long]("n_docs"), st.getAs[Long]("total_dl"))
-    val nBk = readBuckets(s, home)
     val allTerms = batch.flatMap(_._2).distinct.sorted
-    val qt = broadcast(
-      batch.flatMap { case (qid, ts) => ts.map(w => (qid, w)) }
-        .toDF("query_id", "word"))
-    val qbuckets = allTerms.map(q => detHash60Local(q) % nBk).distinct.sorted
-    // ONE pruned artifact read serves every query's tf AND df; v2
-    // postings carry the doc length, so NOTHING below joins the
-    // corpus-sized doclen artifact — the only corpus-scale input is the
-    // pruned read itself
-    val baseTf = graft.operators.PersistedIndex.artifactFrame(s, home, "postings")
-      .where(col("bucket").isin(qbuckets.map(java.lang.Long.valueOf): _*) &&
-        col("word").isInCollection(allTerms))
-      .select("doc_id", "word", "tf", "dl")
-      .join(dead, Seq("doc_id"), "left_anti")
-    // ONE fresh tokenization amortized across the whole batch —
-    // materialized, since tfAll/df/freshDl would each re-derive it; the
-    // append-delta callers (ir16/ir24) share one session-wide pin
-    val freshTf = freshTfShared.getOrElse(
-      graft.operators.CdcRules.pinDerived(s, fresh, fresh
-        .select(col("doc_id"), explode(tokens(col("text"))).as("word"))
-        .groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))))
-    val freshDl = freshTf.groupBy("doc_id").agg(sum("tf").as("dl"))
-    val tfAll = baseTf.unionByName(
-      freshTf.filter(col("word").isInCollection(allTerms)).select("doc_id", "word", "tf")
-        .join(broadcast(freshDl), Seq("doc_id")))
-    val baseDl = graft.operators.PersistedIndex.artifactFrame(s, home, "doclen")
-    // merged corpus stats: base − tombstoned + fresh, exact Long sums;
-    // per-term df from the SAME pruned read — both tiny, broadcast
-    val deadStats = baseDl.join(dead, Seq("doc_id"), "left_semi")
-      .agg(count(lit(1)).as("n_dead"), coalesce(sum("dl"), lit(0L)).as("dl_dead"))
-    val freshStats = freshDl
-      .agg(count(lit(1)).as("n_fresh"), coalesce(sum("dl"), lit(0L)).as("dl_fresh"))
-    val stats = deadStats.crossJoin(freshStats)
-      .select((lit(nB) - col("n_dead") + col("n_fresh")).as("n_docs"),
-        (lit(dlB) - col("dl_dead") + col("dl_fresh")).as("total_dl"))
+    val qt = batchTerms(s, batch)
+    val (postings, _, stats) = mergePostings(s, home,
+      prunedArtifact(s, home, "postings", allTerms), dead,
+      freshTfShared.getOrElse(freshTfOf(s, fresh)))
+    val tfAll = postings.where(col("word").isInCollection(allTerms))
     val df = tfAll.groupBy("word").agg(count(lit(1)).as("df"))
     val scored = tfAll
       .join(qt, Seq("word"))
       .join(broadcast(df), Seq("word"))
       .crossJoin(broadcast(stats))
-    val avgdl = col("total_dl").cast(DoubleType) / col("n_docs").cast(DoubleType)
-    val tfd = col("tf").cast(DoubleType)
-    val dfd = col("df").cast(DoubleType)
-    val idf = log((col("n_docs").cast(DoubleType) - dfd + 0.5) / (dfd + 0.5) + 1.0)
-    val termScore =
-      idf * (tfd * (k1 + 1.0)) /
-        (tfd + lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl").cast(DoubleType) / avgdl)))
+    val termScore = bm25Term(col("tf"), col("df"), col("n_docs"), col("dl"), statsAvgdl)
     // additive over the query's matched terms; e6-rounded AFTER the sum so
     // both engines round an identical double once
     val perQueryDoc = scored
@@ -2941,6 +2845,12 @@ object TextQueries {
         -col("bm25_e6"), col("doc_id"), keyName = "neg_e6", idName = "doc_id")
       .select(col("query_id"), col("rank"), col("doc_id"), (-col("neg_e6")).as("bm25_e6"))
       .orderBy("query_id", "rank")
+  }
+
+  /** A query batch as a broadcast (query_id, word) table. */
+  private def batchTerms(s: SparkSession, batch: Seq[(Long, Seq[String])]): DataFrame = {
+    import s.implicits._
+    broadcast(batch.flatMap { case (qid, ts) => ts.map(w => (qid, w)) }.toDF("query_id", "word"))
   }
 
   /** ir20_cdc_query_batch — the batch × CDC composition, the TRUE
@@ -3027,33 +2937,18 @@ object TextQueries {
     * internals exposed so R20QueriesSpec can measure real pruning. */
   private[queries] def blockmaxBatchServe(s: SparkSession, dir: String,
       batch: Seq[(Long, Seq[String])], k: Int): (DataFrame, DataFrame, DataFrame) = {
-    import s.implicits._
     import graft.operators.{PersistedIndex, TopK}
-    val (k1, b) = (1.2, 0.75)
     val home = ensurePostingsIndex(s, dir)
-    val nBk = readBuckets(s, home)
     val st = PersistedIndex.statsRow(s, home)
     val (nB, dlB) = (st.getAs[Long]("n_docs"), st.getAs[Long]("total_dl"))
     val allTerms = batch.flatMap(_._2).distinct.sorted
-    val qt = broadcast(
-      batch.flatMap { case (qid, ts) => ts.map(w => (qid, w)) }
-        .toDF("query_id", "word"))
-    val qbuckets = allTerms.map(q => detHash60Local(q) % nBk).distinct.sorted
-    def pruned(path: String): DataFrame =
-      PersistedIndex.artifactFrame(s, home, path)
-        .where(col("bucket").isin(qbuckets.map(java.lang.Long.valueOf): _*) &&
-          col("word").isInCollection(allTerms))
-    val tf = pruned("postings").select("doc_id", "word", "tf")
+    val qt = batchTerms(s, batch)
+    val tf = prunedArtifact(s, home, "postings", allTerms).select("doc_id", "word", "tf")
     val dl = PersistedIndex.artifactFrame(s, home, "doclen")
     // full-corpus df from the same pruned read — identical to the oracle's
     val df = tf.groupBy("word").agg(count(lit(1)).as("df"))
-    val avgdl = lit(dlB).cast(DoubleType) / lit(nB).cast(DoubleType)
-    val tfd = col("tf").cast(DoubleType)
-    val dfd = col("df").cast(DoubleType)
-    val idf = log((lit(nB).cast(DoubleType) - dfd + 0.5) / (dfd + 0.5) + 1.0)
-    val termScore =
-      idf * (tfd * (k1 + 1.0)) /
-        (tfd + lit(k1) * (lit(1.0 - b) + lit(b) * (col("dl").cast(DoubleType) / avgdl)))
+    val termScore = bm25Term(col("tf"), col("df"), lit(nB), col("dl"),
+      lit(dlB).cast(DoubleType) / lit(nB).cast(DoubleType))
     // exact per-(query, doc) scores over a (query_id, blk) candidate
     // frame. Join ORDER is the point: the (query, term, kept-block) probe
     // is built FIRST (kept-bounded — tiny once pruning bites) and the
@@ -3073,7 +2968,7 @@ object TextQueries {
         .groupBy("query_id", "doc_id")
         .agg(round(sum("ts") * 1e6).cast(LongType).as("bm25_e6"))
     }
-    val bounds = pruned("blockmax").join(qt, Seq("word"))
+    val bounds = prunedArtifact(s, home, "blockmax", allTerms).join(qt, Seq("word"))
       .groupBy("query_id", "blk").agg(sum("ub_e6").as("bound_e6"))
     val seeds = TopK.smallestPerGroup(bounds, Seq("query_id"), 1,
         -col("bound_e6"), col("blk"), keyName = "negb_e6", idName = "blk")
@@ -3337,31 +3232,30 @@ object TextQueries {
     target
   }
 
-  /** The merged positional postings for `terms` — the segment-merge serve
-    * every positional consumer (ir11b/ir13/ir13b/ir17/ir18) reads: base
-    * lists come bucket-pruned from the persisted index with the `dead` id
-    * frame anti-joined, the `fresh` (doc_id, text) frame is the ONLY text
-    * re-positioned at serve time. Document segments are disjoint, so the
-    * union IS the post-change positional table restricted to `terms`. */
-  private def posServe(s: SparkSession, home: java.nio.file.Path,
-      dead: DataFrame, fresh: DataFrame, terms: Seq[String]): DataFrame = {
-    val qbuckets = terms.map(q => detHash60Local(q) % readBuckets(s, home))
-      .distinct.sorted
-    val base = graft.operators.PersistedIndex.artifactFrame(s, home, "positions")
-      .where(col("bucket").isin(qbuckets.map(java.lang.Long.valueOf): _*) &&
-        col("word").isInCollection(terms))
-      .select("doc_id", "word", "positions")
+  /** The positions family's change-set merge: the post-change
+    * (doc_id, word, positions) table — `base` lists (bucket-pruned by the
+    * serve, whole by the fold) minus the `dead` docs, plus `freshPos`, the
+    * fresh rows' [[positionsOf]] lists. Document segments are disjoint, so
+    * the union IS the post-change positional table. */
+  private def mergePositions(base: DataFrame, dead: DataFrame,
+      freshPos: DataFrame): DataFrame =
+    base.select("doc_id", "word", "positions")
       .join(dead, Seq("doc_id"), "left_anti")
+      .unionByName(freshPos)
+
+  /** The merged positional postings for `terms` that every positional
+    * consumer (ir11b/ir13/ir13b/ir17/ir18) reads: [[mergePositions]] over
+    * the bucket-pruned base lists, with the fresh rows — the ONLY text
+    * re-positioned at serve time — restricted to `terms` (the filter sits
+    * below the per-(doc, word) grouping). The fold writes the frames this
+    * serve merges. */
+  private def posServe(s: SparkSession, home: java.nio.file.Path,
+      dead: DataFrame, fresh: DataFrame, terms: Seq[String]): DataFrame =
     // the per-term split downstream (p1/p2/p3 legs) re-reads the merged
     // frame once per term — materialize the fresh re-positioning once
-    val freshPos = graft.operators.CdcRules.pinDerived(s, fresh, fresh
-      .select(col("doc_id"), posexplode(tokens(col("text"))).as(Seq("pos", "word")))
-      .filter(col("word").isInCollection(terms))
-      .select(col("doc_id"), (col("pos") + 1).cast(LongType).as("pos"), col("word"))
-      .groupBy("doc_id", "word")
-      .agg(sort_array(collect_list("pos")).as("positions")))
-    base.unionByName(freshPos)
-  }
+    mergePositions(prunedArtifact(s, home, "positions", terms), dead,
+      graft.operators.CdcRules.pinDerived(s, fresh,
+        positionsOf(fresh).where(col("word").isInCollection(terms))))
 
   /** The two-term adjacency projection over a merged positional frame —
     * ir11's match arithmetic, shared by ir11b and the ir18 CDC faces. */
@@ -3400,19 +3294,17 @@ object TextQueries {
   def ir18TombstonePhrase(s: SparkSession, dir: String): DataFrame =
     IndexMaintenance.serve(s, dir, PositionsMaintenance, Tombstones)
 
-  /** The positions family's artifact rewrite with the change set passed
-    * in — dead and updated-old position lists leave, re-positioned
-    * updates + appends fold in (ALL words — the generation serves every
-    * term); see [[foldPostingsArtifacts]]. */
+  /** The positions family's fold: it writes [[mergePositions]] over the
+    * whole base lists — the frame [[posServe]] merges, for ALL words —
+    * plus the `docs` census (dead docs out, fresh docs in) and the
+    * watermark, as a new generation. */
   private[graft] def foldPosArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, dead: DataFrame, fresh: DataFrame, split: Long): Unit = {
     import graft.operators.PersistedIndex
     val nBk = readBuckets(s, cur)
     graft.sources.Layout.writePartitioned(
-      s.read.parquet(cur.resolve("positions").toString)
-        .select("doc_id", "word", "positions")
-        .join(dead, Seq("doc_id"), "left_anti")
-        .unionByName(positionsOf(fresh))
+      mergePositions(PersistedIndex.artifactFrame(s, cur, "positions"), dead,
+          positionsOf(fresh))
         .withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
       tmp.resolve("positions").toString, "bucket", "word")
     s.read.parquet(cur.resolve("docs").toString)

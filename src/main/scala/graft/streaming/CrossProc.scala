@@ -118,7 +118,7 @@ object MaintWriter {
     }
     // idle tail: let the grace window elapse so sweeps DELETE while the
     // prober is still hammering, then signal done
-    Thread.sleep(sys.props.getOrElse("graft.sweep.grace.ms", "0").toLong + 3000)
+    Thread.sleep(PersistedIndex.SweepGraceMs + 3000)
     IndexMaintenance.maybeFold(s, corpusDir, root)
     Files.writeString(root.resolve("WRITER_DONE"), "ok")
     println("WRITER done")

@@ -414,31 +414,19 @@ object IndexMaintenance {
     target
   }
 
-  /** Delete retired (stamped) segments and superseded fold generations
-    * whose grace window has elapsed. A fold generation below the current
-    * floor is stamped here too — generations stack during a long run and
-    * only the highest serves. An unparsable stamp RESTARTS the grace
-    * window instead of parsing to epoch 0 (immediate deletion — exactly
-    * the no-grace hazard the stamp exists to prevent, ADVICE r17). */
+  /** Retire folded segments and superseded fold generations: each one at
+    * or below the current fold floor is stamped, then deleted once its
+    * grace window has elapsed ([[PersistedIndex.retire]]). A fold
+    * generation below the floor is stamped here too — generations stack
+    * during a long run and only the highest serves. */
   private[streaming] def sweepRetired(root: Path,
       graceMs: Long = PersistedIndex.SweepGraceMs): Unit = {
     val folds = list(root, "base_")
     val floor = if (folds.isEmpty) -1L else idOf(folds.last, "base_")
     val now = System.currentTimeMillis()
-    def sweep(p: Path): Unit = {
-      val mark = p.resolve("_SUPERSEDED")
-      if (!Files.exists(mark)) {
-        Files.writeString(mark, now.toString)
-      } else {
-        val at =
-          try Files.readString(mark).trim.toLong
-          catch { case _: NumberFormatException =>
-            Files.writeString(mark, now.toString); now }
-        if (now - at >= graceMs) PersistedIndex.deleteTree(p)
-      }
-    }
-    list(root, "seg_").filter(idOf(_, "seg_") <= floor).foreach(sweep)
-    folds.filter(idOf(_, "base_") < floor).foreach(sweep)
+    (list(root, "seg_").filter(idOf(_, "seg_") <= floor) ++
+      folds.filter(idOf(_, "base_") < floor))
+      .foreach(PersistedIndex.retire(_, now, graceMs))
   }
 
   /** Serve the family's query over the loop's current state: the resolved

@@ -615,4 +615,57 @@ class RetrievalSpec extends SparkSpec {
     assert(dup.getAs[Long]("mmr_e6") ===
       Math.floorDiv(3L * dup.getAs[Long]("rel_e6"), 4L) - 250000L)
   }
+
+  /** Physical plans of every SQL execution `body` starts (eager pins
+    * included), in formatted explain mode. A fence execution run after the
+    * body is the last event the listener sees, so every earlier start has
+    * been delivered once the fence shows up. */
+  private def plansStartedBy(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => plans.add(x.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.range(1).selectExpr("'plan-fence' AS fence").collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      def fenced = plans.toArray.exists(_.toString.contains("plan-fence"))
+      while (!fenced && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(fenced, "fence execution never reached the listener")
+      plans.toArray.map(_.toString).filterNot(_.contains("plan-fence")).toSeq
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("ir16/ir20 plans: bucket-pruned postings, one pushed delta-range documents scan, none after the CDC fold") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("ir16plan").toString
+    (0L until 200L).map(i => (i, s"data table scan w$i join", 24L))
+      .toDF("doc_id", "text", "n_chars")
+      .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")
+    val split = graft.operators.PersistedIndex.readSplit(spark,
+      TextQueries.ensureBasePostingsIndex(spark, tmp))
+    var ir16: org.apache.spark.sql.DataFrame = null
+    val plans = plansStartedBy {
+      ir16 = TextQueries.ir16QueryBatch(spark, tmp)
+      ir16.collect()
+    }
+    val plan = ir16.queryExecution.executedPlan.toString
+    assert("PartitionFilters: \\[[^\\]]*bucket".r.findFirstIn(plan).isDefined &&
+      plan.contains("postings"), s"ir16 must read postings bucket-pruned:\n$plan")
+    // formatted plans detail each scan in its own paragraph
+    val docScans = plans.flatMap(_.split("\n\n")).filter(_.contains("documents.parquet"))
+    assert(docScans.size === 1, s"ir16 must scan the corpus exactly once:\n${plans.mkString("\n")}")
+    assert(docScans.head.contains(s"GreaterThan(doc_id,$split)"),
+      s"the corpus scan must carry the pushed doc_id > $split filter:\n${docScans.head}")
+    IndexMaintenance.compactCdc(spark, tmp, IndexMaintenance.Postings)
+    val ir20 = TextQueries.ir20CdcQueryBatch(spark, tmp).queryExecution.executedPlan.toString
+    assert(!ir20.contains("documents.parquet"),
+      s"after the CDC fold ir20 must read persisted artifacts only:\n$ir20")
+  }
 }

@@ -107,4 +107,38 @@ class IndexMaintenanceSpec extends SparkSpec {
     drain()
     assert(IndexMaintenance.resolve(spark, corpus, root)._3.size === 1)
   }
+
+  test("sweepRetired: unparsable stamp restarts the window, expired stamp deletes, above-floor segment untouched") {
+    import java.nio.file.Path
+    val root = Files.createTempDirectory("imx_sweep")
+    def home(name: String): Path = {
+      val p = Files.createDirectories(root.resolve(name))
+      Files.createFile(p.resolve("_INDEX_COMPLETE"))
+      p
+    }
+    def stamp(p: Path, v: String): Unit = Files.writeString(p.resolve("_SUPERSEDED"), v)
+    val graceMs = 60000L
+    val t0 = System.currentTimeMillis()
+    val floor = home(f"base_${5L}%012d")
+    val oldFold = home(f"base_${2L}%012d")
+    val expired = home(f"seg_${3L}%012d")
+    stamp(expired, (t0 - 2 * graceMs).toString)
+    val garbled = home(f"seg_${4L}%012d")
+    stamp(garbled, "not-a-timestamp")
+    val live = home(f"seg_${8L}%012d")
+    IndexMaintenance.sweepRetired(root, graceMs)
+    assert(!Files.exists(expired), "a stamp older than graceMs deletes the segment")
+    assert(Files.exists(garbled), "an unparsable stamp must not delete the segment")
+    val restarted = Files.readString(garbled.resolve("_SUPERSEDED")).trim.toLong
+    assert(restarted >= t0, "an unparsable stamp restarts the grace window at the sweep time")
+    assert(Files.exists(oldFold.resolve("_SUPERSEDED")),
+      "a fold generation below the floor is stamped, not deleted")
+    assert(!Files.exists(live.resolve("_SUPERSEDED")),
+      "a segment above the fold floor is never stamped")
+    assert(!Files.exists(floor.resolve("_SUPERSEDED")), "the serving fold generation is never stamped")
+    // a second sweep inside the window keeps everything that is left
+    IndexMaintenance.sweepRetired(root, graceMs)
+    assert(Files.exists(garbled) && Files.exists(oldFold) && Files.exists(live))
+    graft.operators.PersistedIndex.deleteTree(root)
+  }
 }
