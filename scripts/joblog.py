@@ -7,8 +7,12 @@ first ``graft.*`` frames of its call site. A job that ran outside any SQL
 execution (partition-discovery listing, RDD actions) gets a row of its own,
 marked ``job``.
 
+With ``--by-site`` it prints one row per first ``graft.*`` frame instead:
+the executions (and stray jobs) whose call site starts there, their jobs,
+tasks and seconds, the costliest site first.
+
 Usage:
-    python3 scripts/joblog.py EVENT_LOG [--frames N]
+    python3 scripts/joblog.py EVENT_LOG [--frames N] [--by-site]
 
 EVENT_LOG is an uncompressed event log: run with
 ``-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=file:///tmp/graft-ev
@@ -115,13 +119,41 @@ def format_table(rows):
     return "\n".join(lines)
 
 
+def by_site(rows):
+    """Rows ``{site, execs, jobs, tasks, secs}``, one per first ``graft.*``
+    frame (``-`` when a row has none), by seconds descending; an execution
+    that never finished counts 0 seconds."""
+    sites = {}
+    for r in rows:
+        key = r["site"][0] if r["site"] else "-"
+        agg = sites.setdefault(key, {"site": key, "execs": 0, "jobs": 0,
+                                     "tasks": 0, "secs": 0.0})
+        agg["execs"] += 1
+        agg["jobs"] += r["jobs"]
+        agg["tasks"] += r["tasks"]
+        agg["secs"] += r["dur_s"] or 0.0
+    return sorted(sites.values(), key=lambda a: (-a["secs"], a["site"]))
+
+
+def format_sites(sites):
+    lines = [f"{'secs':>8} {'execs':>5} {'jobs':>4} {'tasks':>5}  site"]
+    for a in sites:
+        lines.append(f"{a['secs']:8.3f} {a['execs']:>5} {a['jobs']:>4} {a['tasks']:>5}  {a['site']}")
+    lines.append(f"{len(sites)} sites, {sum(a['jobs'] for a in sites)} jobs, "
+                 f"{sum(a['tasks'] for a in sites)} tasks")
+    return "\n".join(lines)
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("logs", nargs="+", help="uncompressed event log file(s)")
     ap.add_argument("--frames", type=int, default=3,
                     help="graft.* call-site frames shown per row (default 3)")
+    ap.add_argument("--by-site", action="store_true",
+                    help="one row per first graft.* frame, by seconds")
     args = ap.parse_args(argv)
-    print(format_table(job_table(read_events(args.logs), args.frames)))
+    rows = job_table(read_events(args.logs), args.frames)
+    print(format_sites(by_site(rows)) if args.by_site else format_table(rows))
     return 0
 
 

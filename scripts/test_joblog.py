@@ -86,6 +86,37 @@ class JobTableTest(unittest.TestCase):
         self.assertIn("DedupQueries$.lshServe", out[1])
         self.assertIn(" job ", out[2])
 
+    def test_by_site(self):
+        # a second execution from the same first frame folds into its row
+        again = [dict(e) for e in EVENTS[1:10]]
+        for e in again:
+            if "executionId" in e:
+                e["executionId"] = 5
+            if "Job ID" in e:
+                e["Job ID"] += 10
+            if "Properties" in e:
+                e["Properties"] = {"spark.sql.execution.id": "5"}
+            if "Stage IDs" in e:
+                e["Stage IDs"] = [sid + 10 for sid in e["Stage IDs"]]
+            if "Stage ID" in e:
+                e["Stage ID"] += 10
+        sites = joblog.by_site(joblog.job_table(EVENTS + again))
+        self.assertEqual([(a["site"], a["execs"], a["jobs"], a["tasks"]) for a in sites], [
+            ("graft.queries.DedupQueries$.lshServe(DedupQueries.scala:10)", 2, 4, 6),
+            ("graft.operators.PersistedIndex$.artifactFrame(PersistedIndex.scala:5)", 1, 1, 2)])
+        self.assertAlmostEqual(sites[0]["secs"], 0.5)
+        self.assertAlmostEqual(sites[1]["secs"], 0.25)
+        buf = io.StringIO()
+        with tempfile.TemporaryDirectory() as d:
+            path = os.path.join(d, "events_1_app-1")
+            with open(path, "w") as fh:
+                fh.write("\n".join(json.dumps(e) for e in EVENTS + again) + "\n")
+            with redirect_stdout(buf):
+                self.assertEqual(joblog.main([path, "--by-site"]), 0)
+        out = buf.getvalue().splitlines()
+        self.assertIn("lshServe", out[1])
+        self.assertEqual(out[-1], "2 sites, 5 jobs, 8 tasks")
+
 
 if __name__ == "__main__":
     unittest.main()

@@ -6,8 +6,10 @@ import org.apache.spark.sql.functions._
 /** Readers over the driver-generated parquet testdata (TESTDATA.md).
   *
   * All access goes through `Tables` so that every query reads via the same
-  * declarative `spark.read.parquet` path — Catalyst then gets predicate
-  * pushdown, column pruning and partition-size planning for free. At 100 TB
+  * declarative parquet scan — Catalyst then gets predicate pushdown, column
+  * pruning and partition-size planning for free. Tables open with the schema
+  * read from their footers ([[graft.sources.Layout.readParquet]]), so an open
+  * starts no Spark job, and [[rowCount]] counts from footers too. At 100 TB
   * each of these becomes a partitioned table; nothing in the API assumes the
   * data fits anywhere in particular.
   */
@@ -22,7 +24,14 @@ object Tables {
   }
 
   private def raw(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    graft.sources.Layout.readParquet(spark, path(dir, name))
+
+  private def path(dir: String, name: String): String = s"$dir/$name.parquet"
+
+  /** The exact row count of table `name`, from its parquet footers (no
+    * Spark job) — the plan-time counts queries size strides and draws by. */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long =
+    graft.sources.Layout.parquetRows(spark, path(dir, name))
 
   def region(s: SparkSession, d: String): DataFrame    = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = apply(s, d, "nation")

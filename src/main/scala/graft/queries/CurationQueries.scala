@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.Rank
+import graft.sources.Layout
 import Q._
 
 /** Training-data curation operators — the generalized LLM-pipeline surface
@@ -1741,22 +1742,22 @@ object CurationQueries {
     val docs = t(s, dir, "documents")
     val rows = Seq(
       row("ivf", vSp,
-        s.read.parquet(vHome.resolve("cells").toString).agg(count(lit(1)).as("n_base")),
+        Layout.readParquet(s, vHome.resolve("cells").toString).agg(count(lit(1)).as("n_base")),
         t(s, dir, "embeddings").filter(col("vec_id") > vSp)
           .agg(count(lit(1)).as("n_delta"))),
       row("kg", kSp,
-        s.read.parquet(kHome.resolve("ent").toString)
+        Layout.readParquet(s, kHome.resolve("ent").toString)
           .agg(coalesce(sum("n_docs"), lit(0L)).as("n_base")),
         docs.filter(col("doc_id") > kSp)
           .select(col("doc_id"), explode(fm(col("text"))).as("m"))
           .select(col("doc_id"), col("m.matched").as("entity")).distinct()
           .agg(count(lit(1)).as("n_delta"))),
       row("lsh", lSp,
-        s.read.parquet(lHome.resolve("sigs").toString).agg(count(lit(1)).as("n_base")),
+        Layout.readParquet(s, lHome.resolve("sigs").toString).agg(count(lit(1)).as("n_base")),
         docs.filter(col("doc_id") > lSp && size(split(col("text"), " ")) >= 3)
           .agg(count(lit(1)).as("n_delta"))),
       row("postings", pSp,
-        s.read.parquet(pHome.resolve("doclen").toString).agg(count(lit(1)).as("n_base")),
+        Layout.readParquet(s, pHome.resolve("doclen").toString).agg(count(lit(1)).as("n_base")),
         docs.filter(col("doc_id") > pSp).agg(count(lit(1)).as("n_delta"))))
     rows.reduce(_ unionByName _).orderBy("family")
   }
@@ -1829,23 +1830,23 @@ object CurationQueries {
     // id-only corpus slice (the stats row holds only the count)
     val kgStore = docs.filter(col("doc_id") <= kSp).select("doc_id")
     val rows = Seq(
-      row("ivf", vFeed, s.read.parquet(vHome.resolve("cells").toString), "vec_id",
+      row("ivf", vFeed, Layout.readParquet(s, vHome.resolve("cells").toString), "vec_id",
         vFeed, embs.filter(col("vec_id") > vSp)),
       row("kg", dFeed, kgStore, "doc_id", dFeed,
         docs.filter(col("doc_id") > kSp)),
-      row("lsh", dFeed, s.read.parquet(lHome.resolve("sigs").toString), "doc_id",
+      row("lsh", dFeed, Layout.readParquet(s, lHome.resolve("sigs").toString), "doc_id",
         dFeed,
         docs.filter(col("doc_id") > lSp && size(split(col("text"), " ")) >= 3)),
-      row("phash", dFeed, s.read.parquet(mHome.resolve("rows").toString)
+      row("phash", dFeed, Layout.readParquet(s, mHome.resolve("rows").toString)
           .withColumnRenamed("asset_id", "doc_id"), "doc_id",
         dFeed,
         docs.filter(col("doc_id") > mSp && length(col("text")) >= 64)),
       // the positional family's per-doc census artifact (v3: persisted at
       // build time — no distinct over the (doc, word) store at audit time)
       row("positions", dFeed,
-        s.read.parquet(posHome.resolve("docs").toString), "doc_id",
+        Layout.readParquet(s, posHome.resolve("docs").toString), "doc_id",
         dFeed, docs.filter(col("doc_id") > posSp)),
-      row("postings", dFeed, s.read.parquet(pHome.resolve("doclen").toString), "doc_id",
+      row("postings", dFeed, Layout.readParquet(s, pHome.resolve("doclen").toString), "doc_id",
         dFeed, docs.filter(col("doc_id") > pSp)))
     rows.reduce(_ unionByName _).orderBy("family")
   }
@@ -1947,7 +1948,7 @@ object CurationQueries {
     import graft.operators.PersistedIndex
     import s.implicits._
     def storeCount(p: java.nio.file.Path, artifact: String): Long =
-      s.read.parquet(p.resolve(artifact).toString).count()
+      PersistedIndex.artifactRows(s, p, artifact)
     val pre = e2e9CompactPolicy(s, dir).collect() // six bounded audit rows
     // The family arms below are INDEPENDENT jobs (distinct index kinds,
     // distinct homes) that the r20 spelling ran serially on the driver —
@@ -2031,7 +2032,7 @@ object CurationQueries {
         val (sNt, sNf) =
           if (sSegs.isEmpty) (0L, 0L)
           else {
-            val live = sSegs.map(p => s.read.parquet(p.resolve("feed").toString))
+            val live = sSegs.map(p => Layout.readParquet(s, p.resolve("feed").toString))
               .reduce(_ unionByName _)
             (live.filter(col("op").isin("d", "u")).count(),
              live.filter(col("op").isin("u", "a")).count())

@@ -1016,7 +1016,7 @@ object DedupQueries {
       val nSigs = writeLshSigs(Dedup.minhashSignatures(
         t(s, dir, "documents").filter(col("doc_id") <= split), "doc_id", "text"), tmp)
       Dedup.lshCandidatePairs(
-          s.read.parquet(tmp.resolve("sigs").toString), "doc_id")
+          graft.sources.Layout.readParquet(s, tmp.resolve("sigs").toString), "doc_id")
         .write.mode("overwrite").parquet(tmp.resolve("pairs").toString)
       writeLshBands(s, tmp, nSigs, split)
     }
@@ -1029,7 +1029,7 @@ object DedupQueries {
     val out = tmp.resolve("sigs").toString
     val (counted, rows) = graft.sources.Layout.withRowCount(sigs)
     counted.write.mode("overwrite").parquet(out)
-    rows().getOrElse(sigs.sparkSession.read.parquet(out).count())
+    rows().getOrElse(graft.sources.Layout.parquetRows(sigs.sparkSession, out))
   }
 
   /** The banded projection of a generation's `sigs` (`nSigs` rows),
@@ -1044,7 +1044,7 @@ object DedupQueries {
     val nBk = lshBucketsFor(nSigs)
     graft.sources.Layout.writePartitioned(
       Dedup.bandedSignatures(
-          s.read.parquet(tmp.resolve("sigs").toString), "doc_id")
+          graft.sources.Layout.readParquet(s, tmp.resolve("sigs").toString), "doc_id")
         .withColumn("kb", lshBandBucket(col("band"), col("key"), nBk)),
       tmp.resolve("bands").toString, "kb", "band", "key")
     graft.operators.PersistedIndex.splitStats(s, split)
@@ -1152,7 +1152,7 @@ object DedupQueries {
     def ensureBase(s: SparkSession, dir: String): java.nio.file.Path =
       ensureLshIndex(s, dir)
     def baseCount(s: SparkSession, base: java.nio.file.Path): Long =
-      graft.operators.PersistedIndex.artifactFrame(s, base, "sigs").count()
+      graft.operators.PersistedIndex.artifactRows(s, base, "sigs")
     def foldInto(s: SparkSession, tmp: java.nio.file.Path, base: java.nio.file.Path,
         dead: DataFrame, fresh: DataFrame, split: Long): Unit =
       foldLshArtifacts(s, tmp, base, dead, fresh, split)

@@ -513,7 +513,7 @@ object MultimodalQueries {
     * force is audited in R13QueriesSpec (the ss5-audits-ss2 convention). */
   def mm6CrossmodalLink(s: SparkSession, dir: String): DataFrame = {
     val home = SimilarityQueries.ensureIvfIndex(s, dir)
-    val nEmb = t(s, dir, "embeddings").count()
+    val nEmb = graft.Tables.rowCount(s, dir, "embeddings")
     val qa = Multimodal.documentsAsAssets(t(s, dir, "documents"))
       .filter(col("modality") === "image" && col("asset_id").cast(LongType) < Mm6MaxAsset)
       .select(col("asset_id").cast(LongType).as("asset_id"),
@@ -805,7 +805,7 @@ object MultimodalQueries {
     def ensureBase(s: SparkSession, dir: String): java.nio.file.Path =
       ensurePhashIndex(s, dir)
     def baseCount(s: SparkSession, base: java.nio.file.Path): Long =
-      graft.operators.PersistedIndex.artifactFrame(s, base, "rows").count()
+      graft.operators.PersistedIndex.artifactRows(s, base, "rows")
     def foldInto(s: SparkSession, tmp: java.nio.file.Path, base: java.nio.file.Path,
         dead: DataFrame, fresh: DataFrame, split: Long): Unit =
       foldPhashArtifacts(s, tmp, base, asAsset(dead), fresh, split)

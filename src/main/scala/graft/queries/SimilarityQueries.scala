@@ -110,7 +110,7 @@ object SimilarityQueries {
     * DuckDB replays the same stride from COUNT(*), so both engines block
     * identically. */
   private def pairStride(s: SparkSession, dir: String): Long =
-    math.max(2L, math.ceil(math.sqrt(t(s, dir, "embeddings").count().toDouble)).toLong)
+    math.max(2L, math.ceil(math.sqrt(graft.Tables.rowCount(s, dir, "embeddings").toDouble)).toLong)
 
   private def pairCentIndex(s: SparkSession, dir: String, emb: DataFrame): Column =
     graft.operators.Similarity.centroidIndex(
@@ -225,7 +225,7 @@ object SimilarityQueries {
     * the index home), shared with mm6's cross-modal probe. */
   private[queries] def ensureIvfIndex(s: SparkSession, dir: String): java.nio.file.Path = {
     val emb = withNorm(t(s, dir, "embeddings"))
-    val n = t(s, dir, "embeddings").count()
+    val n = graft.Tables.rowCount(s, dir, "embeddings")
     graft.operators.PersistedIndex.ensure("ivf_index", dir, indexFingerprint(dir, n)) { tmp =>
       val idx = pairCentIndex(s, dir, emb)
       graft.sources.Layout.writePartitioned(
@@ -515,12 +515,12 @@ object SimilarityQueries {
   private[graft] def foldIvfArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, dead: DataFrame, fresh: DataFrame, split: Long): Unit = {
     import graft.operators.PersistedIndex
-    val centroids = s.read.parquet(cur.resolve("centroids").toString)
+    val centroids = graft.sources.Layout.readParquet(s, cur.resolve("centroids").toString)
     val idx = graft.operators.Similarity.centroidIndex(centroids, "vec_id", "embedding")
     val freshCells = withCell(withNorm(fresh), idx)
       .select(col("vec_id"), col("embedding"), col("norm"),
         col("cell").cast(LongType).as("cell"))
-    val liveCells = s.read.parquet(cur.resolve("cells").toString)
+    val liveCells = graft.sources.Layout.readParquet(s, cur.resolve("cells").toString)
       .select(col("vec_id"), col("embedding"), col("norm"),
         col("cell").cast(LongType).as("cell"))
       .join(dead, Seq("vec_id"), "left_anti")
@@ -552,7 +552,7 @@ object SimilarityQueries {
     def ensureBase(s: SparkSession, dir: String): java.nio.file.Path =
       ensureIvfDeltaIndex(s, dir)
     def baseCount(s: SparkSession, base: java.nio.file.Path): Long =
-      graft.operators.PersistedIndex.artifactFrame(s, base, "cells").count()
+      graft.operators.PersistedIndex.artifactRows(s, base, "cells")
     def foldInto(s: SparkSession, tmp: java.nio.file.Path, base: java.nio.file.Path,
         dead: DataFrame, fresh: DataFrame, split: Long): Unit =
       foldIvfArtifacts(s, tmp, base, dead, fresh, split)
@@ -973,7 +973,7 @@ object SimilarityQueries {
   private[queries] def ensureIvfPqIndex(s: SparkSession, dir: String): java.nio.file.Path = {
     import graft.operators.Similarity
     val embRaw = t(s, dir, "embeddings")
-    val n = embRaw.count()
+    val n = graft.Tables.rowCount(s, dir, "embeddings")
     graft.operators.PersistedIndex.ensure(
         "ivfpq_index", dir, indexFingerprint(dir, n)) { tmp =>
       import s.implicits._

@@ -1582,7 +1582,7 @@ object TextQueries {
         sum(when(col("n") === 1, col("rc"))).as("rl"))
     // N from a plan-time count (the pairStride convention); doc_ids are
     // dense so pair ids are 0..N-1 and the modulo draw hits every pair
-    val nPairs = (t(s, dir, "documents").count() + 1L) / 2L
+    val nPairs = (graft.Tables.rowCount(s, dir, "documents") + 1L) / 2L
     val draws = s.range(BootR.toLong * nPairs)
       .select(expr(s"id div ${nPairs}L").as("r"),
         (detHash(col("id"), 7) % nPairs).as("pair_id"))
@@ -3217,12 +3217,12 @@ object TextQueries {
       // hi <= w0 — the fold then just re-publishes with the marker)
       val delta = docs.filter(col("doc_id") > w0).select("doc_id", "text")
       graft.sources.Layout.writePartitioned(
-        s.read.parquet(cur.resolve("positions").toString)
+        graft.sources.Layout.readParquet(s, cur.resolve("positions").toString)
           .select("doc_id", "word", "positions")
           .unionByName(positionsOf(delta))
           .withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
         tmp.resolve("positions").toString, "bucket", "word")
-      s.read.parquet(cur.resolve("docs").toString)
+      graft.sources.Layout.readParquet(s, cur.resolve("docs").toString)
         .unionByName(delta.select("doc_id"))
         .write.mode("overwrite").parquet(tmp.resolve("docs").toString)
       PersistedIndex.splitStatsAtMax(s, math.max(w0, hi))
@@ -3307,7 +3307,7 @@ object TextQueries {
           positionsOf(fresh))
         .withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
       tmp.resolve("positions").toString, "bucket", "word")
-    s.read.parquet(cur.resolve("docs").toString)
+    graft.sources.Layout.readParquet(s, cur.resolve("docs").toString)
       .join(dead, Seq("doc_id"), "left_anti")
       .unionByName(fresh.select("doc_id").distinct())
       .write.mode("overwrite").parquet(tmp.resolve("docs").toString)
@@ -3326,7 +3326,7 @@ object TextQueries {
     def ensureBase(s: SparkSession, dir: String): java.nio.file.Path =
       ensurePosIndex(s, dir)
     def baseCount(s: SparkSession, base: java.nio.file.Path): Long =
-      graft.operators.PersistedIndex.artifactFrame(s, base, "docs").count()
+      graft.operators.PersistedIndex.artifactRows(s, base, "docs")
     def foldInto(s: SparkSession, tmp: java.nio.file.Path, base: java.nio.file.Path,
         dead: DataFrame, fresh: DataFrame, split: Long): Unit =
       foldPosArtifacts(s, tmp, base, dead, fresh, split)

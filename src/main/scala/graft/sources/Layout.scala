@@ -1,6 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+import org.apache.spark.sql.types.StructType
 
 /** Physical-layout helpers for the 100 TB path: bucketing for co-located
   * joins and hive-style partitioning for partition pruning.
@@ -157,20 +165,28 @@ object Layout {
     }
   }
 
-  /** `df` with its row count observed on whichever action runs it, and
-    * the reader of that count. The count rides the action's own job (a
-    * Spark `Observation`), so it costs no scan. The reader returns None
-    * when Spark reported no value — a plan the optimizer proved empty
-    * reports an empty row — or when none arrived within a minute (the
-    * report travels on the listener bus); callers then count themselves. */
-  private[graft] def withRowCount(df: DataFrame): (DataFrame, () => Option[Long]) = {
-    import org.apache.spark.sql.functions.{count, lit}
+  /** `df` with `metric` (one aggregate expression) observed on whichever
+    * action runs it, and the reader of the observed row. The metric rides
+    * the action's own job (a Spark `Observation`), so it costs no scan.
+    * The reader returns None when none arrived within a minute (the report
+    * travels on the listener bus) or Spark reported an empty row, as it
+    * does for a plan the optimizer proved empty; callers then compute the
+    * value themselves. An aggregate over zero rows reads as a null. */
+  private[graft] def withObserved(df: DataFrame, metric: org.apache.spark.sql.Column)
+      : (DataFrame, () => Option[Row]) = {
     import scala.concurrent.Await
     import scala.concurrent.duration._
     val obs = org.apache.spark.sql.Observation()
-    (df.observe(obs, count(lit(1)).as("rows")),
-      () => scala.util.Try(Await.result(obs.future, 1.minute)).toOption
-        .filter(r => r.length == 1 && !r.isNullAt(0)).map(_.getLong(0)))
+    (df.observe(obs, metric),
+      () => scala.util.Try(Await.result(obs.future, 1.minute)).toOption.filter(_.length == 1))
+  }
+
+  /** [[withObserved]] for the row count: None also when the count is
+    * null. */
+  private[graft] def withRowCount(df: DataFrame): (DataFrame, () => Option[Long]) = {
+    import org.apache.spark.sql.functions.{count, lit}
+    val (counted, row) = withObserved(df, count(lit(1)).as("rows"))
+    (counted, () => row().filter(!_.isNullAt(0)).map(_.getLong(0)))
   }
 
   /** Move every `partitionCol=value` directory under `swap` into `path`,
@@ -196,6 +212,118 @@ object Layout {
     if (Files.exists(p)) {
       Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.delete)
     }
+  }
+
+  // ---- parquet metadata on the driver ---------------------------------
+  // `spark.read.parquet` infers a schema with a Spark job (one footer read
+  // in one task), and `count()` / `collect()` of a store run jobs too. The
+  // helpers below read the same facts from parquet footers on the driver
+  // and start no job; every store open, unfiltered count and `stats` read
+  // in graft goes through them.
+
+  /** The data files of parquet store `path` — one file, or a directory
+    * tree with hive partition directories — in path order, as Spark's own
+    * listing sees them: names starting with `_` (partition directories
+    * excepted) or `.` are skipped, except the `_metadata` /
+    * `_common_metadata` summary files Spark reads schemas from. Empty when
+    * `path` does not exist. Listed through the session's Hadoop
+    * FileSystem, so any Hadoop-reachable store works. */
+  private def parquetFiles(s: SparkSession, path: String): Seq[FileStatus] = {
+    val root = new HPath(path)
+    val fs = root.getFileSystem(s.sessionState.newHadoopConf())
+    def listed(n: String): Boolean = isSummary(n) ||
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_"))
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filter(c => listed(c.getPath.getName)).flatMap(walk)
+    (if (fs.exists(root)) walk(fs.getFileStatus(root)) else Nil).sortBy(_.getPath.toString)
+  }
+
+  private def isSummary(name: String): Boolean =
+    name.startsWith("_metadata") || name.startsWith("_common_metadata")
+
+  /** Whether the store whose listing is `files` has its schema in the
+    * first data file's footer, as `spark.read.parquet` reads it: not
+    * without a data file, with summary files, or with schema merging on. */
+  private def footerReadable(s: SparkSession, files: Seq[FileStatus]): Boolean =
+    files.nonEmpty && !files.exists(f => isSummary(f.getPath.getName)) &&
+      !s.sessionState.conf.isParquetSchemaMergingEnabled
+
+  /** The data-column schema of parquet store `path`, read from its first
+    * data file's footer with Spark's own conversion (session flags
+    * included; no Spark job), or None where [[readParquet]] leaves the
+    * inference to Spark: the footer is not readable ([[footerReadable]])
+    * or the file is corrupt. Hive partition columns are not in it: Spark
+    * appends them from the directory names. */
+  def parquetSchema(s: SparkSession, path: String): Option[StructType] = {
+    val files = parquetFiles(s, path)
+    if (!footerReadable(s, files)) None
+    else GraftParquetBridge.schemaOf(s, s.sessionState.newHadoopConf(), files.head)
+  }
+
+  /** `spark.read.parquet(path)` with the schema read from the footers, so
+    * opening the store starts no job. Where there is no footer schema the
+    * call IS `spark.read.parquet(path)`, so a missing path or an empty
+    * store fails exactly as it does there ("Unable to infer schema"). */
+  def readParquet(s: SparkSession, path: String): DataFrame =
+    parquetSchema(s, path) match {
+      case Some(schema) => s.read.schema(schema).parquet(path)
+      case None => s.read.parquet(path)
+    }
+
+  private def fileRows(conf: Configuration, f: FileStatus): Long = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    try r.getRecordCount finally r.close()
+  }
+
+  /** The exact row count of parquet store `path`: the sum of its data
+    * files' footer row counts (full footers — a schema read skips the row
+    * groups and sees 0 rows), with no Spark job. A path with no data file
+    * counts through `spark.read.parquet`, failing as it does there. */
+  def parquetRows(s: SparkSession, path: String): Long = {
+    val files = parquetFiles(s, path).filterNot(f => isSummary(f.getPath.getName))
+    if (files.isEmpty) return s.read.parquet(path).count()
+    val conf = s.sessionState.newHadoopConf()
+    files.iterator.map(fileRows(conf, _)).sum
+  }
+
+  /** The first row of parquet store `path` — meant for one-row artifacts
+    * such as an index's `stats` — decoded on the driver from its first
+    * non-empty data file, typed by that file's footer schema; no Spark
+    * job. Columns must be long, int, double, boolean or string (anything
+    * else throws). Without a readable footer or a row the result is
+    * `spark.read.parquet(path).collect()(0)`, failing as it does there. */
+  def parquetFirstRow(s: SparkSession, path: String): Row = {
+    val files = parquetFiles(s, path)
+    val conf = s.sessionState.newHadoopConf()
+    val first =
+      if (!footerReadable(s, files)) None
+      else files.find(fileRows(conf, _) > 0L)
+        .flatMap(f => GraftParquetBridge.schemaOf(s, conf, f).map(f -> _))
+    first.fold(s.read.parquet(path).collect()(0)) { case (file, schema) =>
+      decodeFirst(path, conf, file, schema)
+    }
+  }
+
+  private def decodeFirst(path: String, conf: Configuration, file: FileStatus,
+      schema: StructType): Row = {
+    import org.apache.spark.sql.types._
+    val reader = ParquetReader.builder(new GroupReadSupport(), file.getPath).withConf(conf).build()
+    val g = try reader.read() finally reader.close()
+    new GenericRowWithSchema(schema.fields.map { f =>
+      val i = g.getType.getFieldIndex(f.name)
+      if (g.getFieldRepetitionCount(i) == 0) null
+      else f.dataType match {
+        case LongType => g.getLong(i, 0)
+        case IntegerType => g.getInteger(i, 0)
+        case DoubleType => g.getDouble(i, 0)
+        case BooleanType => g.getBoolean(i, 0)
+        case StringType => g.getString(i, 0)
+        case t => throw new IllegalStateException(s"parquet store $path: column " +
+          s"${f.name} has type $t; a driver-side row read decodes long, int, " +
+          "double, boolean and string only")
+      }
+    }, schema)
   }
 
   /** True iff the physical plan of `df` contains no shuffle Exchange —

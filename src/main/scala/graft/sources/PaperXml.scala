@@ -133,7 +133,7 @@ object PaperXml {
     * parquet files amortizes it away while the DOM parse and all downstream
     * projections stay byte-identical (asserted in PaperXmlSpec). */
   def ingestPacked(spark: SparkSession, packedPath: String): (DataFrame, DataFrame) =
-    ingestFrom(spark.read.parquet(packedPath))
+    ingestFrom(Layout.readParquet(spark, packedPath))
 
   /** Shared tail of both ingest paths: DOM parse + the reference's
     * projections over any (paper_path, xml) frame. */

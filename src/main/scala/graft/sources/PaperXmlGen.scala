@@ -112,7 +112,7 @@ object PaperXmlGen {
 
   /** Generate (once) and return the corpus directory for `sfDir`'s scale. */
   def ensureCorpus(s: SparkSession, sfDir: String): String = {
-    val nDocs = graft.Tables(s, sfDir, "documents").count()
+    val nDocs = graft.Tables.rowCount(s, sfDir, "documents")
     val nPapers = math.max(20L, nDocs / 2).toInt
     val dir = Paths.get(System.getProperty("java.io.tmpdir"),
       s"graft_cermxml_${contentVersion}_$nPapers")

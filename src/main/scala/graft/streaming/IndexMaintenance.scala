@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -317,7 +318,12 @@ object IndexMaintenance {
     * policy. The feed schema is (id, op, payload[, seq]); 's' rows (skip
     * markers — unchanged re-crawls) are dropped at the door. Without a
     * feed-supplied `seq`, a batch touching one id twice is rejected
-    * loudly — there is no order to resolve it by (ADVICE r17). */
+    * loudly — there is no order to resolve it by (ADVICE r17). The batch
+    * lands in ONE write: without `seq`, the largest per-id touch count is
+    * observed on that write, and the check runs inside the segment build,
+    * so a rejected batch leaves no segment and no staging dir. The segment
+    * is just its `feed`; the policy's census reads the feed's row count
+    * from its parquet footers. */
   def applyBatch(s: SparkSession, dir: String, root: Path,
       batch: DataFrame, batchId: Long, family: Family = Postings): Unit = {
     val (_, floor, _) = resolve(s, dir, root, family)
@@ -329,19 +335,24 @@ object IndexMaintenance {
       .select(col(family.idCol).cast(LongType).as(family.idCol), col("op"),
         col("payload").cast(family.payloadType).as("payload"),
         (if (hasSeq) col("seq").cast(LongType) else lit(0L)).as("seq"))
-      .localCheckpoint(true)
-    if (!hasSeq) {
-      val multi = rows.groupBy(family.idCol).agg(count(lit(1)).as("n"))
-        .filter(col("n") > 1L).limit(1).count()
-      require(multi == 0L, s"micro-batch $batchId touches one ${family.idCol} " +
-        "more than once and the feed carries no seq column - intra-batch op " +
-        "order is undefined; supply seq (ingest offset) or split the batch")
-    }
     PersistedIndex.buildIfAbsent(seg) { tmp =>
-      rows.write.mode("overwrite").parquet(tmp.resolve("feed").toString)
-      // one bounded census row so the policy never recounts segments
-      rows.agg(count(lit(1)).as("n_changes"))
-        .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+      val feed = tmp.resolve("feed").toString
+      if (hasSeq) rows.write.mode("overwrite").parquet(feed)
+      else {
+        val (touched, touches) = graft.sources.Layout.withObserved(
+          rows.withColumn("__touches", count(lit(1)).over(Window.partitionBy(family.idCol))),
+          max(col("__touches")).as("touches"))
+        touched.drop("__touches").write.mode("overwrite").parquet(feed)
+        // a null max saw no rows; no report at all re-runs the check
+        val multi = touches() match {
+          case Some(r) => !r.isNullAt(0) && r.getLong(0) > 1L
+          case None => rows.groupBy(family.idCol).agg(count(lit(1)).as("n"))
+            .filter(col("n") > 1L).limit(1).count() > 0L
+        }
+        require(!multi, s"micro-batch $batchId touches one ${family.idCol} " +
+          "more than once and the feed carries no seq column - intra-batch op " +
+          "order is undefined; supply seq (ingest offset) or split the batch")
+      }
     }
     maybeFold(s, dir, root, family)
   }
@@ -351,7 +362,7 @@ object IndexMaintenance {
     * aggregate over the segment union; (batch, seq) orders writers. */
   private def changeFeed(s: SparkSession, segs: Seq[Path], family: Family): DataFrame = {
     val feed = segs.map { p =>
-      s.read.parquet(p.resolve("feed").toString)
+      graft.sources.Layout.readParquet(s, p.resolve("feed").toString)
         .withColumn("batch", lit(idOf(p, "seg_")))
     }.reduce(_ unionByName _)
     // struct max is lexicographic on the leading fields: (batch, seq) is a
@@ -374,17 +385,18 @@ object IndexMaintenance {
 
   /** Fire [[PersistedIndex.shouldCompact]] on the (base census, segment
     * census) pair; when it trips, fold and retire the segments. The
-    * segment census is the summed per-segment change counts — an upper
-    * bound when batches re-touch an id, the same over-count Lucene's
-    * deletes-pct trigger carries for superseded versions. */
+    * segment census is the summed per-segment change counts — each
+    * segment feed's row count, read from its parquet footers (no Spark
+    * job) — an upper bound when batches re-touch an id, the same
+    * over-count Lucene's deletes-pct trigger carries for superseded
+    * versions. */
   def maybeFold(s: SparkSession, dir: String, root: Path,
       family: Family = Postings): Option[Path] = {
     sweepRetired(root)
     val (base, _, segs) = resolve(s, dir, root, family)
     if (segs.isEmpty) return None
     val nBase = family.baseCount(s, base)
-    val nChanges = segs.map(p =>
-      PersistedIndex.statsRow(s, p).getAs[Long]("n_changes")).sum
+    val nChanges = segs.map(PersistedIndex.artifactRows(s, _, "feed")).sum
     if (!PersistedIndex.shouldCompact(nBase, 0L, nChanges)) return None
     Some(fold(s, dir, root, base, segs, family))
   }

@@ -124,32 +124,6 @@ class LayoutSpec extends SparkSpec {
     assert(unsorted.isEmpty, "a salted file lost its sort order")
   }
 
-  /** Jobs started by `body` on this thread, counted by a listener. A fence
-    * job run after the body is the last event the listener sees, so every
-    * earlier job start has been delivered once the fence shows up. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("layout-body", "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup("layout-fence", "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!groups.contains("layout-fence") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("layout-fence"), "fence job never reached the listener")
-      groups.toArray.count(_ == "layout-body")
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("capped write under the cap: no job after its write job, same files as a plain clustered write") {
     import spark.implicits._
     // 40 partitions: at and above 32 Spark lists a partitioned store with a

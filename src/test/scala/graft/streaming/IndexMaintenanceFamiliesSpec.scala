@@ -164,6 +164,14 @@ class IndexMaintenanceFamiliesSpec extends SparkSpec {
       IndexMaintenance.applyBatch(spark, corpus, root, batch, 0L)
     }
     assert(e.getMessage.contains("seq"))
+    // the check runs after the batch's one write, inside the segment
+    // build: the rejected batch publishes no segment and leaves no
+    // staging dir behind
+    assert(IndexMaintenance.resolve(spark, corpus, root)._3.isEmpty)
+    val staged = Files.list(root)
+    try assert(!staged.toArray.exists(_.toString.contains("/.build_")),
+      "a rejected batch left a staging dir under the root")
+    finally staged.close()
     // the SAME batch with a seq column is ordered and lands: update then
     // delete resolves to delete, never a resurrected doc
     IndexMaintenance.applyBatch(spark, corpus, root,
