@@ -9,7 +9,9 @@ marked ``job``.
 
 With ``--by-site`` it prints one row per first ``graft.*`` frame instead:
 the executions (and stray jobs) whose call site starts there, their jobs,
-tasks and seconds, the costliest site first.
+tasks and seconds, the costliest site first. ``secs`` sums the rows'
+durations; ``wall`` is the length of the union of their intervals, so
+executions of one site that ran at the same time count once.
 
 Usage:
     python3 scripts/joblog.py EVENT_LOG [--frames N] [--by-site]
@@ -119,11 +121,26 @@ def format_table(rows):
     return "\n".join(lines)
 
 
+def union_length(intervals):
+    """Total length covered by ``(start, end)`` intervals, overlaps once."""
+    total, reach = 0.0, None
+    for start, end in sorted(intervals):
+        if reach is None or start > reach:
+            total += end - start
+            reach = end
+        elif end > reach:
+            total += end - reach
+            reach = end
+    return total
+
+
 def by_site(rows):
-    """Rows ``{site, execs, jobs, tasks, secs}``, one per first ``graft.*``
-    frame (``-`` when a row has none), by seconds descending; an execution
-    that never finished counts 0 seconds."""
+    """Rows ``{site, execs, jobs, tasks, secs, wall}``, one per first
+    ``graft.*`` frame (``-`` when a row has none), by seconds descending.
+    ``secs`` sums the durations, ``wall`` is the union of the rows'
+    intervals; an execution that never finished counts 0 in both."""
     sites = {}
+    spans = {}
     for r in rows:
         key = r["site"][0] if r["site"] else "-"
         agg = sites.setdefault(key, {"site": key, "execs": 0, "jobs": 0,
@@ -132,13 +149,18 @@ def by_site(rows):
         agg["jobs"] += r["jobs"]
         agg["tasks"] += r["tasks"]
         agg["secs"] += r["dur_s"] or 0.0
+        if r["dur_s"] is not None:
+            spans.setdefault(key, []).append((r["start_s"], r["start_s"] + r["dur_s"]))
+    for key, agg in sites.items():
+        agg["wall"] = union_length(spans.get(key, []))
     return sorted(sites.values(), key=lambda a: (-a["secs"], a["site"]))
 
 
 def format_sites(sites):
-    lines = [f"{'secs':>8} {'execs':>5} {'jobs':>4} {'tasks':>5}  site"]
+    lines = [f"{'secs':>8} {'wall':>8} {'execs':>5} {'jobs':>4} {'tasks':>5}  site"]
     for a in sites:
-        lines.append(f"{a['secs']:8.3f} {a['execs']:>5} {a['jobs']:>4} {a['tasks']:>5}  {a['site']}")
+        lines.append(f"{a['secs']:8.3f} {a['wall']:8.3f} {a['execs']:>5} {a['jobs']:>4} "
+                     f"{a['tasks']:>5}  {a['site']}")
     lines.append(f"{len(sites)} sites, {sum(a['jobs'] for a in sites)} jobs, "
                  f"{sum(a['tasks'] for a in sites)} tasks")
     return "\n".join(lines)

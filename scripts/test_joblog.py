@@ -117,6 +117,30 @@ class JobTableTest(unittest.TestCase):
         self.assertIn("lshServe", out[1])
         self.assertEqual(out[-1], "2 sites, 5 jobs, 8 tasks")
 
+    def test_by_site_wall_counts_overlap_once(self):
+        def execution(eid, t0, t1, site):
+            return [{"Event": joblog.SQL_START, "executionId": eid, "time": t0,
+                     "details": site},
+                    {"Event": joblog.SQL_END, "executionId": eid, "time": t1}]
+        # three writes of one site: two overlap (1.0-1.6 s and 1.2-1.8 s),
+        # one runs later (3.0-3.5 s); another site overlaps them all
+        events = ([{"Event": "SparkListenerApplicationStart", "Timestamp": 0}]
+                  + execution(0, 1000, 1600, SITE) + execution(1, 1200, 1800, SITE)
+                  + execution(2, 3000, 3500, SITE) + execution(3, 1100, 1300, LISTING)
+                  + [{"Event": joblog.SQL_START, "executionId": 4, "time": 4000,
+                      "details": SITE}])
+        sites = joblog.by_site(joblog.job_table(events))
+        lsh, listing = sites
+        self.assertEqual(lsh["execs"], 4)
+        self.assertAlmostEqual(lsh["secs"], 1.7)
+        self.assertAlmostEqual(lsh["wall"], 1.3)
+        self.assertAlmostEqual(listing["wall"], 0.2)
+        self.assertEqual(joblog.union_length([]), 0.0)
+        self.assertAlmostEqual(joblog.union_length([(0, 2), (0.5, 1), (3, 4)]), 3.0)
+        out = joblog.format_sites(sites).splitlines()
+        self.assertEqual(out[0].split()[:2], ["secs", "wall"])
+        self.assertEqual(out[1].split()[:2], ["1.700", "1.300"])
+
 
 if __name__ == "__main__":
     unittest.main()

@@ -127,23 +127,28 @@ object CdcRules {
     * [[emptyRows]] frames and anything derived from them by PropagateEmpty-
     * Relation). One optimizer pass on the sub-frame, zero Spark jobs. */
   def isKnownEmpty(df: DataFrame): Boolean =
+    localRows(df).exists(_.isEmpty)
+
+  /** The rows of `df` when its optimized plan is a LocalRelation — driver
+    * data that filters and projections over it fold into — else None. */
+  private def localRows(df: DataFrame) =
     df.queryExecution.optimizedPlan match {
-      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        l.data.isEmpty
-      case _ => false
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(l.data)
+      case _ => None
     }
 
-  /** Eagerly materialize a delta-proportional frame that feeds several
-    * consumers (Catalyst does not dedupe common subtrees — the r16 audit
-    * found serve kernels re-deriving fresh/dead legs 2–8×) — UNLESS the
-    * frame is statically empty, in which case the checkpoint would (a)
-    * run a useless Spark job at DataFrame-CONSTRUCTION time and (b)
-    * replace the empty LocalRelation with an opaque RDD scan, forfeiting
+  /** Materialize a delta-proportional frame that feeds several consumers
+    * once (Catalyst does not dedupe common subtrees — the r16 audit found
+    * serve kernels re-deriving fresh/dead legs 2–8×), with an eager local
+    * checkpoint. A frame whose optimized plan is already a LocalRelation —
+    * statically empty, or a change set reduced on the driver — is returned
+    * unchanged: its rows are in the plan, a checkpoint would only run a
+    * Spark job at DataFrame-construction time, and an empty one would lose
     * PropagateEmptyRelation's erasure of the downstream anti-join/union
     * legs that keeps the expunged/post-fold serve plans persisted-only
     * (ADVICE r16). */
   def pinDelta(df: DataFrame): DataFrame =
-    if (isKnownEmpty(df)) df else df.localCheckpoint(true)
+    if (localRows(df).isDefined) df else df.localCheckpoint(true)
 
   /** [[pinDelta]] for a frame DERIVED from a delta input by a chain the
     * optimizer cannot see through (Spark's PropagateEmptyRelation does

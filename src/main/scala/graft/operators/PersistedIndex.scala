@@ -277,6 +277,44 @@ object PersistedIndex {
     }
   }
 
+  /** Run a generation's independent artifact writes at the same time and
+    * return once every one has finished. Each step gets a thread of its
+    * own, created for this call, so it inherits the caller's Spark local
+    * properties: the job group, the job description and any running SQL
+    * execution id follow every job a step starts, exactly as if the
+    * caller had run it. A single step runs on the caller's thread. When a
+    * step throws, the call still waits for every other step — a caller
+    * that cleans up on failure ([[buildIfAbsent]] deletes its staging
+    * dir) never races a write still in flight — then rethrows the error
+    * of the first failed step in argument order, the others attached as
+    * suppressed. An interrupt of the waiting caller does not cut the wait
+    * short either; it is re-asserted once every step has finished. The
+    * width is the number of steps; steps that depend on each other are
+    * chained inside one step. */
+  def writeArtifacts(steps: (() => Unit)*): Unit =
+    if (steps.length == 1) steps.head()
+    else {
+      val errors = new Array[Throwable](steps.length)
+      val threads = steps.indices.map { i =>
+        val t = new Thread(() =>
+          try steps(i)() catch { case e: Throwable => errors(i) = e },
+          s"graft-artifact-write-$i")
+        t.setDaemon(true)
+        t
+      }
+      threads.foreach(_.start())
+      var interrupted = false
+      threads.foreach { t =>
+        while (t.isAlive)
+          try t.join() catch { case _: InterruptedException => interrupted = true }
+      }
+      if (interrupted) Thread.currentThread().interrupt()
+      errors.filter(_ != null) match {
+        case Array() =>
+        case Array(first, rest @ _*) => rest.foreach(first.addSuppressed); throw first
+      }
+    }
+
   /** Remove orphaned `.build_*` staging dirs whose builder pid is dead
     * (crashed mid-build — ADVICE r12: these were never cleaned). A live
     * pid's staging dir is left alone; name format is
@@ -364,16 +402,21 @@ object PersistedIndex {
     * that arrived after the snapshot" (ir10/dd18/kg6/ss9/mm7). One
     * bounded two-value driver read; the probe side then pushes
     * `id > split` as a range predicate so delta work is
-    * delta-proportional. */
+    * delta-proportional. The range comes from the parquet footer
+    * statistics when `df` is an unfiltered parquet table open
+    * ([[graft.sources.Layout.footerLongRange]], no Spark job), else from a
+    * min/max aggregate. */
   def idWatermark(df: DataFrame, idCol: String): Long = {
-    val r = df.agg(min(col(idCol)), max(col(idCol))).collect()(0)
-    // fail loudly on an empty source (null min/max), not with an NPE from
-    // getLong — this is the SHARED helper and the kg2 convention applies
-    // (VERDICT r14 #2): a snapshot over zero rows is a caller bug
-    require(!r.isNullAt(0) && !r.isNullAt(1),
-      s"idWatermark: source table is empty — cannot snapshot '$idCol' " +
-        "(an incremental index over zero rows indicates a misconfigured source dir)")
-    val (lo, hi) = (r.getLong(0), r.getLong(1))
+    val (lo, hi) = graft.sources.Layout.footerLongRange(df, idCol).getOrElse {
+      val r = df.agg(min(col(idCol)), max(col(idCol))).collect()(0)
+      // fail loudly on an empty source (null min/max), not with an NPE from
+      // getLong — this is the SHARED helper and the kg2 convention applies
+      // (VERDICT r14 #2): a snapshot over zero rows is a caller bug
+      require(!r.isNullAt(0) && !r.isNullAt(1),
+        s"idWatermark: source table is empty — cannot snapshot '$idCol' " +
+          "(an incremental index over zero rows indicates a misconfigured source dir)")
+      (r.getLong(0), r.getLong(1))
+    }
     hi - (hi - lo) / 10L
   }
 

@@ -1015,10 +1015,12 @@ object DedupQueries {
       val split = PersistedIndex.idWatermark(t(s, dir, "documents"), "doc_id")
       val nSigs = writeLshSigs(Dedup.minhashSignatures(
         t(s, dir, "documents").filter(col("doc_id") <= split), "doc_id", "text"), tmp)
-      Dedup.lshCandidatePairs(
-          graft.sources.Layout.readParquet(s, tmp.resolve("sigs").toString), "doc_id")
-        .write.mode("overwrite").parquet(tmp.resolve("pairs").toString)
-      writeLshBands(s, tmp, nSigs, split)
+      // pairs and bands both read the `sigs` just written
+      PersistedIndex.writeArtifacts(
+        () => Dedup.lshCandidatePairs(
+            graft.sources.Layout.readParquet(s, tmp.resolve("sigs").toString), "doc_id")
+          .write.mode("overwrite").parquet(tmp.resolve("pairs").toString),
+        () => writeLshBands(s, tmp, nSigs, split))
     }
   }
 
@@ -1042,14 +1044,15 @@ object DedupQueries {
   private def writeLshBands(s: SparkSession, tmp: java.nio.file.Path,
       nSigs: Long, split: Long): Unit = {
     val nBk = lshBucketsFor(nSigs)
-    graft.sources.Layout.writePartitioned(
-      Dedup.bandedSignatures(
-          graft.sources.Layout.readParquet(s, tmp.resolve("sigs").toString), "doc_id")
-        .withColumn("kb", lshBandBucket(col("band"), col("key"), nBk)),
-      tmp.resolve("bands").toString, "kb", "band", "key")
-    graft.operators.PersistedIndex.splitStats(s, split)
-      .withColumn("n_buckets", lit(nBk))
-      .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+    graft.operators.PersistedIndex.writeArtifacts(
+      () => graft.sources.Layout.writePartitioned(
+        Dedup.bandedSignatures(
+            graft.sources.Layout.readParquet(s, tmp.resolve("sigs").toString), "doc_id")
+          .withColumn("kb", lshBandBucket(col("band"), col("key"), nBk)),
+        tmp.resolve("bands").toString, "kb", "band", "key"),
+      () => graft.operators.PersistedIndex.splitStats(s, split)
+        .withColumn("n_buckets", lit(nBk))
+        .write.mode("overwrite").parquet(tmp.resolve("stats").toString))
   }
 
   /** The LSH family's change-set merge: the post-change (sigs, pairs)
@@ -1134,12 +1137,12 @@ object DedupQueries {
   private[graft] def foldLshArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, dead: DataFrame, fresh: DataFrame, split: Long): Unit = {
     val (sigs, pairs) = mergeLsh(s, cur, dead, fresh)
-    val nSigs = writeLshSigs(sigs, tmp)
-    pairs.write.mode("overwrite").parquet(tmp.resolve("pairs").toString)
-    // every folded generation republishes the key-bucketed bands over its
-    // own (post-fold) sigs, sized to them, so the pruned serve works
-    // across generations
-    writeLshBands(s, tmp, nSigs, split)
+    graft.operators.PersistedIndex.writeArtifacts(
+      // every folded generation republishes the key-bucketed bands over its
+      // own (post-fold) sigs, sized to them, so the pruned serve works
+      // across generations: bands follow the sigs write
+      () => writeLshBands(s, tmp, writeLshSigs(sigs, tmp), split),
+      () => pairs.write.mode("overwrite").parquet(tmp.resolve("pairs").toString))
   }
 
   /** The LSH family's hooks into the streaming maintenance loop: probe =

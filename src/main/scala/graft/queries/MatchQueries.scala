@@ -699,18 +699,19 @@ object MatchQueries {
         .select(col("doc_id"), explode(fm(col("text"))).as("m"))
         .select(col("doc_id"), col("m.matched").as("entity")).distinct()
         .localCheckpoint(true)
-      ed.write.mode("overwrite").parquet(tmp.resolve("ed").toString)
-      ed.as("a").join(ed.as("b"), Seq("doc_id"))
-        .filter(col("a.entity") < col("b.entity"))
-        .groupBy(col("a.entity").as("e1"), col("b.entity").as("e2"))
-        .agg(count(lit(1)).as("n_co"))
-        .write.mode("overwrite").parquet(tmp.resolve("co").toString)
-      ed.groupBy("entity").agg(count(lit(1)).as("n_docs"))
-        .write.mode("overwrite").parquet(tmp.resolve("ent").toString)
-      t(s, dir, "documents").filter(col("doc_id") <= split)
-        .agg(count(lit(1)).as("nd"))
-        .withColumn("split_id", lit(split))
-        .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+      PersistedIndex.writeArtifacts(
+        () => ed.write.mode("overwrite").parquet(tmp.resolve("ed").toString),
+        () => ed.as("a").join(ed.as("b"), Seq("doc_id"))
+          .filter(col("a.entity") < col("b.entity"))
+          .groupBy(col("a.entity").as("e1"), col("b.entity").as("e2"))
+          .agg(count(lit(1)).as("n_co"))
+          .write.mode("overwrite").parquet(tmp.resolve("co").toString),
+        () => ed.groupBy("entity").agg(count(lit(1)).as("n_docs"))
+          .write.mode("overwrite").parquet(tmp.resolve("ent").toString),
+        () => t(s, dir, "documents").filter(col("doc_id") <= split)
+          .agg(count(lit(1)).as("nd"))
+          .withColumn("split_id", lit(split))
+          .write.mode("overwrite").parquet(tmp.resolve("stats").toString))
     }
   }
 
@@ -822,11 +823,12 @@ object MatchQueries {
   private[graft] def foldKgArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, dead: DataFrame, fresh: DataFrame, split: Long): Unit = {
     val (ed, co, ent, nd) = mergeKg(s, cur, dead, fresh)
-    ed.write.mode("overwrite").parquet(tmp.resolve("ed").toString)
-    co.write.mode("overwrite").parquet(tmp.resolve("co").toString)
-    ent.write.mode("overwrite").parquet(tmp.resolve("ent").toString)
-    nd.withColumn("split_id", lit(split))
-      .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+    graft.operators.PersistedIndex.writeArtifacts(
+      () => ed.write.mode("overwrite").parquet(tmp.resolve("ed").toString),
+      () => co.write.mode("overwrite").parquet(tmp.resolve("co").toString),
+      () => ent.write.mode("overwrite").parquet(tmp.resolve("ent").toString),
+      () => nd.withColumn("split_id", lit(split))
+        .write.mode("overwrite").parquet(tmp.resolve("stats").toString))
   }
 
   /** The KG family's hooks into the streaming maintenance loop: probe =

@@ -604,10 +604,11 @@ object MultimodalQueries {
       val split = PersistedIndex.idWatermark(t(s, dir, "documents"), "doc_id")
       val sigs = phashSigs(t(s, dir, "documents").filter(col("doc_id") <= split))
         .localCheckpoint(true)
-      phashCounts(sigs)
-        .write.mode("overwrite").parquet(tmp.resolve("rows").toString)
-      PersistedIndex.splitStats(s, split)
-        .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+      PersistedIndex.writeArtifacts(
+        () => phashCounts(sigs)
+          .write.mode("overwrite").parquet(tmp.resolve("rows").toString),
+        () => PersistedIndex.splitStats(s, split)
+          .write.mode("overwrite").parquet(tmp.resolve("stats").toString))
     }
   }
 
@@ -786,10 +787,11 @@ object MultimodalQueries {
   private[graft] def foldPhashArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, deadIds: DataFrame, fresh: DataFrame, split: Long): Unit = {
     import graft.operators.PersistedIndex
-    phashDelta(s, cur, deadIds, fresh, hinted = false)
-      .write.mode("overwrite").parquet(tmp.resolve("rows").toString)
-    PersistedIndex.splitStats(s, split)
-      .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+    PersistedIndex.writeArtifacts(
+      () => phashDelta(s, cur, deadIds, fresh, hinted = false)
+        .write.mode("overwrite").parquet(tmp.resolve("rows").toString),
+      () => PersistedIndex.splitStats(s, split)
+        .write.mode("overwrite").parquet(tmp.resolve("stats").toString))
   }
 
   /** The pHash family's hooks into the streaming maintenance loop: probe

@@ -289,13 +289,14 @@ object SimilarityQueries {
         t(s, dir, "embeddings").filter(col("vec_id") <= split).count().toDouble)).toLong)
       val idx = graft.operators.Similarity.centroidIndex(
         base.filter(col("vec_id") % stride === 0), "vec_id", "embedding")
-      graft.sources.Layout.writePartitioned(
-        withCell(base, idx).select(col("vec_id"), col("embedding"), col("norm"), col("cell")),
-        tmp.resolve("cells").toString, "cell")
-      base.filter(col("vec_id") % stride === 0).select("vec_id", "embedding")
-        .write.mode("overwrite").parquet(tmp.resolve("centroids").toString)
-      graft.operators.PersistedIndex.splitStats(s, split)
-        .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+      graft.operators.PersistedIndex.writeArtifacts(
+        () => graft.sources.Layout.writePartitioned(
+          withCell(base, idx).select(col("vec_id"), col("embedding"), col("norm"), col("cell")),
+          tmp.resolve("cells").toString, "cell"),
+        () => base.filter(col("vec_id") % stride === 0).select("vec_id", "embedding")
+          .write.mode("overwrite").parquet(tmp.resolve("centroids").toString),
+        () => graft.operators.PersistedIndex.splitStats(s, split)
+          .write.mode("overwrite").parquet(tmp.resolve("stats").toString))
     }
   }
 
@@ -525,11 +526,12 @@ object SimilarityQueries {
         col("cell").cast(LongType).as("cell"))
       .join(dead, Seq("vec_id"), "left_anti")
       .select("vec_id", "embedding", "norm", "cell")
-    graft.sources.Layout.writePartitioned(
-      liveCells.unionByName(freshCells), tmp.resolve("cells").toString, "cell")
-    centroids.write.mode("overwrite").parquet(tmp.resolve("centroids").toString)
-    PersistedIndex.splitStats(s, split)
-      .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+    PersistedIndex.writeArtifacts(
+      () => graft.sources.Layout.writePartitioned(
+        liveCells.unionByName(freshCells), tmp.resolve("cells").toString, "cell"),
+      () => centroids.write.mode("overwrite").parquet(tmp.resolve("centroids").toString),
+      () => PersistedIndex.splitStats(s, split)
+        .write.mode("overwrite").parquet(tmp.resolve("stats").toString))
   }
 
   /** The IVF family's hooks into the streaming maintenance loop: probe =

@@ -2427,13 +2427,14 @@ object TextQueries {
     // a build-time join so no serve ever joins the corpus-sized doclen
     val tf = tf0.join(dl, Seq("doc_id"))
       .withColumn("bucket", pmod(detHash(col("word")), lit(nBk)))
-    graft.sources.Layout.writePartitioned(
-      tf, tmp.resolve("postings").toString, "bucket", "word")
-    dl.write.mode("overwrite").parquet(tmp.resolve("doclen").toString)
-    dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_dl"))
-      .withColumn("split_id", lit(split))
-      .withColumn("n_buckets", lit(nBk))
-      .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+    PersistedIndex.writeArtifacts(
+      () => graft.sources.Layout.writePartitioned(
+        tf, tmp.resolve("postings").toString, "bucket", "word"),
+      () => dl.write.mode("overwrite").parquet(tmp.resolve("doclen").toString),
+      () => dl.agg(count(lit(1)).as("n_docs"), sum("dl").as("total_dl"))
+        .withColumn("split_id", lit(split))
+        .withColumn("n_buckets", lit(nBk))
+        .write.mode("overwrite").parquet(tmp.resolve("stats").toString))
   }
 
   /** The postings family's change-set merge: the post-change
@@ -2604,13 +2605,14 @@ object TextQueries {
     val nBk = readBuckets(s, cur)
     val (postings, doclen, stats) = mergePostings(s, cur,
       PersistedIndex.artifactFrame(s, cur, "postings"), dead, freshTfOf(s, fresh))
-    graft.sources.Layout.writePartitioned(
-      postings.withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
-      tmp.resolve("postings").toString, "bucket", "word")
-    doclen.write.mode("overwrite").parquet(tmp.resolve("doclen").toString)
-    stats.withColumn("split_id", lit(split))
-      .withColumn("n_buckets", lit(nBk))
-      .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+    PersistedIndex.writeArtifacts(
+      () => graft.sources.Layout.writePartitioned(
+        postings.withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
+        tmp.resolve("postings").toString, "bucket", "word"),
+      () => doclen.write.mode("overwrite").parquet(tmp.resolve("doclen").toString),
+      () => stats.withColumn("split_id", lit(split))
+        .withColumn("n_buckets", lit(nBk))
+        .write.mode("overwrite").parquet(tmp.resolve("stats").toString))
   }
 
   /** ir14b_expunged_serve — the post-compaction face of ir14: run the
@@ -3171,16 +3173,17 @@ object TextQueries {
     val split = PersistedIndex.idWatermark(t(s, dir, "documents"), "doc_id")
     val nBk = bucketCountFor(
       t(s, dir, "documents").filter(col("doc_id") <= split).select("doc_id").count())
-    graft.sources.Layout.writePartitioned(
-      positionsOf(t(s, dir, "documents").filter(col("doc_id") <= split)
-          .select("doc_id", "text"))
-        .withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
-      tmp.resolve("positions").toString, "bucket", "word")
-    t(s, dir, "documents").filter(col("doc_id") <= split).select("doc_id")
-      .write.mode("overwrite").parquet(tmp.resolve("docs").toString)
-    PersistedIndex.splitStats(s, split)
-      .withColumn("n_buckets", lit(nBk))
-      .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+    PersistedIndex.writeArtifacts(
+      () => graft.sources.Layout.writePartitioned(
+        positionsOf(t(s, dir, "documents").filter(col("doc_id") <= split)
+            .select("doc_id", "text"))
+          .withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
+        tmp.resolve("positions").toString, "bucket", "word"),
+      () => t(s, dir, "documents").filter(col("doc_id") <= split).select("doc_id")
+        .write.mode("overwrite").parquet(tmp.resolve("docs").toString),
+      () => PersistedIndex.splitStats(s, split)
+        .withColumn("n_buckets", lit(nBk))
+        .write.mode("overwrite").parquet(tmp.resolve("stats").toString))
   }
 
   /** Per-(doc, word) sorted 1-based position lists of a (doc_id, text)
@@ -3216,18 +3219,19 @@ object TextQueries {
       // the ONLY corpus access: the delta rows being folded in (empty when
       // hi <= w0 — the fold then just re-publishes with the marker)
       val delta = docs.filter(col("doc_id") > w0).select("doc_id", "text")
-      graft.sources.Layout.writePartitioned(
-        graft.sources.Layout.readParquet(s, cur.resolve("positions").toString)
-          .select("doc_id", "word", "positions")
-          .unionByName(positionsOf(delta))
-          .withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
-        tmp.resolve("positions").toString, "bucket", "word")
-      graft.sources.Layout.readParquet(s, cur.resolve("docs").toString)
-        .unionByName(delta.select("doc_id"))
-        .write.mode("overwrite").parquet(tmp.resolve("docs").toString)
-      PersistedIndex.splitStatsAtMax(s, math.max(w0, hi))
-        .withColumn("n_buckets", lit(nBk))
-        .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+      PersistedIndex.writeArtifacts(
+        () => graft.sources.Layout.writePartitioned(
+          graft.sources.Layout.readParquet(s, cur.resolve("positions").toString)
+            .select("doc_id", "word", "positions")
+            .unionByName(positionsOf(delta))
+            .withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
+          tmp.resolve("positions").toString, "bucket", "word"),
+        () => graft.sources.Layout.readParquet(s, cur.resolve("docs").toString)
+          .unionByName(delta.select("doc_id"))
+          .write.mode("overwrite").parquet(tmp.resolve("docs").toString),
+        () => PersistedIndex.splitStatsAtMax(s, math.max(w0, hi))
+          .withColumn("n_buckets", lit(nBk))
+          .write.mode("overwrite").parquet(tmp.resolve("stats").toString))
     }
     target
   }
@@ -3302,18 +3306,19 @@ object TextQueries {
       cur: java.nio.file.Path, dead: DataFrame, fresh: DataFrame, split: Long): Unit = {
     import graft.operators.PersistedIndex
     val nBk = readBuckets(s, cur)
-    graft.sources.Layout.writePartitioned(
-      mergePositions(PersistedIndex.artifactFrame(s, cur, "positions"), dead,
-          positionsOf(fresh))
-        .withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
-      tmp.resolve("positions").toString, "bucket", "word")
-    graft.sources.Layout.readParquet(s, cur.resolve("docs").toString)
-      .join(dead, Seq("doc_id"), "left_anti")
-      .unionByName(fresh.select("doc_id").distinct())
-      .write.mode("overwrite").parquet(tmp.resolve("docs").toString)
-    PersistedIndex.splitStats(s, split)
-      .withColumn("n_buckets", lit(nBk))
-      .write.mode("overwrite").parquet(tmp.resolve("stats").toString)
+    PersistedIndex.writeArtifacts(
+      () => graft.sources.Layout.writePartitioned(
+        mergePositions(PersistedIndex.artifactFrame(s, cur, "positions"), dead,
+            positionsOf(fresh))
+          .withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
+        tmp.resolve("positions").toString, "bucket", "word"),
+      () => graft.sources.Layout.readParquet(s, cur.resolve("docs").toString)
+        .join(dead, Seq("doc_id"), "left_anti")
+        .unionByName(fresh.select("doc_id").distinct())
+        .write.mode("overwrite").parquet(tmp.resolve("docs").toString),
+      () => PersistedIndex.splitStats(s, split)
+        .withColumn("n_buckets", lit(nBk))
+        .write.mode("overwrite").parquet(tmp.resolve("stats").toString))
   }
 
   /** The positional family's hooks into the streaming maintenance loop

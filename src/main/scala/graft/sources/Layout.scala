@@ -6,6 +6,7 @@ import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
 import org.apache.spark.sql.types.StructType
@@ -324,6 +325,97 @@ object Layout {
           "double, boolean and string only")
       }
     }, schema)
+  }
+
+  /** Per parquet store in `paths`, its footer schema and all its rows,
+    * decoded on the driver by Spark's own parquet reader
+    * ([[GraftParquetBridge.readRows]], no Spark job): the rows
+    * `spark.read.parquet(path).collect()` returns, as InternalRows. None
+    * when the stores hold more than `maxBytes` — the summed uncompressed
+    * byte size of their row groups, read from the footers; a negative
+    * bound admits nothing — or when a store is not a flat store with a
+    * readable footer ([[footerReadable]]; hive partition directories are
+    * not flat). */
+  private[graft] def collectSmall(s: SparkSession, paths: Seq[String], maxBytes: Long)
+      : Option[Seq[(StructType, Seq[InternalRow])]] = {
+    import scala.jdk.CollectionConverters._
+    if (maxBytes < 0L) return None
+    val conf = s.sessionState.newHadoopConf()
+    val stores = paths.map { p =>
+      val root = new HPath(p)
+      (root.getFileSystem(conf).makeQualified(root), parquetFiles(s, p))
+    }
+    val flat = stores.forall { case (root, files) => footerReadable(s, files) &&
+      files.forall(f => f.getPath == root || f.getPath.getParent == root) }
+    if (!flat) return None
+    val bytes = stores.iterator.flatMap(_._2).map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      try r.getFooter.getBlocks.asScala.map(_.getTotalByteSize).sum finally r.close()
+    }.sum
+    if (bytes > maxBytes) return None
+    val schemas = stores.map { case (_, files) => GraftParquetBridge.schemaOf(s, conf, files.head) }
+    if (schemas.exists(_.isEmpty)) None
+    else Some(stores.zip(schemas.flatten).map { case ((_, files), schema) =>
+      (schema, GraftParquetBridge.readRows(s, files, schema))
+    })
+  }
+
+  /** (min, max) of long column `column` over `df` from parquet footer
+    * statistics, with no Spark job, when `df` is an unfiltered open of a
+    * parquet store — its optimized plan is the file relation, or a
+    * projection of the relation's own columns — and `column` is one of
+    * its data columns: the values a min/max aggregate over `df` returns.
+    * None, so the caller aggregates, for any other frame, when a non-empty
+    * row group of a file carries no statistics for the column or stores
+    * it as anything but a signed INT64, and when no file records a
+    * non-null value. */
+  private[graft] def footerLongRange(df: DataFrame, column: String): Option[(Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.schema.LogicalTypeAnnotation.IntLogicalTypeAnnotation
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    import org.apache.spark.sql.types.LongType
+    val plan = df.queryExecution.optimizedPlan
+    val files = (plan match {
+      case Project(_, l: LogicalRelation) => Some(l)
+      case l: LogicalRelation => Some(l)
+      case _ => None
+    }).flatMap { l =>
+      val attr = plan.output.find(_.name == column)
+      l.relation match {
+        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] &&
+            attr.exists(a => a.dataType == LongType && l.output.exists(_.exprId == a.exprId)) &&
+            !fs.partitionSchema.fieldNames.exists(_.equalsIgnoreCase(column)) =>
+          Some(fs.location.inputFiles.toSeq)
+        case _ => None
+      }
+    }.getOrElse(return None)
+    val conf = df.sparkSession.sessionState.newHadoopConf()
+    var lo = Long.MaxValue
+    var hi = Long.MinValue
+    for (f <- files) {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f), conf))
+      val blocks = try r.getFooter.getBlocks.asScala finally r.close()
+      for (b <- blocks if b.getRowCount > 0L) {
+        val c = b.getColumns.asScala.find(_.getPath.toDotString == column).getOrElse(return None)
+        val st = c.getStatistics
+        val signedLong = c.getPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 &&
+          (c.getPrimitiveType.getLogicalTypeAnnotation match {
+            case null => true
+            case i: IntLogicalTypeAnnotation => i.isSigned
+            case _ => false
+          })
+        if (!signedLong || st == null || st.isEmpty) return None
+        // statistics without a non-null value: a row group of nulls only
+        if (st.hasNonNullValue) {
+          lo = math.min(lo, st.genericGetMin.asInstanceOf[java.lang.Long])
+          hi = math.max(hi, st.genericGetMax.asInstanceOf[java.lang.Long])
+        }
+      }
+    }
+    if (lo > hi) None else Some((lo, hi))
   }
 
   /** True iff the physical plan of `df` contains no shuffle Exchange —

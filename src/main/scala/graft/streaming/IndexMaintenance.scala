@@ -2,11 +2,16 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{DataType, LongType, StringType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, InterpretedOrdering}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 import graft.operators.{CdcRules, PersistedIndex}
 import graft.queries.TextQueries
@@ -45,8 +50,9 @@ import graft.queries.TextQueries
   *
   * Cross-batch semantics: the LAST op per doc wins (a re-crawled doc
   * supersedes its earlier version; an update then delete is a delete).
-  * Serve- and fold-time both reduce the segment union with one
-  * change-set-bounded max-struct aggregate, so multi-touch ids are
+  * Serve- and fold-time both reduce the segment union last-writer-wins
+  * ([[changeFeed]]: on the driver when the feeds are small, else one
+  * change-set-bounded max-struct aggregate), so multi-touch ids are
   * exact, never double-served. WITHIN one micro-batch ordering needs a
   * feed-supplied `seq` column (a Kafka offset, a crawl sequence number);
   * without one the loop REJECTS a batch that touches the same id twice
@@ -357,22 +363,62 @@ object IndexMaintenance {
     maybeFold(s, dir, root, family)
   }
 
-  /** The cumulative change feed of `segs`, last-writer-wins — reduced to
-    * one (id, op, payload) row per id. Change-set bounded: one max-struct
-    * aggregate over the segment union; (batch, seq) orders writers. */
-  private def changeFeed(s: SparkSession, segs: Seq[Path], family: Family): DataFrame = {
-    val feed = segs.map { p =>
-      graft.sources.Layout.readParquet(s, p.resolve("feed").toString)
-        .withColumn("batch", lit(idOf(p, "seg_")))
-    }.reduce(_ unionByName _)
-    // struct max is lexicographic on the leading fields: (batch, seq) is a
-    // total writer order - batch ids are distinct per segment and seq
-    // orders rows within one (or is constant 0 for single-touch batches)
-    feed
-      .groupBy(family.idCol)
-      .agg(max(struct(col("batch"), col("seq"), col("op"), col("payload"))).as("w"))
-      .select(col(family.idCol), col("w.op").as("op"), col("w.payload").as("payload"))
-      .localCheckpoint(true)
+  /** The cumulative change feed of `segs`, last-writer-wins: one
+    * (id, op, payload) row per id, the row of the greatest
+    * (batch, seq, op, payload) — batch ids are distinct per segment and
+    * `seq` orders rows within one (or is constant 0 for single-touch
+    * batches), so (batch, seq) is a total writer order. Feeds holding at
+    * most `maxBytes` (footer byte sizes; the session's broadcast-join
+    * threshold, a negative one admits nothing) are read and reduced on the
+    * driver, with no Spark job, into a LocalRelation; larger feeds reduce
+    * in one change-set-bounded max-struct aggregate, pinned. Both paths
+    * order writers by Catalyst's ordering of that struct, so nulls and
+    * ties resolve alike. */
+  private[streaming] def changeFeed(s: SparkSession, segs: Seq[Path],
+      family: Family): DataFrame =
+    changeFeed(s, segs, family, s.sessionState.conf.autoBroadcastJoinThreshold)
+
+  private[streaming] def changeFeed(s: SparkSession, segs: Seq[Path], family: Family,
+      maxBytes: Long): DataFrame = {
+    val feeds = segs.map(p => (idOf(p, "seg_"), p.resolve("feed").toString))
+    graft.sources.Layout.collectSmall(s, feeds.map(_._2), maxBytes) match {
+      case Some(stores) => reduceOnDriver(s, feeds.map(_._1).zip(stores), family)
+      case None =>
+        feeds.map { case (batch, feed) =>
+          graft.sources.Layout.readParquet(s, feed).withColumn("batch", lit(batch))
+        }.reduce(_ unionByName _)
+          .groupBy(family.idCol)
+          .agg(max(struct(col("batch"), col("seq"), col("op"), col("payload"))).as("w"))
+          .select(col(family.idCol), col("w.op").as("op"), col("w.payload").as("payload"))
+          .localCheckpoint(true)
+    }
+  }
+
+  /** [[changeFeed]]'s driver path over decoded feed rows, keyed by batch:
+    * per id, the row whose (batch, seq, op, payload) is greatest under
+    * Catalyst's [[InterpretedOrdering]] of that struct — the order
+    * `max(struct(...))` takes; a null id is one group, as in `groupBy`. */
+  private def reduceOnDriver(s: SparkSession,
+      feeds: Seq[(Long, (StructType, Seq[InternalRow]))], family: Family): DataFrame = {
+    val writerOrder = InterpretedOrdering.forSchema(
+      Seq(LongType, LongType, StringType, family.payloadType))
+    val last = new java.util.HashMap[Any, InternalRow]()
+    for ((batch, (schema, rows)) <- feeds) {
+      val Seq(id, seq, op, payload) =
+        Seq(family.idCol, "seq", "op", "payload").map(schema.fieldIndex)
+      rows.foreach { r =>
+        val w = new GenericInternalRow(Array[Any](batch, r.get(seq, LongType),
+          r.get(op, StringType), r.get(payload, family.payloadType)))
+        val key = r.get(id, LongType)
+        val cur = last.get(key)
+        if (cur == null || writerOrder.gt(w, cur)) last.put(key, w)
+      }
+    }
+    GraftParquetBridge.localFrame(s, StructType(Seq(StructField(family.idCol, LongType),
+        StructField("op", StringType), StructField("payload", family.payloadType))),
+      last.asScala.toVector.map { case (key, w) =>
+        new GenericInternalRow(Array[Any](key, w.get(2, StringType), w.get(3, family.payloadType)))
+      })
   }
 
   /** The (dead ids, fresh payload rows) pair every family's serve/fold
