@@ -226,8 +226,9 @@ object PersistedIndex {
     * millis); a stamped one is deleted once the stamp is at least
     * `graceMs` old. An unparsable stamp RESTARTS the window — parsing it
     * as epoch 0 would delete at once, the no-grace hazard the stamp
-    * exists to prevent. Shared by [[sweepSuperseded]], [[sweepStale]] and
-    * the streaming loop's segment sweep. */
+    * exists to prevent. Shared by [[sweepSuperseded]], [[sweepStale]],
+    * the append fold (the home it folded from) and the streaming loop's
+    * segment sweep. */
   private[graft] def retire(p: Path, now: Long, graceMs: Long): Unit = {
     val mark = p.resolve("_SUPERSEDED")
     if (!Files.exists(mark)) Files.writeString(mark, now.toString)
@@ -377,7 +378,7 @@ object PersistedIndex {
   }
 
   /** The APPEND-fold policy (the raw, tombstone-free lineage —
-    * IndexMaintenance.foldAppends/compactBasePosIndex): fold when the
+    * IndexMaintenance.foldAppends): fold when the
     * in-flight delta strictly exceeds θ of the BASE. The denominators
     * differ on purpose: an expunge fold's benefit scales with the
     * change-set fraction of what it will SERVE ([[shouldCompact]]), while
@@ -392,31 +393,31 @@ object PersistedIndex {
       thetaE6: Long = CompactThetaE6): Boolean =
     nBase > 0L && nDelta * 1000000L > thetaE6 * nBase
 
-  // ---- the incremental family's shared watermark convention ----------
-  // (VERDICT r13 #4: five ensure*Index builders hand-rolled the same
-  // min/max → last-decile split → stats-row dance; a sixth family would
-  // drift. One helper each, zero behavior change.)
+  // ---- the incremental families' shared watermark convention ---------
+  // Every family snapshots, folds and records its watermark through these
+  // helpers, so no two families can disagree on the decile split.
 
-  /** Snapshot watermark over an id column: the base segment is ids
-    * at-or-below the last decile of the id range — modeling "the rows
-    * that arrived after the snapshot" (ir10/dd18/kg6/ss9/mm7). One
-    * bounded two-value driver read; the probe side then pushes
-    * `id > split` as a range predicate so delta work is
-    * delta-proportional. The range comes from the parquet footer
+  /** (min, max) of a non-empty id column: from the parquet footer
     * statistics when `df` is an unfiltered parquet table open
-    * ([[graft.sources.Layout.footerLongRange]], no Spark job), else from a
-    * min/max aggregate. */
-  def idWatermark(df: DataFrame, idCol: String): Long = {
-    val (lo, hi) = graft.sources.Layout.footerLongRange(df, idCol).getOrElse {
+    * ([[graft.sources.Layout.footerLongRange]], no Spark job), else from
+    * one min/max aggregate. An empty source fails loudly: a snapshot or a
+    * fold over zero rows is a misconfigured source dir. */
+  def idRange(df: DataFrame, idCol: String): (Long, Long) =
+    graft.sources.Layout.footerLongRange(df, idCol).getOrElse {
       val r = df.agg(min(col(idCol)), max(col(idCol))).collect()(0)
-      // fail loudly on an empty source (null min/max), not with an NPE from
-      // getLong — this is the SHARED helper and the kg2 convention applies
-      // (VERDICT r14 #2): a snapshot over zero rows is a caller bug
       require(!r.isNullAt(0) && !r.isNullAt(1),
         s"idWatermark: source table is empty — cannot snapshot '$idCol' " +
           "(an incremental index over zero rows indicates a misconfigured source dir)")
       (r.getLong(0), r.getLong(1))
     }
+
+  /** Snapshot watermark over an id column: the base segment is ids
+    * at-or-below the last decile of the id range ([[idRange]]) — modeling
+    * "the rows that arrived after the snapshot" (ir10/dd18/kg6/ss9/mm7).
+    * The probe side then pushes `id > split` as a range predicate so delta
+    * work is delta-proportional. */
+  def idWatermark(df: DataFrame, idCol: String): Long = {
+    val (lo, hi) = idRange(df, idCol)
     hi - (hi - lo) / 10L
   }
 
@@ -505,23 +506,5 @@ object PersistedIndex {
     val r = statsRow(s, home)
     if (r.schema.fieldNames.contains("n_buckets")) r.getAs[Long]("n_buckets")
     else legacy
-  }
-
-  /** [[splitStats]] with the FOLD-COMPLETE marker: written by append-fold
-    * compactions whose folded watermark is the corpus MAX id. A home's
-    * fingerprint pins the source bytes for its whole lifetime, so the
-    * marker stays truthful — a probe that reads `at_max = true` may
-    * construct its delta as a TRUE empty LocalRelation (zero corpus
-    * access, PropagateEmptyRelation erases the whole fresh leg) instead
-    * of a `id > split` corpus filter the planner cannot know is empty. */
-  def splitStatsAtMax(s: SparkSession, split: Long): DataFrame =
-    s.range(1).select(lit(split).as("split_id"), lit(true).as("at_max"))
-
-  /** (watermark, fold-complete) — `at_max` defaults to false for stats
-    * rows that predate the marker (every non-folded generation). */
-  def readSplitInfo(s: SparkSession, home: Path): (Long, Boolean) = {
-    val r = statsRow(s, home)
-    (r.getAs[Long]("split_id"),
-      r.schema.fieldNames.contains("at_max") && r.getAs[Boolean]("at_max"))
   }
 }

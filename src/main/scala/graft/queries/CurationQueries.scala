@@ -1777,77 +1777,62 @@ object CurationQueries {
     * each family's eligibility (reversal keeps token and char counts;
     * postings/kg/ivf have none), so updated members re-enter 1:1 — which
     * is exactly what makes n_serving an exact Long identity, oracle-
-    * replayable from the corpus alone. */
+    * replayable from the corpus alone.
+    *
+    * Fold-invariant by construction: each row counts the family's CURRENT
+    * store restricted to ids at or below the corpus feed watermark, and
+    * takes appends as the corpus rows above it. An unfolded store holds
+    * exactly the ids up to its snapshot watermark, which equals the feed
+    * watermark; an append fold ([[graft.streaming.IndexMaintenance
+    * .foldAppends]]) only adds ids above it. So every number is the same
+    * before and after any append fold of any family. */
   def e2e8CdcAudit(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.PersistedIndex
     val pHome = TextQueries.ensureBasePostingsIndex(s, dir)
     val lHome = DedupQueries.ensureLshIndex(s, dir)
-    val kHome = MatchQueries.ensureKgDeltaIndex(s, dir)
     val vHome = SimilarityQueries.ensureIvfDeltaIndex(s, dir)
     val mHome = MultimodalQueries.ensurePhashIndex(s, dir)
-    // the BASE (unfolded) lineage on purpose: the census must stay a pure
-    // function of the corpus (the oracle replays the decile watermark in
-    // SQL), so a `_c` append fold published by e2e10/compactBasePosIndex
-    // must be invisible here — a scheduler that wants the post-fold view
-    // reads e2e10's walk instead (ADVICE r16: the face is corpus-
-    // replayable BY DESIGN; folded watermarks are tracked by the caller)
-    val posHome = TextQueries.ensurePosIndexBase(s, dir)
+    val posHome = TextQueries.ensurePosIndex(s, dir)
     import graft.operators.CdcRules
     val docs = t(s, dir, "documents")
     val embs = t(s, dir, "embeddings")
     // change rules derive at the CORPUS feed watermark (the CdcRules
-    // contract — what the oracle recomputes), equal to each family's
-    // snapshot watermark for uncompacted stores
-    // the change rules are PURE ID ARITHMETIC (CdcRules), and every store's
-    // ids are corpus ids — so the tombstoned/updated censuses are direct
-    // filters over the store's id column, folded into ONE aggregate pass
-    // per store. The r16 shape semi-joined each store against two corpus-
-    // derived id frames: 12 corpus-sized shuffles per audit, the whole
-    // reason e2e8's second decade read 2.66× (VERDICT r17 #5) — the
-    // single-pass census is map-side only and counts the same rows exactly.
-    def row(family: String, split: Long, store: DataFrame, idCol: String,
-        feedSplit: Long, appended: DataFrame): DataFrame = {
-      val counted = store.agg(count(lit(1)).as("n_base"),
+    // contract — what the oracle recomputes). They are PURE ID ARITHMETIC,
+    // and every store's ids are corpus ids — so the tombstoned/updated
+    // censuses are direct filters over the store's id column, folded into
+    // ONE map-side aggregate pass per store.
+    def row(family: String, feedSplit: Long, store: DataFrame, idCol: String,
+        appended: DataFrame): DataFrame = {
+      val counted = store.where(col(idCol) <= feedSplit).agg(count(lit(1)).as("n_base"),
         coalesce(sum(when(CdcRules.isTombstone(col(idCol), feedSplit), 1L)
           .otherwise(0L)), lit(0L)).as("n_tombstoned"),
         coalesce(sum(when(CdcRules.isUpdate(col(idCol), feedSplit), 1L)
           .otherwise(0L)), lit(0L)).as("n_upd"))
       val nApp = appended.agg(count(lit(1)).as("n_app"))
       counted.crossJoin(nApp)
-        .select(lit(family).as("family"), lit(split).as("split_id"),
+        .select(lit(family).as("family"), lit(feedSplit).as("split_id"),
           col("n_base"), col("n_tombstoned"),
           (col("n_upd") + col("n_app")).as("n_fresh"),
           (col("n_base") - col("n_tombstoned") + col("n_upd") + col("n_app")).as("n_serving"))
     }
-    val (pSp, lSp, kSp, vSp, mSp) = (
-      PersistedIndex.readSplit(s, pHome), PersistedIndex.readSplit(s, lHome),
-      PersistedIndex.readSplit(s, kHome), PersistedIndex.readSplit(s, vHome),
-      PersistedIndex.readSplit(s, mHome))
-    val posSp = PersistedIndex.readSplit(s, posHome)
     val dFeed = CdcRules.feedSplit(docs, "doc_id")
     val vFeed = CdcRules.feedSplit(embs, "vec_id")
-    // kg's census covers every base doc, so its store stand-in is the
-    // id-only corpus slice (the stats row holds only the count)
-    val kgStore = docs.filter(col("doc_id") <= kSp).select("doc_id")
     val rows = Seq(
       row("ivf", vFeed, Layout.readParquet(s, vHome.resolve("cells").toString), "vec_id",
-        vFeed, embs.filter(col("vec_id") > vSp)),
-      row("kg", dFeed, kgStore, "doc_id", dFeed,
-        docs.filter(col("doc_id") > kSp)),
+        embs.filter(col("vec_id") > vFeed)),
+      // kg's census covers every base doc, so its store stand-in is the
+      // id-only corpus (the stats row holds only the count)
+      row("kg", dFeed, docs.select("doc_id"), "doc_id", docs.filter(col("doc_id") > dFeed)),
       row("lsh", dFeed, Layout.readParquet(s, lHome.resolve("sigs").toString), "doc_id",
-        dFeed,
-        docs.filter(col("doc_id") > lSp && size(split(col("text"), " ")) >= 3)),
+        docs.filter(col("doc_id") > dFeed && size(split(col("text"), " ")) >= 3)),
       row("phash", dFeed, Layout.readParquet(s, mHome.resolve("rows").toString)
           .withColumnRenamed("asset_id", "doc_id"), "doc_id",
-        dFeed,
-        docs.filter(col("doc_id") > mSp && length(col("text")) >= 64)),
-      // the positional family's per-doc census artifact (v3: persisted at
-      // build time — no distinct over the (doc, word) store at audit time)
-      row("positions", dFeed,
-        Layout.readParquet(s, posHome.resolve("docs").toString), "doc_id",
-        dFeed, docs.filter(col("doc_id") > posSp)),
+        docs.filter(col("doc_id") > dFeed && length(col("text")) >= 64)),
+      // the positional family's per-doc census artifact (no distinct over
+      // the (doc, word) store at audit time)
+      row("positions", dFeed, Layout.readParquet(s, posHome.resolve("docs").toString), "doc_id",
+        docs.filter(col("doc_id") > dFeed)),
       row("postings", dFeed, Layout.readParquet(s, pHome.resolve("doclen").toString), "doc_id",
-        dFeed, docs.filter(col("doc_id") > pSp)))
+        docs.filter(col("doc_id") > dFeed)))
     rows.reduce(_ unionByName _).orderBy("family")
   }
 
@@ -1888,17 +1873,16 @@ object CurationQueries {
        |FROM rws ORDER BY family""".stripMargin
   }
 
-  /** e2e9_compact_policy — the DECISION face of the e2e8 census (VERDICT
-    * r15 #8): each family's audit row gains a `should_compact` verdict
-    * from [[graft.operators.PersistedIndex.shouldCompact]] — fold when
+  /** e2e9_compact_policy — the DECISION face of the e2e8 census: each
+    * family's audit row gains a `should_compact` verdict from
+    * [[graft.operators.PersistedIndex.shouldCompact]] — fold when
     * tombstoned+fresh strictly exceed θ of the serving set. The
     * arithmetic is integer-only so the oracle replays the decision
-    * bit-for-bit from the corpus — which is also why the face is
-    * corpus-replayable BY DESIGN (ADVICE r16): it audits the BASE
-    * lineage and keeps reporting the same census after a fold publishes.
-    * A scheduler that wants the post-fold view — where a drained family
-    * goes silent — consumes [[e2e10LifecycleWalk]], which performs the
-    * folds and reads the published generations back. */
+    * bit-for-bit from the corpus, and the census is fold-invariant
+    * ([[e2e8CdcAudit]]), so the face reports the same rows after any
+    * append fold publishes. A scheduler that wants the post-fold view —
+    * where a drained family goes silent — consumes [[e2e10LifecycleWalk]],
+    * which performs the folds and reads the published generations back. */
   def e2e9CompactPolicy(s: SparkSession, dir: String): DataFrame = {
     val theta = graft.operators.PersistedIndex.CompactThetaE6
     e2e8CdcAudit(s, dir).withColumn("should_compact",
@@ -1919,7 +1903,7 @@ object CurationQueries {
   }
 
   /** e2e10_lifecycle_walk — the full index-maintenance CYCLE as one
-    * registered, oracle-checked face (VERDICT r16 #8): per family, the
+    * registered, oracle-checked face: per family, the
     * pre-fold CDC census (e2e8's arithmetic), the compaction verdict
     * (e2e9's policy), then — ONLY where the policy fires — the actual
     * fold ([[graft.streaming.IndexMaintenance.compactCdc]] over the
@@ -1932,12 +1916,13 @@ object CurationQueries {
     * should_compact THEN n_serving ELSE n_base END` is precisely the
     * identity this face audits every cycle (the ops dashboard a
     * production engine ships). The `positions_base` arm walks the
-    * APPEND-fold lifecycle of the raw lineage
-    * ([[graft.queries.TextQueries.compactBasePosIndex]]): after this
-    * face runs, every positional probe (ir11b/ir13/ir13b/ir17/ir21)
-    * resolves the folded generation and serves persisted-only — the
-    * bench-visible payoff of VERDICT r16 #6. The `postings_stream` arm
-    * (VERDICT r17 #8) walks the STREAMING maintenance loop itself:
+    * APPEND-fold lifecycle of the raw lineage: its split and base census
+    * are e2e8's `positions` row (fold-invariant), and where the append
+    * policy fires it runs [[graft.streaming.IndexMaintenance.foldAppends]]
+    * — after this face runs, every positional probe (ir11b/ir13/ir13b/
+    * ir17/ir21) resolves the fold-complete generation and serves
+    * persisted-only. The `postings_stream` arm walks the STREAMING
+    * maintenance loop itself:
     * two parity micro-batches land through `applyBatch`, the policy
     * fires per landing, and the row reports the loop's resolved state
     * (fold floor, store size, live in-flight split) — oracle-replayable
@@ -1984,6 +1969,7 @@ object CurationQueries {
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       val audit = pre.map(r => r.getString(0) -> r).toMap
+      val positions = TextQueries.PositionsMaintenance
       def walkFamily(f: IndexMaintenance.Family) = {
         val r = audit.getOrElse(f.name, sys.error(s"e2e10: ${f.name} audit row missing"))
         val (split, nb, nt, nf, ns) =
@@ -1996,18 +1982,17 @@ object CurationQueries {
           else (f.baseCount(s, IndexMaintenance.compactCdc(s, dir, f)), 0L)
         (f.name, split, nb, nt, nf, ns, fire, post, infl)
       }
-      // the raw (append-only) lineage's own fold: the positional family's
-      // in-flight append segment folds into a `_c` generation when the
+      // the raw (append-only) lineage's fold: the positional family's
+      // in-flight appends fold into the `_c<hi>` generation when the
       // policy fires (appends-only census — no tombstones on this lineage)
       def walkPosBase() = {
-        val posBase = TextQueries.ensurePosIndexBase(s, dir)
-        val posSp = PersistedIndex.readSplit(s, posBase)
-        val nBaseP = storeCount(posBase, "docs")
+        val r = audit(positions.name)
+        val (posSp, nBaseP) = (r.getLong(1), r.getLong(2))
         val nApp = t(s, dir, "documents")
           .filter(col("doc_id") > posSp).select("doc_id").count()
         val fireP = PersistedIndex.shouldFoldAppends(nBaseP, nApp)
         val (postP, inflP) =
-          if (fireP) (storeCount(TextQueries.compactBasePosIndex(s, dir), "docs"), 0L)
+          if (fireP) (storeCount(IndexMaintenance.foldAppends(s, dir, positions), "docs"), 0L)
           else (nBaseP, nApp)
         ("positions_base", posSp, nBaseP, 0L, nApp, nBaseP + nApp, fireP, postP, inflP)
       }
@@ -2040,7 +2025,6 @@ object CurationQueries {
         ("postings_stream", sFloor, sStore, sNt, sNf, sStore - sNt + sNf,
           sFloor >= 0L, sStore, sNt + sNf)
       }
-      val positions = TextQueries.PositionsMaintenance
       val famFutures = IndexMaintenance.Families.filterNot(_ == positions)
         .map(f => Future(walkFamily(f)))
       val posChain = Future { val fam = walkFamily(positions); (fam, walkPosBase()) }

@@ -355,23 +355,40 @@ object SimilarityQueries {
     * compaction that re-assigns the delta into the artifact under the SAME
     * frozen centroids cannot change answers (ss7's refresh ≡ rebuild
     * equivalence, applied to search results). */
-  /** The shared IVF SERVING KERNEL over a persisted cell snapshot: the
-    * `dead` id frame leaves the candidate set via an anti-join on the
-    * cell-pruned artifact, the `fresh` (vec_id, embedding) frame is the
-    * ONLY segment normed/assigned (against the FROZEN artifact centroids)
-    * at probe time, and each segment is scored separately against the
-    * broadcast probes (the DPP-safe ss2b shape), merged by the k-bounded
-    * native TopK. ss9 passes (∅, appends); ss10 the
-    * [[graft.operators.CdcRules]] change set; the expunged serve (∅, ∅)
-    * against a CDC-folded generation. */
+  /** The IVF family's change-set merge, shared by [[ivfServe]] and
+    * [[foldIvfArtifacts]]: `live` is the persisted `cells` minus the
+    * `dead` ids, with `cell` as a long (the hive partition column reads
+    * back as an int); `freshCells` is the `fresh` (vec_id, embedding)
+    * rows normed and assigned against the FROZEN centroid index `idx` —
+    * never retrained, the FAISS add-after-train contract. Both frames are
+    * (vec_id, embedding, norm, cell), and `live ∪ freshCells` is the
+    * post-change cell table. Pure: the caller picks the index column (the
+    * serve's broadcast index, the fold's default) and does its own
+    * pinning and pruning around the call. The two legs stay separate
+    * because the serve scores them separately (see [[ivfServe]]). */
+  private def mergeIvf(cells: DataFrame, dead: DataFrame, fresh: DataFrame,
+      idx: Column): (DataFrame, DataFrame) =
+    (cells.select(col("vec_id"), col("embedding"), col("norm"),
+        col("cell").cast(LongType).as("cell"))
+      .join(dead, Seq("vec_id"), "left_anti"),
+     withCell(withNorm(fresh), idx)
+      .select(col("vec_id"), col("embedding"), col("norm"), col("cell")))
+
+  /** The shared IVF SERVING KERNEL over a persisted cell snapshot:
+    * [[mergeIvf]] over the cell-pruned artifact, the `fresh` rows being
+    * the ONLY segment normed/assigned at probe time, and each leg scored
+    * separately against the broadcast probes (the DPP-safe ss2b shape),
+    * merged by the k-bounded native TopK. ss9 passes (∅, appends); ss10
+    * the [[graft.operators.CdcRules]] change set; the expunged serve
+    * (∅, ∅) against a CDC-folded generation. */
   private def ivfServe(s: SparkSession, home: java.nio.file.Path,
       dead: DataFrame, fresh: DataFrame, q0: DataFrame): DataFrame = {
     // SERVE-time assigns always ride the broadcast index (threshold 0):
     // the inline-literal path re-materializes the √N-centroid struct array
     // per evaluated row inside the interpreted HOF chain — at sf10 (423
     // centroids) that alone doubled the fresh leg's per-row cost and blew
-    // task binaries to ~1.8 MB (VERDICT r17 #2). Values are identical on
-    // both paths, so answers and oracle hashes do not move.
+    // task binaries to ~1.8 MB. Values are identical on both paths, so
+    // answers and oracle hashes do not move.
     val idx = graft.operators.Similarity.centroidIndex(
       graft.operators.PersistedIndex.artifactFrame(s, home, "centroids"),
       "vec_id", "embedding", inlineThreshold = 0)
@@ -383,19 +400,7 @@ object SimilarityQueries {
       .select(col("query_id"), col("qv"), col("qn"), col("pc.cent_id").as("cell"))
     val probedCells = q.select(explode(probeArr).as("pc"))
       .select(col("pc.cent_id")).distinct().collect().map(_.getLong(0)).sorted
-    val baseCells = graft.operators.PersistedIndex.artifactFrame(s, home, "cells")
-      .where(col("cell").isin(probedCells.map(java.lang.Long.valueOf): _*))
-      .withColumn("cell", col("cell").cast(LongType))
-      .join(dead, Seq("vec_id"), "left_anti")
-      .select("vec_id", "embedding", "norm", "cell")
-    // PIN the assigned fresh leg: its `cell` column is a CodegenFallback
-    // transform/array_max chain, and CollapseProject re-inlines it into the
-    // downstream In-filter, join key and output — each consumer re-runs the
-    // whole O(√N)-centroid assign per row (measured 11 s vs 0.3 s pinned on
-    // a 2k-row window at sf10, VERDICT r17 #2). pinDelta keeps statically
-    // empty frames as LocalRelations, so the expunged/post-fold serves stay
-    // persisted-only.
-    // and SPREAD the assign: the fresh frame arrives as one band-pruned
+    // SPREAD the assign: the fresh frame arrives as one band-pruned
     // parquet task (or one checkpointed partition), so the O(rows·√N) assign
     // would run single-threaded; a round-robin shuffle of the change set is
     // a few MB against seconds of per-row work. Skipped when statically
@@ -403,14 +408,22 @@ object SimilarityQueries {
     val freshPar =
       if (graft.operators.CdcRules.isKnownEmpty(fresh)) fresh
       else fresh.repartition(s.sparkContext.defaultParallelism)
-    // prune AFTER the pin: an In(cell, …) filter above the unpinned assign
+    val (baseCells, assigned) = mergeIvf(
+      graft.operators.PersistedIndex.artifactFrame(s, home, "cells")
+        .where(col("cell").isin(probedCells.map(java.lang.Long.valueOf): _*)),
+      dead, freshPar, idx)
+    // PIN the assigned fresh leg: its `cell` column is a CodegenFallback
+    // transform/array_max chain, and CollapseProject re-inlines it into the
+    // downstream In-filter, join key and output — each consumer re-runs the
+    // whole O(√N)-centroid assign per row (measured 11 s vs 0.3 s pinned on
+    // a 2k-row window at sf10). pinDelta keeps statically empty frames as
+    // LocalRelations, so the expunged/post-fold serves stay persisted-only.
+    // Prune AFTER the pin: an In(cell, …) filter above the unpinned assign
     // pushes through the round-robin exchange into the single scan task and
     // re-runs the whole assign serially inside the checkpoint job (measured
     // 7.4 s vs 1.3 s at a 20k-row delta); over the materialized frame the
     // cell column is data and the prune is free.
-    val freshCells = graft.operators.CdcRules.pinDelta(
-      withCell(withNorm(freshPar), idx)
-        .select(col("vec_id"), col("embedding"), col("norm"), col("cell")))
+    val freshCells = graft.operators.CdcRules.pinDelta(assigned)
       .where(col("cell").isin(probedCells.map(java.lang.Long.valueOf): _*))
     // score each segment SEPARATELY and union the scored rows: putting the
     // hive-partitioned base scan inside a union BEFORE the broadcast join
@@ -506,26 +519,19 @@ object SimilarityQueries {
     ivfServe(s, home, dead, fresh, postChangeQueries(s, dir, wStar))
   }
 
-  /** The IVF family's artifact rewrite with the change set passed in:
-    * dead vectors leave the persisted cell table, fresh vectors are
-    * assigned under the FROZEN centroids — copied, never retrained (the
-    * FAISS add-after-train contract) — with the same centroid index the
-    * probe assigns with in-plan, so folding appends moves them from
-    * probe-time assignment to persisted rows bit-exactly and ss9's
-    * answers are byte-identical across the fold. */
+  /** The IVF family's fold: it writes `live ∪ freshCells` of
+    * [[mergeIvf]] — the frames [[ivfServe]] scores — plus the centroids,
+    * copied unchanged, and the watermark, as a new generation. Folding
+    * appends therefore moves them from probe-time assignment to persisted
+    * rows bit-exactly, and ss9's answers are byte-identical across the
+    * fold. */
   private[graft] def foldIvfArtifacts(s: SparkSession, tmp: java.nio.file.Path,
       cur: java.nio.file.Path, dead: DataFrame, fresh: DataFrame, split: Long): Unit = {
     import graft.operators.PersistedIndex
     val centroids = graft.sources.Layout.readParquet(s, cur.resolve("centroids").toString)
-    val idx = graft.operators.Similarity.centroidIndex(centroids, "vec_id", "embedding")
-    val freshCells = withCell(withNorm(fresh), idx)
-      .select(col("vec_id"), col("embedding"), col("norm"),
-        col("cell").cast(LongType).as("cell"))
-    val liveCells = graft.sources.Layout.readParquet(s, cur.resolve("cells").toString)
-      .select(col("vec_id"), col("embedding"), col("norm"),
-        col("cell").cast(LongType).as("cell"))
-      .join(dead, Seq("vec_id"), "left_anti")
-      .select("vec_id", "embedding", "norm", "cell")
+    val (liveCells, freshCells) = mergeIvf(
+      graft.sources.Layout.readParquet(s, cur.resolve("cells").toString), dead, fresh,
+      graft.operators.Similarity.centroidIndex(centroids, "vec_id", "embedding"))
     PersistedIndex.writeArtifacts(
       () => graft.sources.Layout.writePartitioned(
         liveCells.unionByName(freshCells), tmp.resolve("cells").toString, "cell"),

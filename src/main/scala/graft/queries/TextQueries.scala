@@ -3155,19 +3155,6 @@ object TextQueries {
     graft.operators.PersistedIndex.ensure("positions_index", dir, posFp(dir))(
       buildPosIndex(s, dir, _))
 
-  /** The UNFOLDED base generation — built if absent, ignoring any `_c`
-    * fold generation [[ensurePosIndex]] would resolve: the audit faces
-    * (e2e8/e2e9/e2e10) census THIS lineage, so their decile-watermark
-    * census stays a pure function of the corpus — fold-invariant by
-    * construction, which is what keeps their oracles replayable from the
-    * corpus alone after [[compactBasePosIndex]] publishes (ADVICE r16). */
-  private[queries] def ensurePosIndexBase(s: SparkSession, dir: String): java.nio.file.Path = {
-    import graft.operators.PersistedIndex
-    val h = PersistedIndex.home("positions_index", dir, posFp(dir))
-    if (!PersistedIndex.isBuilt(h)) PersistedIndex.buildIfAbsent(h, dir)(buildPosIndex(s, dir, _))
-    h
-  }
-
   private def buildPosIndex(s: SparkSession, dir: String, tmp: java.nio.file.Path): Unit = {
     import graft.operators.PersistedIndex
     val split = PersistedIndex.idWatermark(t(s, dir, "documents"), "doc_id")
@@ -3193,48 +3180,6 @@ object TextQueries {
       .select(col("doc_id"), (col("pos") + 1).cast(LongType).as("pos"), col("word"))
       .groupBy("doc_id", "word")
       .agg(sort_array(collect_list("pos")).as("positions"))
-
-  /** APPEND-FOLD compaction for the positional family — its OWN fold,
-    * not [[IndexMaintenance.foldAppends]], for two reasons. It records
-    * [[graft.operators.PersistedIndex.splitStatsAtMax]] — the fold
-    * consumed the corpus — so every later positional probe (ir11b/ir13/
-    * ir13b/ir17) gets a TRUE empty append frame from
-    * [[IndexMaintenance.serving]] and serves persisted-only (a
-    * `doc_id > split` filter the planner cannot know is empty kept a
-    * corpus scan + posexplode subtree in every probe). And it deliberately
-    * does NOT sweep superseded homes: the plain base home must survive for
-    * the audit faces (e2e8 audits the BASE lineage so its census stays
-    * corpus-replayable) and the `_cdc` expunge generations must survive
-    * for the tombstone faces. */
-  private[queries] def compactBasePosIndex(s: SparkSession, dir: String): java.nio.file.Path = {
-    import graft.operators.PersistedIndex
-    val cur = ensurePosIndex(s, dir)
-    val (w0, atMax) = PersistedIndex.readSplitInfo(s, cur)
-    if (atMax) return cur
-    val docs = t(s, dir, "documents")
-    val hi = docs.agg(max(col("doc_id"))).collect()(0).getLong(0)
-    val target = IndexMaintenance.appendHome(dir, PositionsMaintenance, hi)
-    PersistedIndex.buildIfAbsent(target, dir) { tmp =>
-      val nBk = readBuckets(s, cur)
-      // the ONLY corpus access: the delta rows being folded in (empty when
-      // hi <= w0 — the fold then just re-publishes with the marker)
-      val delta = docs.filter(col("doc_id") > w0).select("doc_id", "text")
-      PersistedIndex.writeArtifacts(
-        () => graft.sources.Layout.writePartitioned(
-          graft.sources.Layout.readParquet(s, cur.resolve("positions").toString)
-            .select("doc_id", "word", "positions")
-            .unionByName(positionsOf(delta))
-            .withColumn("bucket", pmod(detHash(col("word")), lit(nBk))),
-          tmp.resolve("positions").toString, "bucket", "word"),
-        () => graft.sources.Layout.readParquet(s, cur.resolve("docs").toString)
-          .unionByName(delta.select("doc_id"))
-          .write.mode("overwrite").parquet(tmp.resolve("docs").toString),
-        () => PersistedIndex.splitStatsAtMax(s, math.max(w0, hi))
-          .withColumn("n_buckets", lit(nBk))
-          .write.mode("overwrite").parquet(tmp.resolve("stats").toString))
-    }
-    target
-  }
 
   /** The positions family's change-set merge: the post-change
     * (doc_id, word, positions) table — `base` lists (bucket-pruned by the
@@ -3473,8 +3418,8 @@ object TextQueries {
     (10L, "scan", "data", 0),
     (11L, "merge", "join", 0))
 
-  /** ir21_phrase_batch — BATCHED serving for the POSITIONAL family
-    * (VERDICT r16 #4): [[batchServe]]'s contract on [[posServe]] — the
+  /** ir21_phrase_batch — BATCHED serving for the POSITIONAL family:
+    * [[batchServe]]'s contract on [[posServe]] — the
     * whole (phrase, slop) query table rides ONE bucket-pruned positional
     * read for the UNION of all terms (the bucket IN list covers every
     * query at once, so the artifact read amortizes across the batch the
@@ -3482,9 +3427,9 @@ object TextQueries {
     * broadcast, each query's ordered-window test is evaluated per
     * (query, doc) inside codegen over the position arrays, and the
     * per-query top-k is the k-bounded native TopK — no un-partitioned
-    * window, no per-query plan. Post-fold ([[compactBasePosIndex]]) the
-    * delta leg is a true empty LocalRelation and the whole batch serves
-    * persisted-only. */
+    * window, no per-query plan. After an append fold
+    * ([[IndexMaintenance.foldAppends]]) the delta leg is a true empty
+    * LocalRelation and the whole batch serves persisted-only. */
   def ir21PhraseBatch(s: SparkSession, dir: String): DataFrame =
     ir21Internals(s, dir, PhraseBatch, BatchTopK)
 

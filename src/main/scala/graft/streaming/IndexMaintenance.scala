@@ -156,9 +156,8 @@ object IndexMaintenance {
   /** The change set a batch face serves against. */
   sealed trait ChangeSet
   /** Rows past the snapshot watermark, nothing tombstoned (ir10/ir11b/
-    * dd18/kg6/mm7/ss9). A generation whose stats carry the fold-complete
-    * marker serves a TRUE empty fresh frame, so the plan is
-    * persisted-only. */
+    * dd18/kg6/mm7/ss9). A fold-complete generation ([[foldComplete]])
+    * serves a TRUE empty fresh frame, so the plan is persisted-only. */
   case object Appends extends ChangeSet
   /** The [[CdcRules]] rule set at the feed watermark (ir14/ir18/dd20/kg7/
     * mm8/ss10). Once [[compactCdc]] has published that watermark's
@@ -187,22 +186,29 @@ object IndexMaintenance {
   def appendHome(dir: String, f: Family, hi: Long): Path =
     PersistedIndex.home(f.kind, dir, f.fingerprint(dir) + "_c" + hi)
 
+  /** A home holds every row of its source exactly when it is the append
+    * generation named by its own watermark: [[foldAppends]] publishes
+    * `_c<hi>` with `hi` = the source's max id as that watermark, and the
+    * fingerprint pins the source for the home's lifetime. No IO beyond
+    * the `stats` read the caller already made. */
+  private def foldComplete(dir: String, f: Family, home: Path, split: Long): Boolean =
+    home == appendHome(dir, f, split)
+
   private def noIds(s: SparkSession, f: Family): DataFrame =
     CdcRules.emptyIds(s, f.idCol)
 
   private def noRows(s: SparkSession, f: Family): DataFrame =
     CdcRules.emptyRows(s, f.idCol, f.payloadCol, f.payloadType)
 
-  private def maxId(src: DataFrame, f: Family): Long =
-    src.agg(max(col(f.idCol))).collect()(0).getLong(0)
-
   /** (serving home, dead ids, fresh rows) for `changes` — what a batch
     * face hands to its kernel, as [[probe]] does for the streaming loop.
     * The append floor of every fresh frame is the SNAPSHOT watermark
     * (rows already folded into the artifacts never re-enter), while the
     * rule and feed legs key on the CORPUS feed watermark, so a face stays
-    * oracle-identical across folds. Faces that already hold the feed
-    * watermark pass it as `wStar`. */
+    * oracle-identical across folds. [[Appends]] on a fold-complete home
+    * and [[Tombstones]] once `_cdc<w>` is published both hand back
+    * statically empty frames. Faces that already hold the feed watermark
+    * pass it as `wStar`. */
   def serving(s: SparkSession, dir: String, f: Family, changes: ChangeSet,
       wStar: Option[Long] = None): (Path, DataFrame, DataFrame) = {
     lazy val w = wStar.getOrElse(feedSplit(s, dir, f))
@@ -215,9 +221,9 @@ object IndexMaintenance {
     changes match {
       case Appends =>
         val home = f.ensureBase(s, dir)
-        val (split, atMax) = PersistedIndex.readSplitInfo(s, home)
+        val split = PersistedIndex.readSplit(s, home)
         (home, noIds(s, f),
-          if (atMax) noRows(s, f)
+          if (foldComplete(dir, f, home, split)) noRows(s, f)
           else f.source(s, dir).filter(col(f.idCol) > split).select(f.idCol, f.payloadCol))
       case Tombstones =>
         val cdc = cdcHome(dir, f, w)
@@ -256,7 +262,7 @@ object IndexMaintenance {
     if (PersistedIndex.isBuilt(target)) return target
     val base = f.ensureBase(s, dir)
     val snap = PersistedIndex.readSplit(s, base)
-    val hi = maxId(src, f)
+    val hi = PersistedIndex.idRange(src, f.idCol)._2
     PersistedIndex.buildIfAbsent(target, dir) { tmp =>
       f.foldInto(s, tmp, base, CdcRules.tombstoneIds(src, f.idCol, wStar),
         CdcRules.freshRows(src, f.idCol, f.payloadCol, wStar, snap, f.updated),
@@ -265,26 +271,29 @@ object IndexMaintenance {
     target
   }
 
-  /** APPEND COMPACTION (the Lucene segment merge): fold the rows past the
-    * base's watermark into [[appendHome]] — nothing dead, the in-flight
-    * segment is the fresh side — then sweep the superseded generation.
-    * The base's own resolution re-points at the new generation, and
-    * because segment merge is answer-invariant the append faces serve
-    * byte-identical results while their delta work drops to zero. Only
-    * the appended rows are re-derived; base artifacts are copied. Returns
-    * the current home (unchanged when nothing is in flight). */
+  /** APPEND COMPACTION (the Lucene segment merge), the one append fold of
+    * every family: fold the rows past the base's watermark into
+    * [[appendHome]] at the source's max id — nothing dead, the in-flight
+    * rows are the fresh side, written by the family's [[Family.foldInto]]
+    * through the same merge its serve reads. The result is fold-complete
+    * ([[foldComplete]]): the base's resolution re-points at it and the
+    * append faces serve byte-identical answers with an empty fresh leg.
+    * Only the home folded FROM is retired (stamped, deleted after the
+    * grace window): the `_cdc<w>` generation that [[Tombstones]] serving
+    * resolves by name lives under the same parent and must survive.
+    * Returns the current home (unchanged when nothing is in flight). */
   def foldAppends(s: SparkSession, dir: String, f: Family): Path = {
     val base = f.ensureBase(s, dir)
     val w0 = PersistedIndex.readSplit(s, base)
     val src = f.source(s, dir)
-    val hi = maxId(src, f)
+    val hi = PersistedIndex.idRange(src, f.idCol)._2
     if (hi <= w0) return base
     val target = appendHome(dir, f, hi)
     PersistedIndex.buildIfAbsent(target, dir) { tmp =>
       f.foldInto(s, tmp, base, noIds(s, f),
         src.filter(col(f.idCol) > w0).select(f.idCol, f.payloadCol), hi)
     }
-    PersistedIndex.sweepSuperseded(target, dir)
+    PersistedIndex.retire(base, System.currentTimeMillis(), PersistedIndex.SweepGraceMs)
     target
   }
 

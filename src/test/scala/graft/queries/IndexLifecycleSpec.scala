@@ -7,13 +7,14 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.{CdcRules, PersistedIndex}
 import graft.streaming.IndexMaintenance
-import graft.streaming.IndexMaintenance.{Family, Tombstones}
+import graft.streaming.IndexMaintenance.{Appends, Family, Tombstones}
 
 /** The batch index lifecycle over the six-family registry
   * ([[IndexMaintenance.Families]]), one test per family where the
   * families share a shape: the append fold ([[IndexMaintenance
-  * .foldAppends]]), the expunge fold ([[IndexMaintenance.compactCdc]])
-  * and e2e10's walk over the registry. */
+  * .foldAppends]]), the expunge fold ([[IndexMaintenance.compactCdc]]),
+  * the two folds side by side, and the e2e9/e2e10 audits over the
+  * registry. */
 class IndexLifecycleSpec extends SparkSpec {
   import spark.implicits._
 
@@ -124,11 +125,24 @@ class IndexLifecycleSpec extends SparkSpec {
         assert(cents(home1) === cents(home0), "compaction must never retrain centroids")
         assert(spark.read.parquet(home1.resolve("cells").toString)
           .filter(col("vec_id") === 95L).count() === 1L)
+      }),
+    AppendFold(TextQueries.PositionsMaintenance,
+      "positions compaction: probe byte-identical, post-fold plan persisted-only",
+      // the phrase occurs in the base (40) and in the delta (95)
+      tmp => writeDocs(tmp, i =>
+        if (i == 40L || i == 95L) "table scan data pad" else "pad filler pad"),
+      tmp => TextQueries.ir11bPersistedPositions(spark, tmp).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq,
+      before = (_, rows) => assert(rows.map(_.productElement(0)) === Seq(40L, 95L)),
+      folded = (tmp, _, _) => {
+        val plan = TextQueries.ir11bPersistedPositions(spark, tmp)
+          .queryExecution.executedPlan.toString
+        assert(!plan.contains("documents.parquet") && !plan.contains("ExistingRDD"),
+          s"the folded generation serves persisted-only:\n$plan")
       }))
 
-  test("the append folds cover every registry family but positions, which keeps its own") {
-    assert(appendFolds.map(_.family).toSet ===
-      IndexMaintenance.Families.toSet - TextQueries.PositionsMaintenance)
+  test("the append folds cover every registry family") {
+    assert(appendFolds.map(_.family).toSet === IndexMaintenance.Families.toSet)
   }
 
   appendFolds.foreach { c =>
@@ -149,6 +163,8 @@ class IndexLifecycleSpec extends SparkSpec {
       assert(!Files.exists(home0), "the stamped generation sweeps once the grace elapses")
       assert(c.family.ensureBase(spark, tmp) === home1, "resolution re-points")
       assert(PersistedIndex.readSplit(spark, home1) === 99L)
+      assert(CdcRules.isKnownEmpty(IndexMaintenance.serving(spark, tmp, c.family, Appends)._3),
+        "the fold-complete generation serves a statically empty fresh frame")
       assert(c.face(tmp) === before, "compaction must be invisible to the served answer")
       assert(IndexMaintenance.foldAppends(spark, tmp, c.family) === home1,
         "compact again is a no-op")
@@ -189,6 +205,31 @@ class IndexLifecycleSpec extends SparkSpec {
       assert(f.baseCount(spark, cdc) > 0L)
       assert(IndexMaintenance.compactCdc(spark, tmp, f) === cdc, "refold is a no-op")
     }
+  }
+
+  Seq(IndexMaintenance.Postings, SimilarityQueries.IvfMaintenance).foreach { f =>
+    test(s"foldAppends[${f.name}]: the _cdc generation stays unstamped and Tombstones serving resolves it") {
+      val tmp = walkCorpus(s"cdckeep_${f.name}")
+      val cdc = IndexMaintenance.compactCdc(spark, tmp, f)
+      val home0 = f.ensureBase(spark, tmp)
+      val home1 = IndexMaintenance.foldAppends(spark, tmp, f)
+      assert(home1 !== home0, "the fixture has appends in flight")
+      assert(Files.exists(home0.resolve("_SUPERSEDED")), "the home folded from is retired")
+      assert(!Files.exists(cdc.resolve("_SUPERSEDED")),
+        "an append fold must not retire the expunge generation")
+      assert(IndexMaintenance.serving(spark, tmp, f, Tombstones)._1 === cdc)
+    }
+  }
+
+  test("e2e9: rows unchanged after an append fold of every family") {
+    val tmp = walkCorpus("e2e9folds")
+    def rows() = CurationQueries.e2e9CompactPolicy(spark, tmp).collect().map(_.toSeq).toSeq
+    val before = rows()
+    IndexMaintenance.Families.foreach { f =>
+      val home0 = f.ensureBase(spark, tmp)
+      assert(IndexMaintenance.foldAppends(spark, tmp, f) !== home0, s"${f.name}: the fixture folds")
+    }
+    assert(rows() === before, "the census is fold-invariant")
   }
 
   test("e2e10: the family column is the registry's six names plus the two lineage arms") {

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.operators.CdcRules
+import graft.streaming.IndexMaintenance
 
 /** Round-17 pins: the empty-delta erasure (VERDICT r16 #6 + ADVICE r16
   * low #3) — statically-empty delta frames must stay LocalRelations so
@@ -73,15 +74,15 @@ class R17QueriesSpec extends SparkSpec {
       TextQueries.ir11bPersistedPositions(spark, tmp).queryExecution.executedPlan.toString
     assert(planBefore.contains("ExistingRDD"),
       s"pre-fold the delta leg is materialized:\n$planBefore")
-    val base = TextQueries.ensurePosIndexBase(spark, tmp)
-    val folded = TextQueries.compactBasePosIndex(spark, tmp)
+    val base = TextQueries.PositionsMaintenance.ensureBase(spark, tmp)
+    val folded = IndexMaintenance.foldAppends(spark, tmp, TextQueries.PositionsMaintenance)
     assert(folded.getFileName.toString.endsWith("_c129"),
       "the fold generation is keyed by the folded-in watermark")
     assert(java.nio.file.Files.exists(base),
       "the base home must survive the fold — the audit faces census it")
     assert(TextQueries.ensurePosIndex(spark, tmp) === folded,
       "probe resolution re-points at the folded generation")
-    assert(graft.operators.PersistedIndex.readSplitInfo(spark, folded) === ((129L, true)))
+    assert(graft.operators.PersistedIndex.readSplit(spark, folded) === 129L)
     // post-fold: answers byte-identical, plans persisted-only — zero
     // corpus scan, zero tokenization, zero checkpoint leg
     val served = TextQueries.ir11bPersistedPositions(spark, tmp)
@@ -98,8 +99,8 @@ class R17QueriesSpec extends SparkSpec {
     assert(rowsOf(TextQueries.ir13ProximityQuery(spark, tmp)) === ir13Before)
     assert(rowsOf(TextQueries.ir13bUnorderedNear(spark, tmp))
       .map(_._1).contains(40L))
-    // refold is a no-op (the marker short-circuits before any corpus read)
-    assert(TextQueries.compactBasePosIndex(spark, tmp) === folded)
+    // refold is a no-op (the max id is at the folded watermark)
+    assert(IndexMaintenance.foldAppends(spark, tmp, TextQueries.PositionsMaintenance) === folded)
   }
 
   test("bucket count is an artifact property: identical answers across two counts, modulus from stats") {
@@ -203,7 +204,7 @@ class R17QueriesSpec extends SparkSpec {
     val before = rowsOf()
     assert(before.map(_._1) ===
       Seq("ivf", "kg", "lsh", "phash", "positions", "postings"))
-    TextQueries.compactBasePosIndex(spark, tmp)
+    IndexMaintenance.foldAppends(spark, tmp, TextQueries.PositionsMaintenance)
     assert(rowsOf() === before,
       "the census must not move when a fold generation publishes — " +
         "it audits the base lineage, corpus-replayable by design")

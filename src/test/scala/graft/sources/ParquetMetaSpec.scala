@@ -124,7 +124,6 @@ class ParquetMetaSpec extends SparkSpec {
       assert(jobsStartedBy {
         PersistedIndex.statsRow(spark, home)
         PersistedIndex.readSplit(spark, home)
-        PersistedIndex.readSplitInfo(spark, home)
         PersistedIndex.recordedBuckets(spark, home, 16L)
       } === 0, s"${f.name}: stats reads ran a job")
       var n = -1L
